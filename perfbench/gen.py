@@ -1,4 +1,4 @@
-"""Seeded input generators for the four benchmark workloads.
+"""Seeded input generators for the benchmark workloads.
 
 Everything here is plain Python + pyarrow on top of the repository's own
 encoders (``sources.pbf_encoder``, ``sources.osmxml.encode_osc``,
@@ -21,6 +21,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 T0 = datetime(2012, 1, 1, tzinfo=timezone.utc)
+T_END = datetime(2024, 1, 1, tzinfo=timezone.utc)  # every generated edit is before this
 LON0, LAT0, SPAN = 8.0, 49.0, 1.0  # generated extent: [8, 9] x [49, 50]
 
 POI_VALUES = ("cafe", "restaurant", "pharmacy", "school", "bench", "toilets")
@@ -68,20 +69,22 @@ class _Clock:
         return self.cs
 
     def versions(self, start: datetime, n: int) -> list[datetime]:
+        """``n`` increasing edit times from ``start``; gaps shrink with
+        ``n`` so a long history still ends before ``T_END``."""
+        max_gap = max(1, min(90, (T_END - start).days // n - 1))
         out, t = [], start
         for _ in range(n):
             out.append(t)
-            t = t + timedelta(days=self.rng.randint(1, 90), seconds=self.rng.randint(0, 86399))
+            t = t + timedelta(days=self.rng.randint(0, max_gap - 1),
+                              seconds=self.rng.randint(1, 86399))
         return out
 
 
-def osm_history(seed: int, n_poi: int, n_ways: int, n_rels: int,
-                n_big_rels: int, big_members: int, total_versions: int) -> dict:
+def osm_history(seed: int, n_poi: int, n_ways: int, n_rels: int, total_versions: int) -> dict:
     """Full-history extract: tagged POI nodes, tagged ways over untagged
-    vertex nodes, multipolygon relations over untagged closed member ways
-    (``n_big_rels`` of them with ``big_members`` members, just under the
-    500-member multipolygon limit). Versions per element are heavy-tailed
-    and sum to ``total_versions`` exactly across all elements.
+    vertex nodes, multipolygon relations over 1-4 untagged closed member
+    ways. Versions per element are heavy-tailed and sum to
+    ``total_versions`` exactly across all elements.
 
     Returns the entity row lists (``write_history_pbf`` format) plus the
     ground truth the output checks compare against."""
@@ -140,13 +143,12 @@ def osm_history(seed: int, n_poi: int, n_ways: int, n_rels: int,
     # for every seed
     frozen: set[int] = set()
     for r in range(n_rels):
-        k = big_members if r < n_big_rels else rng.randint(1, 4)
+        k = rng.randint(1, 4)
         cx, cy = LON0 + 0.05 + rng.random() * 0.8, LAT0 + 0.05 + rng.random() * 0.8
         first = T0 + timedelta(days=rng.randint(0, 1500))
         members = []
         for m in range(k):
-            ox, oy = (m % 25) * 0.003, (m // 25) * 0.003
-            refs = ring(cx + ox, cy + oy, 0.001, 4, first)
+            refs = ring(cx + m * 0.003, cy, 0.001, 4, first)
             wid = nid()
             way_specs.append((wid, refs, None, first))
             members.append(wid)
@@ -281,9 +283,12 @@ def write_countries(path: str) -> list[tuple[str, tuple]]:
     return boxes
 
 
-def write_history_extract(workdir: str, seed: int, sizes: dict) -> dict:
-    """``.osh.pbf`` + changesets parquet + country CSV; returns paths and
-    the ground truth."""
+def write_history_extract(workdir: str, seed: int, sizes: dict, n_seqs: int,
+                          changes_per_seq: int) -> dict:
+    """``.osh.pbf`` + changesets parquet + country CSV, and a ``file://``
+    replication mirror whose first state is the extract's end followed
+    by ``n_seqs`` minutely ``.osc.gz`` diffs; returns paths and the
+    ground truth."""
     from ohsome_planet_spark.sources.pbf_encoder import write_history_pbf
 
     os.makedirs(workdir, exist_ok=True)
@@ -294,12 +299,16 @@ def write_history_extract(workdir: str, seed: int, sizes: dict) -> dict:
     write_changesets(cs, seed, h["truth"]["max_changeset"])
     countries = os.path.join(workdir, "countries.csv")
     write_countries(countries)
-    return {"pbf": pbf, "changesets": cs, "countries": countries,
-            "truth": h["truth"], "history": h}
+    mirror = os.path.join(workdir, "mirror")
+    seqs = write_mirror(mirror, seed, h, n_seqs, changes_per_seq)
+    data = os.path.join(workdir, "replication")
+    write_store(data, h)
+    return {"pbf": pbf, "changesets": cs, "countries": countries, "mirror": mirror,
+            "seqs": seqs, "data": data, "truth": h["truth"]}
 
 
 # ---------------------------------------------------------------------------
-# replication: seeded store + file:// mirror of .osc.gz diffs
+# replication: history store + file:// mirror of .osc.gz diffs
 # ---------------------------------------------------------------------------
 
 _HIST_FIELDS = [
@@ -313,7 +322,6 @@ _HIST_FIELDS = [
 def _history_table(rows: list[dict], osm_type: str) -> pa.Table:
     extra = ([("lon", pa.float64()), ("lat", pa.float64())] if osm_type == "node"
              else [("refs", pa.list_(pa.int64()))])
-    schema = pa.schema(_HIST_FIELDS + extra)
     cols = {
         "osm_type": [osm_type] * len(rows),
         "osm_id": [r["osm_id"] for r in rows],
@@ -330,7 +338,24 @@ def _history_table(rows: list[dict], osm_type: str) -> pa.Table:
         cols["lat"] = [r["lat"] for r in rows]
     else:
         cols["refs"] = [r["refs"] for r in rows]
-    return pa.table(cols, schema=schema)
+    return pa.table(cols, schema=pa.schema(_HIST_FIELDS + extra))
+
+
+def write_store(data: str, h: dict) -> None:
+    """The replication history store (``<data>/nodes``, ``<data>/ways``)
+    holding every node and way version of the extract, and its
+    ``state.txt`` at sequence 0 — what the import's replication init
+    (``cli contributions --data --replication-endpoint``) writes."""
+    for sub, rows, typ in (("nodes", h["nodes"], "node"), ("ways", h["ways"], "way")):
+        os.makedirs(os.path.join(data, sub), exist_ok=True)
+        pq.write_table(_history_table(rows, typ), os.path.join(data, sub, "part-00000-seed.parquet"))
+    with open(os.path.join(data, "state.txt"), "w") as f:
+        f.write(_state_text(0, _extract_end(h)))
+
+
+def _extract_end(h: dict) -> datetime:
+    last_ts = max(e["ts_ms"] for e in h["nodes"] + h["ways"] + h["relations"])
+    return datetime.fromtimestamp(last_ts // 1000, timezone.utc)
 
 
 def _state_text(seq: int, ts: datetime) -> str:
@@ -343,47 +368,33 @@ def sequence_rel(seq: int) -> str:
     return f"{s[0:3]}/{s[3:6]}/{s[6:9]}"
 
 
-def write_replication_inputs(workdir: str, seed: int, sizes: dict,
-                             n_seqs: int, changes_per_seq: int,
-                             start_seq: int = 5000) -> dict:
-    """Seed ``<data>/nodes`` + ``<data>/ways`` history tables and
-    ``state.txt`` from a generated extract (what the bulk run's
-    replication init writes), and a mirror holding ``n_seqs`` minutely
-    ``.osc.gz`` diffs after it. The mirror's top-level ``state.txt`` is
-    published by :func:`publish_state`, one sequence at a time or as a
-    backlog. Returns paths + per-sequence ground truth."""
+def write_mirror(mirror: str, seed: int, h: dict, n_seqs: int, changes_per_seq: int) -> list[dict]:
+    """A replication server directory laid out like the public one from
+    sequence 0: state 0 at the extract's last edit and ``n_seqs``
+    minutely diffs after it that evolve the extract's latest versions.
+    The top-level ``state.txt`` names sequence 0; later sequences are
+    published by :func:`publish_state`. Returns per-sequence ground
+    truth."""
     from ohsome_planet_spark.sources.osmxml import encode_osc
 
     rng = random.Random(seed ^ 0xD1FF)
-    h = osm_history(seed, **sizes)
-    data = os.path.join(workdir, "data")
-    for sub, rows, typ in (("nodes", h["nodes"], "node"), ("ways", h["ways"], "way")):
-        os.makedirs(os.path.join(data, sub), exist_ok=True)
-        pq.write_table(_history_table(rows, typ),
-                       os.path.join(data, sub, "part-00000-seed.parquet"))
-    last_ts = max(e["ts_ms"] for e in h["nodes"] + h["ways"])
-    t_start = datetime.fromtimestamp(last_ts / 1000, timezone.utc).replace(microsecond=0)
-    t_start += timedelta(minutes=1)
-    with open(os.path.join(data, "state.txt"), "w") as f:
-        f.write(_state_text(start_seq, t_start))
+    t_start = _extract_end(h)
+    base = os.path.join(mirror, sequence_rel(0))
+    os.makedirs(os.path.dirname(base), exist_ok=True)
+    with open(base + ".state.txt", "w") as f:
+        f.write(_state_text(0, t_start))
 
     # live element state the diffs evolve
-    cur_nodes = {}
-    for e in h["nodes"]:
-        cur_nodes[e["osm_id"]] = e
-    cur_ways = {}
-    for e in h["ways"]:
-        cur_ways[e["osm_id"]] = e
+    cur_nodes = {e["osm_id"]: e for e in h["nodes"]}
+    cur_ways = {e["osm_id"]: e for e in h["ways"]}
     poi_ids = sorted(i for i, e in cur_nodes.items() if e["tags"])
     vertex_ids = sorted(i for i, e in cur_nodes.items() if not e["tags"])
     way_ids = sorted(i for i, e in cur_ways.items() if e["tags"])
     next_id = max(list(cur_nodes) + list(cur_ways)) + 1000
     cs = 10_000_000
-
-    mirror = os.path.join(workdir, "mirror")
     seqs = []
     for k in range(1, n_seqs + 1):
-        seq = start_seq + k
+        seq = k
         ts = t_start + timedelta(minutes=k)
         changes, touched, tagged = [], {}, {}
         cs += 1
@@ -392,7 +403,7 @@ def write_replication_inputs(workdir: str, seed: int, sizes: dict,
         # way tag edits, new tagged POIs, a few POI deletions
         for _ in range(changes_per_seq):
             r = rng.random()
-            if r < 0.35 and poi_ids:
+            if r < 0.35:
                 i = rng.choice(poi_ids)
                 prev = cur_nodes[i]
                 if not prev["visible"]:
@@ -400,12 +411,12 @@ def write_replication_inputs(workdir: str, seed: int, sizes: dict,
                 tags = dict(prev["tags"])
                 tags["name"] = f"poi {i} seq{seq}"
                 e = dict(prev, version=prev["version"] + 1, tags=tags)
-            elif r < 0.6 and vertex_ids:
+            elif r < 0.6:
                 i = rng.choice(vertex_ids)
                 prev = cur_nodes[i]
                 e = dict(prev, version=prev["version"] + 1,
                          lon=round(prev["lon"] + 0.00002, 7))
-            elif r < 0.8 and way_ids:
+            elif r < 0.8:
                 i = rng.choice(way_ids)
                 prev = cur_ways[i]
                 tags = dict(prev["tags"])
@@ -441,16 +452,16 @@ def write_replication_inputs(workdir: str, seed: int, sizes: dict,
             else:
                 row["refs"] = e["refs"]
             changes.append(row)
-        d = os.path.join(mirror, os.path.dirname(sequence_rel(seq)))
-        os.makedirs(d, exist_ok=True)
         base = os.path.join(mirror, sequence_rel(seq))
+        os.makedirs(os.path.dirname(base), exist_ok=True)
         with open(base + ".osc.gz", "wb") as f:
             f.write(gzip.compress(encode_osc(changes), mtime=0))
         with open(base + ".state.txt", "w") as f:
             f.write(_state_text(seq, ts))
         seqs.append({"seq": seq, "ts": ts, "touched": touched, "tagged": tagged,
                      "changes": len(changes)})
-    return {"data": data, "mirror": mirror, "start_seq": start_seq, "seqs": seqs}
+    publish_state(mirror, {"seq": 0, "ts": t_start})
+    return seqs
 
 
 def publish_state(mirror: str, seq_info: dict) -> None:
@@ -513,14 +524,16 @@ def _html(text: str, seed_id: int) -> bytes:
     ).encode()
 
 
-def write_crawl_inputs(workdir: str, seed: int, n_archives: int, docs_per_archive: int,
-                       dup_groups: int, dup_copies: int, n_holdout: int,
-                       n_contaminated: int, boiler_frac: float) -> dict:
+def write_crawl_inputs(workdir: str, seed: int, sizes: dict) -> dict:
     """WARC archives of HTTP responses (plus request/metadata records),
     with planted exact-duplicate groups, boilerplate paragraphs shared
     across many documents, pages that fail the C4 line filter, and copies
     of held-out evaluation documents. Returns paths + ground truth."""
     from ohsome_planet_spark.sources.warc import encode_warc, http_response_wrap
+
+    n_archives, docs_per_archive = sizes["n_archives"], sizes["docs_per_archive"]
+    dup_groups, dup_copies = sizes["dup_groups"], sizes["dup_copies"]
+    n_holdout, n_contaminated = sizes["n_holdout"], sizes["n_contaminated"]
 
     if n_contaminated > n_holdout:
         raise ValueError("each contaminated page copies a distinct holdout document")
@@ -539,7 +552,7 @@ def write_crawl_inputs(workdir: str, seed: int, n_archives: int, docs_per_archiv
         raise ValueError("crawl sizes leave no unique documents")
     pages = []
     for _ in range(n_unique):
-        pages.append(("unique", _doc_text(rng, rng.randint(5, 12), rng.random() < boiler_frac)))
+        pages.append(("unique", _doc_text(rng, rng.randint(5, 12), rng.random() < sizes["boiler_frac"])))
     for g in range(dup_groups):
         pages += [("dup", dup_texts[g])] * dup_copies
     for c in range(n_contaminated):

@@ -2,9 +2,10 @@
 points of ``ohsome_planet_spark``, with output checks and per-layer
 tracing.
 
-    python3 perfbench/run.py --workload bulk_history --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload bulk_history --seed 1 --seconds 1 --trace 0
 
-Run from the repository root. The last line of standard output is one
+Run from the repository root. Each run measures one cold job, which
+takes longer than ``--seconds``. The last line of standard output is one
 JSON object ``{"correct", "attempted", "failed", "metrics"}``; with
 ``--trace 0`` the metrics are the end-to-end metrics of BENCHMARK.json,
 with ``--trace 1`` the per-layer ones (see perfbench/README.md).
@@ -81,8 +82,7 @@ def main(argv=None) -> int:
     work = os.path.join(root, ".bench_work", f"{args.workload}-{os.getpid()}")
     os.makedirs(work)
     _prepare_env(work)
-    bench = workloads.Bench(work=work, seed=args.seed, seconds=args.seconds,
-                            trace=bool(args.trace))
+    bench = workloads.Bench(work=work, seed=args.seed, trace=bool(args.trace))
 
     def on_term(*_):
         bench.kill_children()

@@ -32,7 +32,6 @@ class Tracer:
         self._lock = threading.Lock()
         self._patches: list[tuple[object, str, object]] = []
         self._persisted: list = []
-        self.counts: dict[str, int] = {}
         self._seq = 0
 
     # -- span recording ----------------------------------------------------
@@ -63,7 +62,7 @@ class Tracer:
 
     # -- wrappers ----------------------------------------------------------
 
-    def wrap(self, owner, attr: str, name: str, force: bool = False, count: str | None = None):
+    def wrap(self, owner, attr: str, name: str, force: bool = False):
         """Replace ``owner.attr`` (module function or class method) with a
         span-recording wrapper. ``force`` persists + materializes every
         DataFrame in the result inside the span."""
@@ -78,9 +77,6 @@ class Tracer:
             sc = spark.sparkContext if spark is not None else None
             prev = sc.getLocalProperty("spark.jobGroup.id") if sc is not None else None
             with tracer.span(name) as rec:
-                if count:
-                    with tracer._lock:
-                        tracer.counts[count] = tracer.counts.get(count, 0) + 1
                 if sc is not None:
                     sc.setLocalProperty("spark.jobGroup.id", f"span-{rec['id']}")
                 try:
@@ -129,13 +125,14 @@ class Tracer:
 
     # -- reduction ---------------------------------------------------------
 
-    def closed(self, since: float = 0.0) -> list[dict]:
-        return [s for s in self.spans if s["end"] is not None and s["start"] >= since]
+    def closed(self, since: float, until: float) -> list[dict]:
+        """Finished spans that started in [since, until]."""
+        return [s for s in self.spans if s["end"] is not None and since <= s["start"] <= until]
 
-    def self_times(self, since: float = 0.0) -> dict[str, float]:
+    def self_times(self, since: float, until: float) -> dict[str, float]:
         """Per span name: total self time (span duration minus the union
         of its direct children's intervals), seconds."""
-        spans = self.closed(since)
+        spans = self.closed(since, until)
         kids: dict[int, list[dict]] = {}
         for s in spans:
             if s["parent"] is not None:
@@ -147,21 +144,21 @@ class Tracer:
             out[s["name"]] = out.get(s["name"], 0.0) + (s["end"] - s["start"]) - covered
         return out
 
-    def total_times(self, since: float = 0.0) -> dict[str, float]:
+    def total_times(self, since: float, until: float) -> dict[str, float]:
         """Per span name: union of its spans' intervals (outermost calls
         only, so recursion or nested calls of one name don't double
         count), seconds."""
-        spans = self.closed(since)
+        spans = self.closed(since, until)
         by_name: dict[str, list] = {}
         for s in spans:
             by_name.setdefault(s["name"], []).append((s["start"], s["end"]))
         return {n: _union_len(iv, float("-inf"), float("inf")) for n, iv in by_name.items()}
 
-    def attribute_jobs(self, jobs: list[dict], since: float = 0.0) -> dict[int, str]:
+    def attribute_jobs(self, jobs: list[dict], since: float, until: float) -> dict[int, str]:
         """job id -> span name. Group-tagged jobs go to their span; the
         rest to the innermost (latest-starting) span covering their
         submission time."""
-        spans = self.closed(since)
+        spans = self.closed(since, until)
         by_id = {s["id"]: s for s in spans}
         out = {}
         for j in jobs:

@@ -1,23 +1,22 @@
 """The benchmark workloads and the harness they share.
 
-Each workload function takes a :class:`Bench`, builds its seeded inputs
-(timed as set-up), runs its operations through the program's public
-entry points for the requested number of seconds, checks every output
-against generator ground truth or DuckDB, and returns the result
-object ``run.py`` prints.
+Each workload function takes a :class:`Bench`, sets up its session and
+seeded inputs (timed as set-up), runs its job once through the program's
+public entry points, checks every output against generator ground truth
+or DuckDB, and returns the result object ``run.py`` prints.
 """
 
 from __future__ import annotations
 
+import datetime
 import glob
 import os
+import random
 import signal
 import statistics
 import subprocess
 import sys
-import threading
 import time
-import zipfile
 
 import duckdb
 
@@ -25,7 +24,7 @@ import gen
 import procstat
 import spans as tracing
 
-SETUP_REPEATS = 3  # input generation is repeated; set-up reports the median
+SETUP_REPEATS = 3  # set-up is repeated; setup_s reports the median
 
 # ---------------------------------------------------------------------------
 # metric names (BENCHMARK.json)
@@ -43,9 +42,10 @@ END_TO_END = {
 QUERY_TYPES = ("history_lookup", "bbox_count", "snapshot_agg", "daily_series", "filter_count")
 
 PER_LAYER = {
+    "session.start_s": "s",
     "pbf.scan_s": "s", "pbf.decode_s": "s", "pyworker.cpu_s": "s",
     "contributions.nodes_s": "s", "contributions.ways_s": "s",
-    "contributions.eager_jobs": "count",
+    "contributions.relations_s": "s", "contributions.eager_jobs": "count",
     "session.truncate_lineage_calls": "count", "session.truncate_lineage_s": "s",
     "spatial.countries_s": "s", "contributions.changesets_s": "s",
     "geoparquet.write_s": "s", "geoparquet.bytes": "B", "geoparquet.files": "count",
@@ -53,20 +53,15 @@ PER_LAYER = {
     "views.plan_ms": "ms", "views.exec_ms": "ms", "views.files_scanned_per_query": "count",
     "views.rows_scanned_per_result": "ratio",
     **{f"query.{q}_p50_ms": "ms" for q in QUERY_TYPES},
+    "replication.seq_s": "s", "server.fetch_s": "s", "osmxml.parse_s": "s",
+    "replication.advance_s": "s", "replication.rebuild_s": "s", "manager.write_s": "s",
+    "manager.history_append_s": "s", "replication.jobs_per_seq": "count",
     "warc.records_s": "s", "web.extract_s": "s", "curation.c4_s": "s",
     "dedup.exact_substr_s": "s", "curation.flag_s": "s", "curation.write_s": "s",
     "driver.py_cpu_s": "s", "jvm.cpu_s": "s", "jvm.gc_s": "s",
     "spark.jobs": "count", "spark.stages": "count", "spark.tasks": "count",
     "spark.failed_tasks": "count", "spark.shuffle_write_bytes": "B", "spark.spill_bytes": "B",
     "trace.op_wall_ms": "ms",
-}
-
-# reported only by the by-hand workloads that exercise them (README.md)
-RELATION_LAYER = {"contributions.relations_s": "s"}
-REPLICATION_LAYER = {
-    "server.fetch_s": "s", "osmxml.parse_s": "s", "replication.advance_s": "s",
-    "replication.rebuild_s": "s", "manager.write_s": "s",
-    "manager.history_append_s": "s", "replication.jobs_per_seq": "count",
 }
 
 
@@ -85,18 +80,45 @@ def dir_parquet_stats(path: str) -> tuple[int, int, int]:
     return nbytes, files, groups
 
 
+class _TmpRedirectPath:
+    def __init__(self, tmp: str):
+        self._tmp = tmp
+
+    def join(self, first, *rest):
+        return os.path.join(self._tmp if first == "/tmp" else first, *rest)
+
+    def __getattr__(self, name):
+        return getattr(os.path, name)
+
+
+class _TmpRedirectOs:
+    """Stands in for the ``os`` module inside ``session`` while the
+    session starts: paths joined onto ``/tmp`` land in the run's temp
+    directory instead, so the package zip that the program's own
+    ``ship_package`` builds stays inside the checkout. Everything else is
+    the real ``os``."""
+
+    def __init__(self, tmp: str):
+        self.path = _TmpRedirectPath(tmp)
+
+    def __getattr__(self, name):
+        return getattr(os, name)
+
+
 class Bench:
     """Per-run state: work directory, seed, the Spark session, process
     accounting and (traced runs) the tracer."""
 
-    def __init__(self, work: str, seed: int, seconds: float, trace: bool):
-        self.work, self.seed, self.seconds, self.trace = work, seed, seconds, trace
+    def __init__(self, work: str, seed: int, trace: bool):
+        self.work, self.seed, self.trace = work, seed, trace
         self.spark = None
+        self._stopped = []  # stopped sessions stay referenced: session keys shipping by id()
         self.tracer = tracing.Tracer() if trace else None
         self.eventlog_dir = os.path.join(work, "eventlog")
         self.rss = procstat.RssSampler()
         self.rss.__enter__()
-        self.setup_parts: dict[str, float] = {}
+        self.setup_s = 0.0
+        self.session_start_s = 0.0
         self.attempted = 0
         self.failed = 0
         self.errors: list[str] = []
@@ -104,32 +126,9 @@ class Bench:
 
     # -- set-up ------------------------------------------------------------
 
-    def start_session(self, app: str):
-        """Start the program's session (``session.get_spark``), timed as
-        set-up. The package zip shipped to workers is built inside the
-        work directory instead of the system temp directory."""
+    def _get_spark(self, app: str):
         from ohsome_planet_spark import session
 
-        work = self.work
-
-        def ship_package(spark):
-            sc = spark.sparkContext
-            if id(sc) in session._PACKAGE_SHIPPED:
-                return
-            pkg = os.path.dirname(os.path.abspath(session.__file__))
-            zpath = os.path.join(work, "ohsome_planet_spark.zip")
-            if not os.path.exists(zpath):
-                with zipfile.ZipFile(zpath, "w") as zf:
-                    for d, _dirs, files in os.walk(pkg):
-                        for fn in files:
-                            if fn.endswith(".py"):
-                                full = os.path.join(d, fn)
-                                zf.write(full, os.path.join(
-                                    "ohsome_planet_spark", os.path.relpath(full, pkg)))
-            sc.addPyFile(zpath)
-            session._PACKAGE_SHIPPED.add(id(sc))
-
-        session.ship_package = ship_package
         tmp = os.environ["TMPDIR"]
         conf = {
             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
@@ -138,29 +137,34 @@ class Bench:
         }
         if self.trace:
             conf.update(tracing.eventlog_conf(self.eventlog_dir))
-        t = time.perf_counter()
-        self.spark = session.get_spark(app_name=app, extra_conf=conf)
-        self.setup_parts["session"] = time.perf_counter() - t
-        return self.spark
+        session.os = _TmpRedirectOs(tmp)
+        try:
+            return session.get_spark(app_name=app, extra_conf=conf)
+        finally:
+            session.os = os
 
-    def generate(self, name: str, fn, *args, **kwargs):
-        """Run the seeded generator ``SETUP_REPEATS`` times into fresh
-        directories; the median time counts as set-up. Returns the last
-        output."""
-        times, out = [], None
+    def setup(self, app: str, generate, *args):
+        """Start the program's session (``session.get_spark``) and write
+        the seeded inputs into a fresh directory, ``SETUP_REPEATS`` times.
+        The first start launches the JVM (per-layer ``session.start_s``);
+        each later one stops the context and starts a new one in that JVM,
+        so the job still meets a fresh context and fresh Python workers.
+        ``setup_s`` is the median of the repetitions. Returns the last
+        inputs; ``self.spark`` is the live session."""
+        times = []
+        inp = None
         for i in range(SETUP_REPEATS):
-            d = os.path.join(self.work, f"{name}-{i}")
             t = time.perf_counter()
-            out = fn(d, *args, **kwargs)
+            if self.spark is not None:
+                self._stopped.append(self.spark)
+                self.spark.stop()
+            self.spark = self._get_spark(app)
+            if i == 0:
+                self.session_start_s = time.perf_counter() - t
+            inp = generate(os.path.join(self.work, f"input-{i}"), *args)
             times.append(time.perf_counter() - t)
-        self.setup_parts[name] = statistics.median(times)
-        return out
-
-    def timed_setup(self, name: str, fn, *args, **kwargs):
-        t = time.perf_counter()
-        out = fn(*args, **kwargs)
-        self.setup_parts[name] = time.perf_counter() - t
-        return out
+        self.setup_s = statistics.median(times)
+        return inp
 
     # -- measurement -------------------------------------------------------
 
@@ -199,12 +203,9 @@ class Bench:
         if not ok:
             self.failed += 1
 
-    def deadline_passed(self, start: float) -> bool:
-        return time.perf_counter() - start >= self.seconds
-
     # -- result ------------------------------------------------------------
 
-    def result(self, e2e: dict, layers: dict, extra_layers: dict | None = None) -> dict:
+    def result(self, e2e: dict, layers: dict) -> dict:
         self.rss.sample()
         if self.errors:
             for e in self.errors[:20]:
@@ -212,25 +213,25 @@ class Bench:
         correct = self.failed == 0 and not self.errors and self.attempted > 0
         if not self.trace:
             vals = dict(e2e)
-            vals["setup_s"] = sum(self.setup_parts.values())
+            vals["setup_s"] = self.setup_s
             vals["peak_rss_mb"] = self.rss.peak / 2**20
             vals["ok_ops_frac"] = (self.attempted - self.failed) / max(1, self.attempted)
-            metrics = {k: {"value": float(vals[k]), "unit": u} for k, u in END_TO_END.items()}
+            units = END_TO_END
         else:
-            units = dict(PER_LAYER, **(extra_layers or {}))
-            vals = {k: 0.0 for k in units}
+            vals = {k: 0.0 for k in PER_LAYER}
             vals.update(layers)
-            metrics = {k: {"value": float(vals[k]), "unit": u} for k, u in units.items()}
+            vals["session.start_s"] = self.session_start_s
+            units = PER_LAYER
+        metrics = {k: {"value": float(vals[k]), "unit": u} for k, u in units.items()}
         return {"correct": bool(correct), "attempted": int(max(1, self.attempted)),
                 "failed": int(self.failed if self.attempted else 1), "metrics": metrics}
 
     def spark_layers(self, window: dict) -> tuple[dict, dict]:
         """Stop the session (flushes the event log) and reduce it over the
-        measurement window: returns (per-layer job metrics, raw log)."""
+        job's window: returns (per-layer job metrics, raw log)."""
         self.stop_spark()
         log = tracing.read_eventlog(self.eventlog_dir)
-        t0, t1 = window["t0"], window["t1"]
-        jobs = [j for j in log["jobs"] if t0 <= j["submit"] <= t1]
+        jobs = jobs_between(log, window["t0"], window["t1"])
         job_ids = {j["id"] for j in jobs}
         stages = {s for s, jid in log["stage_job"].items() if jid in job_ids}
         tasks = [t for t in log["tasks"] if t["stage"] in stages]
@@ -243,7 +244,6 @@ class Bench:
             "spark.shuffle_write_bytes": sum(t["shuffle_write"] for t in tasks),
             "spark.spill_bytes": sum(t["spill"] for t in tasks),
         })
-        log["window_jobs"] = jobs
         return out, log
 
     # -- teardown ----------------------------------------------------------
@@ -298,6 +298,10 @@ class Bench:
                 pass
 
 
+def jobs_between(log: dict, t0: float, t1: float) -> list[dict]:
+    return [j for j in log["jobs"] if t0 <= j["submit"] <= t1]
+
+
 def _reap(pids: list[int], timeout: float = 30.0) -> None:
     """Wait for the given processes to end; kill those that outlive
     ``timeout``."""
@@ -327,128 +331,15 @@ def _alive(pid: int) -> bool:
         return False
 
 
-# ---------------------------------------------------------------------------
-# tracing plans: which public functions each layer metric is taken from
-# ---------------------------------------------------------------------------
-
-def install_osm_tracing(tr: tracing.Tracer) -> None:
-    from ohsome_planet_spark import session
-    from ohsome_planet_spark.operators import contributions
-    from ohsome_planet_spark.sources import geoparquet, osmxml, pbf
-    from ohsome_planet_spark.streaming import manager, replication, server
-
-    tr.wrap(pbf, "scan_blobs", "pbf.scan")
-    tr.wrap(pbf, "read_pbf", "pbf.read", force=True)
-    tr.wrap(contributions, "node_contribution_events", "contributions.nodes", force=True)
-    tr.wrap(contributions, "way_contribution_events", "contributions.ways", force=True)
-    tr.wrap(contributions, "relation_contribution_events", "contributions.relations", force=True)
-    tr.wrap(contributions, "synthesize_contributions", "contributions.synthesize", force=True)
-    tr.wrap(contributions, "with_changesets", "contributions.changesets", force=True)
-    tr.wrap(session, "truncate_lineage", "session.truncate_lineage",
-            count="session.truncate_lineage_calls")
-    tr.wrap(session, "truncate_lineage_many", "session.truncate_lineage")
-    tr.wrap(geoparquet, "write_contributions", "geoparquet.write")
-    tr.wrap(server.Server, "get_replication_file", "server.fetch")
-    tr.wrap(server.Server, "get_remote_state", "server.fetch")
-    tr.wrap(server.Server, "get_latest_remote_state", "server.fetch")
-    tr.wrap(osmxml, "parse_osc_bytes", "osmxml.parse")
-    tr.wrap(replication.IncrementalUpdater, "advance_batch", "replication.advance")
-    tr.wrap(replication.IncrementalUpdater, "build_rebuilds", "replication.rebuild", force=True)
-    tr.wrap(manager.ContributionReplicationManager, "_process", "manager.sequence")
-
-
-def install_crawl_tracing(tr: tracing.Tracer) -> None:
-    from ohsome_planet_spark import session
-    from ohsome_planet_spark.operators import curation, dedup, web
-
-    tr.wrap(web, "warc_records", "warc.records", force=True)
-    tr.wrap(web, "extract_main_text", "web.extract", force=True)
-    tr.wrap(curation, "c4_line_filter", "curation.c4", force=True)
-    tr.wrap(dedup, "exact_substr_rewrite", "dedup.exact_substr", force=True)
-    tr.wrap(curation, "flag_documents", "curation.flag", force=True)
-    tr.wrap(curation, "curate", "curation.curate")
-    tr.wrap(session, "truncate_lineage", "session.truncate_lineage",
-            count="session.truncate_lineage_calls")
-
-
-def _force_write_input(tr: tracing.Tracer):
-    """Traced bulk runs: the countries UDF is applied inline by the CLI
-    right before ``write_contributions``; forcing the writer's input in
-    its own span charges that UDF to ``spatial.countries``."""
-    from ohsome_planet_spark.sources import geoparquet
-
-    inner = geoparquet.write_contributions
-
-    def write_contributions(contribs, path, *a, **kw):
-        with tr.span("spatial.countries"):
-            contribs = tr.force(contribs)
-        return inner(contribs, path, *a, **kw)
-
-    tr.patch(geoparquet, "write_contributions", write_contributions)
-
-
-def osm_layer_metrics(bench: Bench, window: dict, n_seq: int = 0) -> dict:
-    tr = bench.tracer
-    since = window["t0"]
-    st = tr.self_times(since)
-    tot = tr.total_times(since)
-
-    def s(name):  # span + its forced materialization
-        return st.get(name, 0.0) + st.get(name + "#force", 0.0)
-
-    jobs_layers, log = bench.spark_layers(window)
-    owner = tr.attribute_jobs(log["window_jobs"], since)
-    build_spans = {"contributions.nodes", "contributions.ways", "contributions.relations",
-                   "contributions.synthesize"}
-    out = dict(jobs_layers)
-    out.update({
-        "pbf.scan_s": s("pbf.scan"),
-        "pbf.decode_s": s("pbf.read"),
-        "contributions.nodes_s": s("contributions.nodes") + tr_stream(tr, since, "node"),
-        "contributions.ways_s": s("contributions.ways") + tr_stream(tr, since, "way"),
-        "contributions.relations_s": s("contributions.relations") + tr_stream(tr, since, "relation"),
-        "contributions.eager_jobs": sum(1 for n in owner.values() if n in build_spans),
-        "session.truncate_lineage_calls": tr.counts.get("session.truncate_lineage_calls", 0),
-        "session.truncate_lineage_s": tot.get("session.truncate_lineage", 0.0),
-        "spatial.countries_s": s("spatial.countries"),
-        "contributions.changesets_s": s("contributions.changesets"),
-        "geoparquet.write_s": s("geoparquet.write"),
-        "server.fetch_s": tot.get("server.fetch", 0.0),
-        "osmxml.parse_s": tot.get("osmxml.parse", 0.0),
-        "replication.advance_s": s("replication.advance"),
-        "replication.rebuild_s": s("replication.rebuild"),
-        "manager.history_append_s": st.get("manager.sequence", 0.0),
-    })
-    out["_log"] = log
-    if n_seq:
-        out["manager.write_s"] = out.pop("geoparquet.write_s")
-        out["replication.jobs_per_seq"] = sum(
-            1 for n in owner.values()) / n_seq
-    return out
-
-
-def tr_stream(tr: tracing.Tracer, since: float, osm_type: str) -> float:
-    """Synthesis time of one entity stream: the CLI synthesizes each
-    stream right after building its events, so a synthesize span belongs
-    to the events span that precedes it."""
-    spans = [s for s in tr.closed(since) if s["name"] in (
-        "contributions.nodes", "contributions.ways", "contributions.relations",
-        "contributions.synthesize")]
-    spans.sort(key=lambda s: s["start"])
-    cur, total = None, 0.0
-    for s in spans:
-        if s["name"] != "contributions.synthesize":
-            cur = s["name"].split(".")[1].rstrip("s")
-        elif cur == osm_type:
-            total += s["end"] - s["start"]
-    return total
+def _forced_self(st: dict, name: str) -> float:
+    """Self time of a span plus its forced materialization."""
+    return st.get(name, 0.0) + st.get(name + "#force", 0.0)
 
 
 # ---------------------------------------------------------------------------
-# query serving over a written contributions dataset
+# query serving over the written contributions dataset (traced runs)
 # ---------------------------------------------------------------------------
 
-QUERIES_PER_TYPE = 8
 FILTERS = (  # (ohsome filter, DuckDB twin over the same parquet)
     ("amenity={v} and type:node", "tags['amenity'][1] = '{v}' AND osm_type = 'node'"),
     ("building=* and geometry:polygon",
@@ -459,22 +350,22 @@ FILTERS = (  # (ohsome filter, DuckDB twin over the same parquet)
 )
 
 
-def query_instances(seed: int, truth: dict, per_type: int) -> list[dict]:
-    """Seeded query mix over the contributions views: each instance has a
-    type, Spark SQL (or an ohsome filter) and the DuckDB twin."""
-    import random
+def _day(offset: int) -> str:
+    return datetime.date.fromordinal(gen.T0.date().toordinal() + offset).isoformat()
 
+
+def query_instances(seed: int, truth: dict) -> list[dict]:
+    """One seeded query of each serving type over the contributions
+    views: its type, Spark SQL (or an ohsome filter) and the DuckDB twin."""
     rng = random.Random(seed ^ 0x0E5)
-    ids = [(t, i) for t, d in truth["latest_version"].items() for i in d]
-    ids.sort()
+    ids = sorted((t, i) for t, d in truth["latest_version"].items() for i in d)
     out = []
-    for k in range(per_type * len(QUERY_TYPES)):
-        typ = QUERY_TYPES[k % len(QUERY_TYPES)]
+    for typ in QUERY_TYPES:
         if typ == "history_lookup":
             t, i = rng.choice(ids)
-            where = f"osm_type = '{t}' AND osm_id = {i}"
             spark = (f"SELECT osm_version, osm_minor_version, contrib_type FROM contributions "
-                     f"WHERE {where} ORDER BY valid_from, osm_version, osm_minor_version")
+                     f"WHERE osm_type = '{t}' AND osm_id = {i} "
+                     f"ORDER BY valid_from, osm_version, osm_minor_version")
             duck = spark.replace("FROM contributions", "FROM {C}")
         elif typ == "bbox_count":
             w = rng.uniform(0.05, 0.4)
@@ -485,8 +376,7 @@ def query_instances(seed: int, truth: dict, per_type: int) -> list[dict]:
                      f"GROUP BY osm_type ORDER BY osm_type")
             duck = spark.replace("FROM contributions_latest", "FROM {L}")
         elif typ == "snapshot_agg":
-            day = gen.T0.date().toordinal() + rng.randint(200, 3000)
-            d = __import__("datetime").date.fromordinal(day).isoformat()
+            d = _day(rng.randint(200, 3000))
             cond = (f"valid_from <= TIMESTAMP '{d} 00:00:00' AND valid_to > TIMESTAMP '{d} 00:00:00' "
                     f"AND contrib_type <> 'DELETION'")
             spark = (f"SELECT osm_type, count(*) AS n, sum(length) AS len FROM contributions "
@@ -495,9 +385,8 @@ def query_instances(seed: int, truth: dict, per_type: int) -> list[dict]:
                 "TIMESTAMP '", "TIMESTAMPTZ '").replace(" 00:00:00'", " 00:00:00+00'")
         elif typ == "daily_series":
             key = rng.choice(("amenity", "building", "highway", "name"))
-            day = gen.T0.date().toordinal() + rng.randint(0, 2500)
-            d0 = __import__("datetime").date.fromordinal(day).isoformat()
-            d1 = __import__("datetime").date.fromordinal(day + 120).isoformat()
+            off = rng.randint(0, 2500)
+            d0, d1 = _day(off), _day(off + 120)
             spark = (f"SELECT CAST(to_date(valid_from) AS STRING) AS d, count(*) AS n "
                      f"FROM contributions WHERE tags['{key}'] IS NOT NULL "
                      f"AND valid_from >= TIMESTAMP '{d0} 00:00:00' "
@@ -548,95 +437,221 @@ def run_query(spark, inst: dict):
     if inst["type"] == "filter_count":
         from ohsome_planet_spark.functions.ohsome_filter import compile_filter
 
-        df = (spark.table("contributions_latest").filter(compile_filter(inst["spark"]))
-              .groupBy("osm_type").count().orderBy("osm_type"))
-    else:
-        df = spark.sql(inst["spark"])
-    return df
+        return (spark.table("contributions_latest").filter(compile_filter(inst["spark"]))
+                .groupBy("osm_type").count().orderBy("osm_type"))
+    return spark.sql(inst["spark"])
 
 
-def query_phase(bench: Bench, spark, dataset: str, truth: dict, clients: int,
-                per_type: int = QUERIES_PER_TYPE, seconds: float | None = None) -> list[dict]:
-    """Closed loop of ``clients`` threads on one session over the seeded
-    query mix: every instance once (``seconds`` None) or round-robin until
-    ``seconds`` have passed. Each result is compared with DuckDB running
-    the same query over the same files."""
+def query_phase(bench: Bench, dataset: str, truth: dict) -> list[dict]:
+    """Each query type once, one client, over the views the program
+    registers on the dataset the import wrote; each result is compared
+    with DuckDB running the same query over the same files."""
     from ohsome_planet_spark.sources.views import register_contribution_views
 
-    instances = query_instances(bench.seed, truth, per_type)
+    spark = bench.spark
+    instances = query_instances(bench.seed, truth)
     expected = duck_answers(dataset, instances)
     register_contribution_views(spark, dataset)
-    lock = threading.Lock()
-    nxt = [0]
-    done: list[dict] = []
     sc = spark.sparkContext
-    start = time.perf_counter()
-
-    def take() -> int | None:
-        with lock:
-            k = nxt[0]
-            nxt[0] += 1
-        if seconds is None:
-            return k if k < len(instances) else None
-        return None if bench.deadline_passed(start) else k % len(instances)
-
-    def client() -> None:
-        while (k := take()) is not None:
-            group = f"query-{k}-{nxt[0]}"
-            sc.setLocalProperty("spark.jobGroup.id", group)
-            t = time.perf_counter()
-            df = run_query(spark, instances[k])
-            if bench.trace:  # plan eagerly so planning and execution split
-                df._jdf.queryExecution().executedPlan()
-            t_plan = time.perf_counter()
-            rows = [tuple(r) for r in df.collect()]
-            t_end = time.perf_counter()
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            with lock:
-                done.append({"k": k, "type": instances[k]["type"], "lat": t_end - t,
-                             "plan": t_plan - t, "exec": t_end - t_plan, "group": group,
-                             "rows": rows})
-
-    threads = [threading.Thread(target=client, name=f"query-client-{c}")
-               for c in range(clients)]
-    for th in threads:
-        th.start()
-    for th in threads:
-        th.join()
-    for d in done:
-        bench.op_result(bench.check(same_rows(d["rows"], expected[d["k"]]),
-                                    f"query {d['type']} #{d['k']} differs from DuckDB"))
+    done = []
+    for k, inst in enumerate(instances):
+        group = f"query-{k}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        t = time.perf_counter()
+        df = run_query(spark, inst)
+        df._jdf.queryExecution().executedPlan()  # plan eagerly so planning and execution split
+        t_plan = time.perf_counter()
+        rows = [tuple(r) for r in df.collect()]
+        t_end = time.perf_counter()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        done.append({"type": inst["type"], "lat": t_end - t, "plan": t_plan - t,
+                     "exec": t_end - t_plan, "group": group, "rows": rows})
+        bench.op_result(bench.check(same_rows(rows, expected[k]),
+                                    f"query {inst['type']} differs from DuckDB"))
     return done
 
 
-def query_layer_metrics(done: list[dict], log: dict | None) -> dict:
-    out = {}
-    for typ in QUERY_TYPES:
-        lat = [d["lat"] for d in done if d["type"] == typ]
-        out[f"query.{typ}_p50_ms"] = statistics.median(lat) * 1000 if lat else 0.0
+def query_layer_metrics(done: list[dict], log: dict) -> dict:
+    out = {f"query.{d['type']}_p50_ms": d["lat"] * 1000 for d in done}
     out["views.plan_ms"] = statistics.median(d["plan"] for d in done) * 1000
     out["views.exec_ms"] = statistics.median(d["exec"] for d in done) * 1000
-    if log is not None:
-        files = rows = 0.0
-        groups = {d["group"] for d in done}
-        for ex, group in log["exec_group"].items():
-            if group in groups:
-                files += log["scans"].get(ex, {}).get("files", 0.0)
-                rows += log["scans"].get(ex, {}).get("rows", 0.0)
-        results = sum(max(1, len(d["rows"])) for d in done)
-        out["views.files_scanned_per_query"] = files / len(done)
-        out["views.rows_scanned_per_result"] = rows / results
+    files = rows = 0.0
+    groups = {d["group"] for d in done}
+    for ex, group in log["exec_group"].items():
+        if group in groups:
+            files += log["scans"].get(ex, {}).get("files", 0.0)
+            rows += log["scans"].get(ex, {}).get("rows", 0.0)
+    results = sum(max(1, len(d["rows"])) for d in done)
+    out["views.files_scanned_per_query"] = files / len(done)
+    out["views.rows_scanned_per_result"] = rows / results
     return out
+
+
+# ---------------------------------------------------------------------------
+# replication over a seeded history store (traced runs)
+# ---------------------------------------------------------------------------
+
+def check_replication(bench: Bench, inp: dict, out_dir: str) -> bool:
+    """Each applied sequence's contributions carry the diff's version of
+    every touched tagged element, and the history store ends at the last
+    diff version of every touched id."""
+    q = duckdb.connect()
+    final: dict[tuple[str, int], int] = {}
+    ok = True
+    for info in inp["seqs"]:
+        final.update(info["touched"])
+        path = os.path.join(out_dir, gen.sequence_rel(info["seq"]) + ".opc.parquet")
+        got = set(q.execute(
+            f"SELECT osm_type, osm_id, osm_version FROM read_parquet('{path}/*.parquet')"
+        ).fetchall())
+        for (t, i), v in info["touched"].items():
+            if info["tagged"][(t, i)]:
+                ok &= bench.check((t, i, v) in got, f"seq {info['seq']}: {t}/{i} v{v} missing")
+    for sub, typ in (("nodes", "node"), ("ways", "way")):
+        store = dict(q.execute(
+            f"SELECT osm_id, max(version) FROM read_parquet('{inp['data']}/{sub}/*.parquet') "
+            "GROUP BY osm_id").fetchall())
+        bad = [(i, v) for (t, i), v in final.items() if t == typ and store.get(i) != v]
+        ok &= bench.check(not bad, f"{sub} store misses {len(bad)} diff versions, e.g. {bad[:3]}")
+    q.close()
+    return ok
+
+
+def replication_phase(bench: Bench, inp: dict) -> list[float]:
+    """The live minutely case over the seeded store: each diff is
+    published on the mirror and applied in its own
+    ``ContributionReplicationManager`` pass (closed loop, one caller).
+    Returns the per-sequence latencies."""
+    from ohsome_planet_spark.streaming.manager import ContributionReplicationManager
+    from ohsome_planet_spark.streaming.server import entity_server, file_fetch
+
+    out_dir = os.path.join(bench.work, "updates")
+    mgr = ContributionReplicationManager(
+        server=entity_server("local://mirror/", fetch=file_fetch(inp["mirror"])),
+        spark=bench.spark, data_dir=inp["data"], out_dir=out_dir)
+    lats = []
+    ok = True
+    for info in inp["seqs"]:
+        gen.publish_state(inp["mirror"], info)
+        t = time.perf_counter()
+        n = mgr.update_to_remote_state()
+        lats.append(time.perf_counter() - t)
+        ok &= bench.check(n == 1, f"seq {info['seq']}: manager applied {n} sequences")
+        bench.tracer.release()
+    bench.op_result(check_replication(bench, inp, out_dir) and ok)
+    return lats
 
 
 # ---------------------------------------------------------------------------
 # bulk_history
 # ---------------------------------------------------------------------------
 
-BULK_SIZES = dict(n_poi=400, n_ways=160, n_rels=0, n_big_rels=0, big_members=0,
-                  total_versions=4000)
-# by hand: the relation stage costs ~20 s more per cold import on 4 cores
-BULK_REL_SIZES = dict(BULK_SIZES, n_rels=4, n_big_rels=1, big_members=40)
+# Element mix: SCALE.md puts the full-history planet at ~9.5B node, ~1B
+# way and ~10M relation versions, i.e. ~90% / ~9.5% / ~0.1%; 400 POIs and
+# 80 ways over ~360 untagged vertices (plus relation member ways) give
+# ways ~8-10% of the versions, 2 relations x 3 versions are 0.15%.
+# Versions per element follow a Pareto(1.1) tail capped at 300
+# (gen.heavy_tailed_counts). Per-Spark-job cost dominates the import: a
+# 16,000-version extract took about as long (perfbench/README.md), so
+# this extract measures the same costs in a shorter run.
+BULK_SIZES = dict(n_poi=400, n_ways=80, n_rels=2, total_versions=4000)
+# one live minutely sequence keeps a traced run under three minutes on a
+# slow machine
+REPL_SEQS, REPL_CHANGES = 1, 120
+
+
+def install_import_tracing(tr: tracing.Tracer) -> None:
+    from ohsome_planet_spark import session
+    from ohsome_planet_spark.operators import contributions
+    from ohsome_planet_spark.sources import geoparquet, pbf
+
+    tr.wrap(pbf, "scan_blobs", "pbf.scan")
+    tr.wrap(pbf, "read_pbf", "pbf.read", force=True)
+    tr.wrap(contributions, "node_contribution_events", "contributions.nodes", force=True)
+    tr.wrap(contributions, "way_contribution_events", "contributions.ways", force=True)
+    tr.wrap(contributions, "relation_contribution_events", "contributions.relations", force=True)
+    tr.wrap(contributions, "synthesize_contributions", "contributions.synthesize", force=True)
+    tr.wrap(contributions, "with_changesets", "contributions.changesets", force=True)
+    tr.wrap(session, "truncate_lineage", "session.truncate_lineage")
+    tr.wrap(session, "truncate_lineage_many", "session.truncate_lineage")
+    write = tr.wrap(geoparquet, "write_contributions", "geoparquet.write")
+
+    # the CLI applies the countries UDF inline right before
+    # write_contributions; forcing the writer's input in its own span
+    # charges that UDF to spatial.countries
+    def write_contributions(contribs, path, *a, **kw):
+        with tr.span("spatial.countries"):
+            contribs = tr.force(contribs)
+        return write(contribs, path, *a, **kw)
+
+    tr.patch(geoparquet, "write_contributions", write_contributions)
+
+
+def install_replication_tracing(tr: tracing.Tracer) -> None:
+    from ohsome_planet_spark.sources import geoparquet, osmxml
+    from ohsome_planet_spark.streaming import manager, replication, server
+
+    for attr in ("get_replication_file", "get_remote_state", "get_latest_remote_state"):
+        tr.wrap(server.Server, attr, "server.fetch")
+    tr.wrap(osmxml, "parse_osc_bytes", "osmxml.parse")
+    tr.wrap(replication.IncrementalUpdater, "advance_batch", "replication.advance")
+    tr.wrap(replication.IncrementalUpdater, "build_rebuilds", "replication.rebuild", force=True)
+    tr.wrap(geoparquet, "write_contributions", "manager.write")
+    tr.wrap(manager.ContributionReplicationManager, "update_to_remote_state", "manager.sequence")
+
+
+def import_layer_metrics(tr: tracing.Tracer, window: dict, log: dict) -> dict:
+    t0, t1 = window["t0"], window["t1"]
+    st = tr.self_times(t0, t1)
+
+    def stream(osm_type: str) -> float:
+        # the CLI synthesizes each stream right after building its events,
+        # so a synthesize span belongs to the events span before it
+        names = ("contributions.nodes", "contributions.ways", "contributions.relations",
+                 "contributions.synthesize")
+        cur, total = None, 0.0
+        for s in sorted((s for s in tr.closed(t0, t1) if s["name"] in names),
+                        key=lambda s: s["start"]):
+            if s["name"] != "contributions.synthesize":
+                cur = s["name"].split(".")[1]
+            elif cur == osm_type:
+                total += s["end"] - s["start"]
+        return total
+
+    owner = tr.attribute_jobs(jobs_between(log, t0, t1), t0, t1)
+    build = {"contributions.nodes", "contributions.ways", "contributions.relations",
+             "contributions.synthesize"}
+    return {
+        "pbf.scan_s": _forced_self(st, "pbf.scan"),
+        "pbf.decode_s": _forced_self(st, "pbf.read"),
+        "contributions.nodes_s": _forced_self(st, "contributions.nodes") + stream("nodes"),
+        "contributions.ways_s": _forced_self(st, "contributions.ways") + stream("ways"),
+        "contributions.relations_s": (_forced_self(st, "contributions.relations")
+                                      + stream("relations")),
+        "contributions.eager_jobs": sum(1 for n in owner.values() if n in build),
+        "session.truncate_lineage_calls": sum(
+            1 for s in tr.closed(t0, t1) if s["name"] == "session.truncate_lineage"),
+        "session.truncate_lineage_s": tr.total_times(t0, t1).get("session.truncate_lineage", 0.0),
+        "spatial.countries_s": _forced_self(st, "spatial.countries"),
+        "contributions.changesets_s": _forced_self(st, "contributions.changesets"),
+        "geoparquet.write_s": _forced_self(st, "geoparquet.write"),
+    }
+
+
+def replication_layer_metrics(tr: tracing.Tracer, t0: float, t1: float, log: dict,
+                              lats: list[float]) -> dict:
+    st = tr.self_times(t0, t1)
+    tot = tr.total_times(t0, t1)
+    return {
+        "replication.seq_s": statistics.median(lats),
+        "server.fetch_s": tot.get("server.fetch", 0.0),
+        "osmxml.parse_s": tot.get("osmxml.parse", 0.0),
+        "replication.advance_s": _forced_self(st, "replication.advance"),
+        "replication.rebuild_s": _forced_self(st, "replication.rebuild"),
+        "manager.write_s": _forced_self(st, "manager.write"),
+        "manager.history_append_s": st.get("manager.sequence", 0.0),
+        "replication.jobs_per_seq": len(jobs_between(log, t0, t1)) / len(lats),
+    }
 
 
 def check_bulk(bench: Bench, out: str, truth: dict) -> bool:
@@ -668,202 +683,50 @@ def check_bulk(bench: Bench, out: str, truth: dict) -> bool:
     return ok
 
 
-def import_history(bench: Bench, inp: dict, out: str) -> tuple[float, bool]:
-    """One ``cli contributions`` run (the user's bulk import command);
-    returns (wall seconds, output correct)."""
+def bulk_history(bench: Bench) -> dict:
+    """Cold one-shot ``cli contributions`` import of a seeded history
+    extract (decode → node/way/relation synthesis → changeset + country
+    enrichment → GeoParquet) in a fresh context, as a user runs it: JIT,
+    Python worker start-up and code generation are part of the import.
+    Traced runs then run one query of each serving type over the written
+    dataset and apply the mirror's diffs, one sequence per pass, through
+    the replication manager."""
     from ohsome_planet_spark import cli
 
+    inp = bench.setup("perfbench-bulk", gen.write_history_extract, bench.seed, BULK_SIZES,
+                      REPL_SEQS, REPL_CHANGES)
+    tr = bench.tracer
+    if tr is not None:
+        install_import_tracing(tr)
+    out = os.path.join(bench.work, "contribs")
     argv = ["contributions", "--pbf", inp["pbf"], "--changesets", inp["changesets"],
             "--country-file", inp["countries"], "--out", out]
+    bench.begin_window()
     t = time.perf_counter()
     rc = cli.main(argv)
     wall = time.perf_counter() - t
-    if bench.tracer is not None:
-        bench.tracer.release()
-    return wall, bench.check(rc == 0, f"cli exit {rc}") and check_bulk(bench, out, inp["truth"])
-
-
-def bulk_history(bench: Bench, sizes: dict = BULK_SIZES, extra_layers: dict | None = None) -> dict:
-    """Cold one-shot ``cli contributions`` import of a seeded history
-    extract (decode → node/way/relation synthesis → changeset + country
-    enrichment → GeoParquet) in a fresh process, as a user runs it: JIT,
-    Python worker start-up and code generation are part of the import.
-    In traced runs every query type of the serving mix then runs once
-    over the written dataset (one client), checked against DuckDB, for
-    the ``views.*`` / ``query.*`` metrics."""
-    inp = bench.generate("extract", gen.write_history_extract, bench.seed, sizes)
-    spark = bench.start_session("perfbench-bulk")
-    if bench.trace:
-        install_osm_tracing(bench.tracer)
-        _force_write_input(bench.tracer)
-    walls, outs = [], []
-    bench.begin_window()
-    start = time.perf_counter()
-    while True:
-        out = os.path.join(bench.work, f"contribs-{len(walls)}")
-        wall, ok = import_history(bench, inp, out)
-        walls.append(wall)
-        bench.op_result(ok)
-        outs.append(out)
-        if bench.deadline_passed(start):
-            break
     window = bench.end_window()
+    bench.op_result(bench.check(rc == 0, f"cli exit {rc}") and check_bulk(bench, out, inp["truth"]))
     versions = inp["truth"]["versions"]
-    nbytes, files, groups = dir_parquet_stats(outs[0])
-    e2e = {
-        "job_wall_s": statistics.median(walls),
-        "items_per_s": versions / statistics.median(walls),
-        "out_bytes_per_item": nbytes / versions,
-    }
+    nbytes, files, groups = dir_parquet_stats(out)
+    e2e = {"job_wall_s": wall, "items_per_s": versions / wall,
+           "out_bytes_per_item": nbytes / versions}
     layers = {}
-    if bench.trace:
-        # the serving side of the written layout: only the per-layer
-        # metrics use it, so untraced runs skip it and stay shorter
-        done = query_phase(bench, spark, outs[0], inp["truth"], clients=1, per_type=1)
-        layers = osm_layer_metrics(bench, window)
-        layers.update(query_layer_metrics(done, layers.pop("_log")))
-        layers.update({"geoparquet.bytes": nbytes, "geoparquet.files": files,
-                       "geoparquet.row_groups": groups,
-                       "trace.op_wall_ms": statistics.median(walls) * 1000})
-    return bench.result(e2e, layers, extra_layers)
-
-
-# ---------------------------------------------------------------------------
-# query_mix (by hand; not in BENCHMARK.json, see README.md)
-# ---------------------------------------------------------------------------
-
-def query_mix(bench: Bench) -> dict:
-    """Closed loop of ``min(nproc, 4)`` clients on one session over a
-    dataset the bulk import writes during set-up."""
-    inp = bench.generate("extract", gen.write_history_extract, bench.seed, BULK_SIZES)
-    spark = bench.start_session("perfbench-query")
-    dataset = os.path.join(bench.work, "contribs")
-    _wall, ok = bench.timed_setup("import", import_history, bench, inp, dataset)
-    bench.check(ok, "set-up import produced a wrong dataset")
-    query_phase(bench, spark, dataset, inp["truth"], clients=1, per_type=1)  # warm-up
-    bench.attempted = bench.failed = 0
-    if bench.trace:
-        install_osm_tracing(bench.tracer)
-    clients = max(1, min(4, int(os.environ["SPARK_GRAFT_CPUS"])))
-    bench.begin_window()
-    t = time.perf_counter()
-    done = query_phase(bench, spark, dataset, inp["truth"], clients=clients,
-                       seconds=bench.seconds)
-    wall = time.perf_counter() - t
-    window = bench.end_window()
-    lats = [d["lat"] for d in done]
-    e2e = {
-        "job_wall_s": statistics.median(lats),
-        "items_per_s": len(done) / wall,
-        "out_bytes_per_item": dir_parquet_stats(dataset)[0] / inp["truth"]["versions"],
-    }
-    layers = {}
-    if bench.trace:
+    if tr is not None:
+        tr.release()
+        tr.uninstall()
+        done = query_phase(bench, out, inp["truth"])
+        install_replication_tracing(tr)
+        r0 = time.time()
+        lats = replication_phase(bench, inp)
+        r1 = time.time()
         layers, log = bench.spark_layers(window)
+        layers.update(import_layer_metrics(tr, window, log))
         layers.update(query_layer_metrics(done, log))
-        layers["trace.op_wall_ms"] = statistics.median(lats) * 1000
+        layers.update(replication_layer_metrics(tr, r0, r1, log, lats))
+        layers.update({"geoparquet.bytes": nbytes, "geoparquet.files": files,
+                       "geoparquet.row_groups": groups, "trace.op_wall_ms": wall * 1000})
     return bench.result(e2e, layers)
-
-
-# ---------------------------------------------------------------------------
-# replication
-# ---------------------------------------------------------------------------
-
-REPL_SIZES = dict(n_poi=1000, n_ways=300, n_rels=0, n_big_rels=0, big_members=0,
-                  total_versions=6000)
-REPL_CHANGES = 120
-REPL_WARMUP, REPL_BACKLOG, REPL_LIVE_MAX = 1, 3, 12
-
-
-def check_replication(bench: Bench, inp: dict, applied: list[dict], out_dir: str) -> list[bool]:
-    """Per applied sequence: its written contributions carry the diff's
-    version of every touched tagged element, and the history store ends
-    at the last diff version of every touched id."""
-    q = duckdb.connect()
-    final: dict[tuple[str, int], int] = {}
-    oks = []
-    for info in applied:
-        final.update(info["touched"])
-        path = os.path.join(out_dir, gen.sequence_rel(info["seq"]) + ".opc.parquet")
-        got = set(q.execute(
-            f"SELECT osm_type, osm_id, osm_version FROM read_parquet('{path}/*.parquet')"
-        ).fetchall())
-        ok = True
-        for (t, i), v in info["touched"].items():
-            if info["tagged"].get((t, i)):
-                ok &= bench.check((t, i, v) in got, f"seq {info['seq']}: {t}/{i} v{v} missing")
-        oks.append(ok)
-    for sub, typ in (("nodes", "node"), ("ways", "way")):
-        store = dict(q.execute(
-            f"SELECT osm_id, max(version) FROM read_parquet('{inp['data']}/{sub}/*.parquet') "
-            "GROUP BY osm_id").fetchall())
-        bad = [(i, v) for (t, i), v in final.items() if t == typ and store.get(i) != v]
-        if not bench.check(not bad, f"{sub} store misses {len(bad)} diff versions, e.g. {bad[:3]}"):
-            oks[-1] = False
-    q.close()
-    return oks
-
-
-def replication(bench: Bench) -> dict:
-    """A replication store seeded from a generated extract, kept current
-    from a ``file://`` mirror of minutely ``.osc.gz`` diffs through
-    ``ContributionReplicationManager``: one warm-up sequence, a backlog
-    caught up in one pass, then single sequences as they are published
-    (closed loop, one caller)."""
-    from ohsome_planet_spark.streaming.manager import ContributionReplicationManager
-    from ohsome_planet_spark.streaming.server import entity_server, file_fetch
-
-    n_seqs = REPL_WARMUP + REPL_BACKLOG + REPL_LIVE_MAX
-    inp = bench.generate("repl", gen.write_replication_inputs, bench.seed, REPL_SIZES,
-                         n_seqs, REPL_CHANGES)
-    spark = bench.start_session("perfbench-replication")
-    seqs = inp["seqs"]
-    out_dir = os.path.join(bench.work, "repl-out")
-    mgr = ContributionReplicationManager(
-        server=entity_server("local://mirror/", fetch=file_fetch(inp["mirror"])),
-        spark=spark, data_dir=inp["data"], out_dir=out_dir)
-
-    def catch_up(upto: int) -> tuple[float, int]:
-        gen.publish_state(inp["mirror"], seqs[upto - 1])
-        t = time.perf_counter()
-        n = mgr.update_to_remote_state()
-        return time.perf_counter() - t, n
-
-    catch_up(REPL_WARMUP)
-    if bench.trace:
-        install_osm_tracing(bench.tracer)
-    bench.begin_window()
-    done = REPL_WARMUP + REPL_BACKLOG
-    backlog_s, n_backlog = catch_up(done)
-    ok_counts = n_backlog == REPL_BACKLOG
-    live = []
-    start = time.perf_counter()
-    while done < len(seqs):
-        done += 1
-        t, n = catch_up(done)
-        live.append(t)
-        ok_counts &= n == 1
-        if bench.deadline_passed(start) and len(live) >= 2:
-            break
-    window = bench.end_window()
-    bench.check(ok_counts, "manager applied a different number of sequences than published")
-    applied = [dict(s, tagged=s["tagged"]) for s in seqs[:done]]
-    oks = check_replication(bench, inp, applied, out_dir)
-    for ok in oks[REPL_WARMUP:]:
-        bench.op_result(ok and ok_counts)
-    nbytes = dir_parquet_stats(out_dir)[0]
-    changes = sum(s["changes"] for s in seqs[:done])
-    e2e = {
-        "job_wall_s": statistics.median(live),
-        "items_per_s": n_backlog / backlog_s,
-        "out_bytes_per_item": nbytes / changes,
-    }
-    layers = {}
-    if bench.trace:
-        layers = osm_layer_metrics(bench, window, n_seq=done - REPL_WARMUP)
-        layers.pop("_log")
-        layers["trace.op_wall_ms"] = statistics.median(live) * 1000
-    return bench.result(e2e, layers, REPLICATION_LAYER)
 
 
 # ---------------------------------------------------------------------------
@@ -873,6 +736,19 @@ def replication(bench: Bench) -> dict:
 CRAWL_SIZES = dict(n_archives=4, docs_per_archive=30, dup_groups=6, dup_copies=3,
                    n_holdout=12, n_contaminated=6, boiler_frac=0.3)
 EXACT_SUBSTR_N = 50  # longer than every planted duplicate page, shorter than the boilerplate
+
+
+def install_crawl_tracing(tr: tracing.Tracer) -> None:
+    from ohsome_planet_spark import session
+    from ohsome_planet_spark.operators import curation, dedup, web
+
+    tr.wrap(web, "warc_records", "warc.records", force=True)
+    tr.wrap(web, "extract_main_text", "web.extract", force=True)
+    tr.wrap(curation, "c4_line_filter", "curation.c4", force=True)
+    tr.wrap(dedup, "exact_substr_rewrite", "dedup.exact_substr", force=True)
+    tr.wrap(curation, "flag_documents", "curation.flag", force=True)
+    tr.wrap(curation, "curate", "curation.curate")
+    tr.wrap(session, "truncate_lineage", "session.truncate_lineage")
 
 
 def crawl_pass(spark, archives: list[str], holdout_path: str, out: str) -> dict:
@@ -925,63 +801,43 @@ def check_crawl(bench: Bench, report: dict, out: str, truth: dict) -> bool:
 
 def crawl_curate(bench: Bench) -> dict:
     """Cold one-shot crawl→corpus job over seeded WARC archives in a
-    fresh process, as a user runs the ingest + curate commands."""
-    inp = bench.generate("crawl", gen.write_crawl_inputs, bench.seed, **CRAWL_SIZES)
-    spark = bench.start_session("perfbench-crawl")
-    if bench.trace:
-        install_crawl_tracing(bench.tracer)
-    walls, outs = [], []
+    fresh context, as a user runs the ingest + curate commands."""
+    inp = bench.setup("perfbench-crawl", gen.write_crawl_inputs, bench.seed, CRAWL_SIZES)
+    tr = bench.tracer
+    if tr is not None:
+        install_crawl_tracing(tr)
+    out = os.path.join(bench.work, "corpus")
     bench.begin_window()
-    start = time.perf_counter()
-    while True:
-        out = os.path.join(bench.work, f"corpus-{len(walls)}")
-        t = time.perf_counter()
-        report = crawl_pass(spark, inp["archives"], inp["holdout"], out)
-        walls.append(time.perf_counter() - t)
-        outs.append((report, out))
-        if bench.tracer is not None:
-            bench.tracer.release()
-        if bench.deadline_passed(start):
-            break
+    t = time.perf_counter()
+    report = crawl_pass(bench.spark, inp["archives"], inp["holdout"], out)
+    wall = time.perf_counter() - t
     window = bench.end_window()
-    for report, out in outs:
-        bench.op_result(check_crawl(bench, report, out, inp["truth"]))
+    bench.op_result(check_crawl(bench, report, out, inp["truth"]))
     n = inp["truth"]["responses"]
-    e2e = {
-        "job_wall_s": statistics.median(walls),
-        "items_per_s": n / statistics.median(walls),
-        "out_bytes_per_item": dir_parquet_stats(outs[0][1])[0] / n,
-    }
+    e2e = {"job_wall_s": wall, "items_per_s": n / wall,
+           "out_bytes_per_item": dir_parquet_stats(out)[0] / n}
     layers = {}
-    if bench.trace:
-        tr = bench.tracer
-        since = window["t0"]
-        st = tr.self_times(since)
-
-        def s(name):
-            return st.get(name, 0.0) + st.get(name + "#force", 0.0)
-
+    if tr is not None:
+        t0, t1 = window["t0"], window["t1"]
+        st = tr.self_times(t0, t1)
         layers, _log = bench.spark_layers(window)
         layers.update({
-            "warc.records_s": s("warc.records"),
-            "web.extract_s": s("web.extract"),
-            "curation.c4_s": s("curation.c4"),
-            "dedup.exact_substr_s": s("dedup.exact_substr"),
-            "curation.flag_s": s("curation.flag"),
+            "warc.records_s": _forced_self(st, "warc.records"),
+            "web.extract_s": _forced_self(st, "web.extract"),
+            "curation.c4_s": _forced_self(st, "curation.c4"),
+            "dedup.exact_substr_s": _forced_self(st, "dedup.exact_substr"),
+            "curation.flag_s": _forced_self(st, "curation.flag"),
             "curation.write_s": st.get("curation.curate", 0.0),
-            "session.truncate_lineage_calls": tr.counts.get("session.truncate_lineage_calls", 0),
-            "session.truncate_lineage_s": tr.total_times(since).get("session.truncate_lineage", 0.0),
-            "trace.op_wall_ms": statistics.median(walls) * 1000,
+            "session.truncate_lineage_calls": sum(
+                1 for s in tr.closed(t0, t1) if s["name"] == "session.truncate_lineage"),
+            "session.truncate_lineage_s": tr.total_times(t0, t1).get(
+                "session.truncate_lineage", 0.0),
+            "trace.op_wall_ms": wall * 1000,
         })
     return bench.result(e2e, layers)
 
 
 WORKLOADS = {
-    # in BENCHMARK.json
     "bulk_history": bulk_history,
     "crawl_curate": crawl_curate,
-    # by hand only: too slow for the benchmark's time budget (README.md)
-    "bulk_relations": lambda bench: bulk_history(bench, BULK_REL_SIZES, RELATION_LAYER),
-    "replication": replication,
-    "query_mix": query_mix,
 }
