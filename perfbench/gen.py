@@ -348,7 +348,8 @@ def write_store(data: str, h: dict) -> None:
     (``cli contributions --data --replication-endpoint``) writes."""
     for sub, rows, typ in (("nodes", h["nodes"], "node"), ("ways", h["ways"], "way")):
         os.makedirs(os.path.join(data, sub), exist_ok=True)
-        pq.write_table(_history_table(rows, typ), os.path.join(data, sub, "part-00000-seed.parquet"))
+        pq.write_table(_history_table(rows, typ),
+                       os.path.join(data, sub, "part-00000-seed.parquet"))
     with open(os.path.join(data, "state.txt"), "w") as f:
         f.write(_state_text(0, _extract_end(h)))
 
@@ -552,7 +553,9 @@ def write_crawl_inputs(workdir: str, seed: int, sizes: dict) -> dict:
         raise ValueError("crawl sizes leave no unique documents")
     pages = []
     for _ in range(n_unique):
-        pages.append(("unique", _doc_text(rng, rng.randint(5, 12), rng.random() < sizes["boiler_frac"])))
+        n_lines = rng.randint(5, 12)
+        boiler = rng.random() < sizes["boiler_frac"]
+        pages.append(("unique", _doc_text(rng, n_lines, boiler)))
     for g in range(dup_groups):
         pages += [("dup", dup_texts[g])] * dup_copies
     for c in range(n_contaminated):
