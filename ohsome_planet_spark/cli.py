@@ -13,7 +13,9 @@
 
 The bulk `contributions` run is the reference's 5-stage dataflow
 (SURVEY.md §3.1) as one Spark job: decode → nodes → ways → relations →
-GeoParquet, with changeset/country enrichment joined in.
+GeoParquet, with changeset/country enrichment joined in. The node → way →
+relation composition is ``operators.contributions.build_contributions``,
+the one produce path the replication rebuild and the parity gate share.
 """
 
 from __future__ import annotations
@@ -24,19 +26,18 @@ import json
 import os
 import sys
 
-from pyspark.sql import Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
 def cmd_contributions(args) -> int:
+    from functools import reduce
+
     from .operators.contributions import (
+        build_contributions,
+        enrich_contributions,
         filter_relation_tag_keys,
         filter_tagged_histories,
-        node_contribution_events,
-        relation_contribution_events,
-        synthesize_contributions,
-        way_contribution_events,
-        with_changesets,
     )
     from .session import get_spark
     from .sources.geoparquet import write_contributions
@@ -55,40 +56,17 @@ def cmd_contributions(args) -> int:
     if args.filter_relation_tag_keys:
         rels = filter_relation_tag_keys(rels, args.filter_relation_tag_keys.split(","))
 
-    streams = [
-        synthesize_contributions(node_contribution_events(filter_tagged_histories(nodes))),
-        synthesize_contributions(
-            way_contribution_events(filter_tagged_histories(ways), nodes)
-        ),
-        synthesize_contributions(
-            relation_contribution_events(
-                rels, ways, nodes, member_limit=args.multipolygon_member_limit
-            )
-        ),
-    ]
-    contribs = streams[0]
-    for s in streams[1:]:
-        contribs = contribs.unionByName(s)
-
-    if args.changesets:
-        changesets = spark.read.parquet(args.changesets)
-        contribs = with_changesets(contribs, changesets)
-    else:
-        contribs = with_changesets(
-            contribs, spark.createDataFrame([], _changeset_ddl())
-        )
-
-    if args.country_file:
-        from .operators.spatial import geometry_countries_udf
-
-        feats = _load_country_csv(args.country_file)
-        # full-geometry intersects like the reference (a way crossing a
-        # border belongs to both countries even with no vertex inside)
-        contribs = contribs.withColumn(
-            "countries", geometry_countries_udf(feats)(F.col("geometry"))
-        )
-    else:
-        contribs = contribs.withColumn("countries", F.array().cast("array<string>"))
+    # F1 drops untagged node/way histories from the emitted streams only;
+    # they stay member histories of the ways and relations
+    contribs = reduce(DataFrame.unionByName, build_contributions(
+        filter_tagged_histories(nodes), filter_tagged_histories(ways), rels,
+        nodes, ways, member_limit=args.multipolygon_member_limit,
+    ))
+    contribs = enrich_contributions(
+        contribs,
+        spark.read.parquet(args.changesets) if args.changesets else None,
+        _load_country_csv(args.country_file) if args.country_file else None,
+    )
 
     if getattr(args, "filter", None):
         # ohsome filter DSL (docs.ohsome.org filter parameter) compiled to
@@ -186,12 +164,6 @@ def _init_replication(spark, entities, args) -> int:
         f.write(state_text)
     print(f"replication initialized at sequence {start.sequence}")
     return 0
-
-
-def _changeset_ddl() -> str:
-    from .schemas import CHANGESET_SCHEMA
-
-    return CHANGESET_SCHEMA.simpleString()[7:-1].replace(":", " ")
 
 
 def _load_country_csv(path: str):

@@ -134,8 +134,8 @@ def bundled_way_instants(ways: DataFrame, nodes: DataFrame) -> DataFrame:
     the shareable intermediate both the way pipeline and the relation
     pipeline's member streams consume (the relational analog of the
     reference's per-contribution geometry memoization,
-    ``Contribution.java:26-28``). Callers composing both pipelines should
-    stage this (``truncate_lineage``) and pass it to
+    ``Contribution.java:26-28``). :func:`build_contributions` stages this
+    (``truncate_lineage``) and passes it to
     :func:`way_contribution_events` / :func:`relation_contribution_events`
     so the way merge runs once, not twice."""
     from ..functions.geometry import way_geom_bundle
@@ -208,12 +208,8 @@ def relation_contribution_events(
     reused by reference — the relational analog of the reference's
     per-contribution geometry memoization (``Contribution.java:26-28``).
     """
-    from ..functions.geometry import relation_geom_bundle, way_geom_bundle
-    from .temporal_merge import (
-        merge_member_streams,
-        minor_relevant_node_versions,
-        way_contribution_instants,
-    )
+    from ..functions.geometry import relation_geom_bundle
+    from .temporal_merge import merge_member_streams, minor_relevant_node_versions
 
     majors = relations.select(
         F.col("osm_id").alias("pid"),
@@ -252,15 +248,14 @@ def relation_contribution_events(
 
     # member way streams = way contribution instants + geometry. A caller
     # composing the way pipeline too passes its staged bundled_way_instants
-    # so the way merge runs ONCE; unreferenced ways drop out at the
-    # member-stream equi-join below.
+    # so the way merge runs ONCE; it is pruned to the referenced ways like
+    # the way source, so the member-event checkpoint below never carries
+    # ways no relation references.
     if bundled_ways is not None:
-        way_bundled = bundled_ways.withColumnRenamed("_bundle", "_b")
+        used_bundle = bundled_ways.join(F.broadcast(way_ids), "osm_id", "left_semi")
     else:
-        way_inst = way_contribution_instants(used_ways, used_nodes)
-        way_bundled = way_inst.withColumn(
-            "_b", way_geom_bundle(F.col("tags"), F.col("refs"), F.col("member_states"))
-        )
+        used_bundle = bundled_way_instants(used_ways, used_nodes)
+    way_bundled = used_bundle.withColumnRenamed("_bundle", "_b")
     wseq = W.partitionBy("osm_id").orderBy("ts", "osm_version", "changeset")
     way_events = way_bundled.select(
         F.lit("way").alias("mtype"),
@@ -377,6 +372,72 @@ def relation_contribution_events(
     )
 
 
+def build_contributions(
+    nodes: DataFrame,
+    ways: DataFrame,
+    rels: DataFrame | None,
+    node_history: DataFrame,
+    way_history: DataFrame,
+    member_limit: int = 500,
+) -> tuple[DataFrame, ...]:
+    """The one contribution build (the reference's single converter over
+    nested node → way → relation merges, ``ContributionsAvroConverter``):
+    synthesized (node, way[, relation]) contribution frames for the
+    emitted histories ``nodes`` / ``ways`` / ``rels``, with
+    ``node_history`` / ``way_history`` as the member histories. The bulk
+    import, the replication rebuild and the parity gate all run it.
+    ``rels=None`` skips the relation stream (a store without relation
+    history).
+
+    The J3 way merge + geometry bundle runs ONCE, staged over the emitted
+    ways plus the ways ``rels`` references; the way stream and the
+    relation member streams both read it (the reference memoizes member
+    way contributions the same way, ``Contribution.java:26-28``). The
+    per-type constructions are long blocking chains of py4j planning
+    round-trips, so they run on concurrent driver threads."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ..session import truncate_lineage
+
+    way_ids = ways.select("osm_id")
+    touched_way_ids = way_ids
+    if rels is not None:
+        touched_way_ids = touched_way_ids.unionByName(
+            rels.select(F.explode("members").alias("m"))
+            .filter(F.col("m.type") == "way")
+            .select(F.col("m.id").alias("osm_id"))
+        )
+
+    with ThreadPoolExecutor(3) as ex:
+
+        def synthesized(events_fn, *args, **kwargs):
+            return ex.submit(
+                lambda: synthesize_contributions(events_fn(*args, **kwargs))
+            )
+
+        # the node stream does not read the bundle: its construction
+        # overlaps the bundle's staging
+        futs = [synthesized(node_contribution_events, nodes)]
+        # lineage-cut, not just persist: the bundle is re-embedded in the
+        # way stream and (through the member merge) the relation stream;
+        # persist alone leaves its full logical tree in each, re-walked by
+        # the optimizer per embedding
+        bundled = truncate_lineage(bundled_way_instants(
+            way_history.join(touched_way_ids.distinct(), "osm_id", "left_semi"),
+            node_history,
+        ))
+        futs.append(synthesized(
+            way_contribution_events, ways, node_history,
+            bundled=bundled.join(way_ids.distinct(), "osm_id", "left_semi"),
+        ))
+        if rels is not None:
+            futs.append(synthesized(
+                relation_contribution_events, rels, way_history, node_history,
+                member_limit=member_limit, bundled_ways=bundled,
+            ))
+        return tuple(f.result() for f in futs)
+
+
 # ---------------------------------------------------------------------------
 # filters (SURVEY.md F1/F2)
 # ---------------------------------------------------------------------------
@@ -459,17 +520,16 @@ def _synth_exprs() -> dict:
 
     part = ["osm_type", "osm_id"]
     order = [F.col("ts"), F.col("osm_version"), F.col("changeset")]
-    w_raw = W.partitionBy(*part).orderBy(*order)
     w = W.partitionBy(*part).orderBy(*order)
     w_run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     w_ver = W.partitionBy(*part, "osm_version").orderBy(*order)
 
     raw_lags = {
-        "_prev_ts": F.lag("ts").over(w_raw),
-        "_prev_tags": F.lag("tags").over(w_raw),
-        "_prev_visible": F.lag("visible").over(w_raw),
-        "_next_version": F.lead("osm_version").over(w_raw),
-        "_next_changeset": F.lead("changeset").over(w_raw),
+        "_prev_ts": F.lag("ts").over(w),
+        "_prev_tags": F.lag("tags").over(w),
+        "_prev_visible": F.lag("visible").over(w),
+        "_next_version": F.lead("osm_version").over(w),
+        "_next_changeset": F.lead("changeset").over(w),
     }
     squash_keep = (
         ~(
@@ -559,12 +619,8 @@ def _synth_exprs() -> dict:
 _SYNTH_EXPRS: dict = {}
 
 
-def _synth_select_inner(*cols):
-    return list(cols)
-
-
 def _synth_select_list(status, tags, tags_before, contrib_type, xz_level, xz_code):
-    return _synth_select_inner(
+    return [
         status.alias("status"),
         F.col("ts").alias("valid_from"),
         F.coalesce("valid_to", F.lit(VALID_TO_SENTINEL)).alias("valid_to"),
@@ -595,7 +651,7 @@ def _synth_select_list(status, tags, tags_before, contrib_type, xz_level, xz_cod
         "members_count",
         "members",
         F.lit(0).cast("bigint").alias("build_time"),
-    )
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -656,3 +712,27 @@ def with_changesets(
     return joined.withColumn("changeset", changeset_struct).drop(
         "_cs_id", "_cs_created_at", "_cs_closed_at", "_cs_tags", "_cs_hashtags", "changeset_id"
     )
+
+
+def enrich_contributions(
+    contribs: DataFrame, changesets: DataFrame | None = None, country_features=None
+) -> DataFrame:
+    """J4 changeset + J5 country enrichment — every written contribution
+    dataset (bulk import and per-sequence replication output) carries the
+    same ``changeset`` struct and ``countries`` column. Without a
+    changeset table every row gets the reference's default changeset
+    record; without country features ``countries`` is an empty array."""
+    if changesets is None:
+        from ..schemas import CHANGESET_SCHEMA
+
+        changesets = contribs.sparkSession.createDataFrame([], CHANGESET_SCHEMA)
+    contribs = with_changesets(contribs, changesets)
+    if country_features is None:
+        countries = F.array().cast("array<string>")
+    else:
+        from .spatial import geometry_countries_udf
+
+        # full-geometry intersects like the reference (a way crossing a
+        # border belongs to both countries even with no vertex inside)
+        countries = geometry_countries_udf(country_features)(F.col("geometry"))
+    return contribs.withColumn("countries", countries)

@@ -1416,31 +1416,6 @@ def _fullrow_typed(ents: DataFrame):
     )
 
 
-def _fullrow_build(nodes: DataFrame, ways: DataFrame, rels: DataFrame) -> DataFrame:
-    """The bulk three-pipeline contribution build: the way merge + geometry
-    bundle is computed ONCE and staged; the way pipeline projects
-    contribution events from it and the relation pipeline consumes it as
-    its member way streams (the reference's memoized way contributions,
-    ``Contribution.java:26-28``)."""
-    from ..operators.contributions import bundled_way_instants
-    from ..session import truncate_lineage
-
-    bundled = truncate_lineage(bundled_way_instants(ways, nodes))
-    return (
-        synthesize_contributions(node_contribution_events(nodes))
-        .unionByName(
-            synthesize_contributions(
-                way_contribution_events(ways, nodes, bundled=bundled)
-            )
-        )
-        .unionByName(
-            synthesize_contributions(
-                relation_contribution_events(rels, ways, nodes, bundled_ways=bundled)
-            )
-        )
-    )
-
-
 def _fullrow_enrich(spark: SparkSession, sf_dir: str, contribs: DataFrame) -> DataFrame:
     """J4 changeset enrichment + J5 country tagging over a (staged)
     contribution table — the produce path's enrichment stages."""
@@ -1572,7 +1547,9 @@ def contrib_full_row_from_pbf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side and probe side, and the countries projection, each replan the
     # 3-pipeline union otherwise (the in-session analog of the reference's
     # produce-then-enrich staging)
-    contribs = truncate_lineage(_fullrow_build(nodes, ways, rels))
+    contribs = truncate_lineage(reduce(
+        DataFrame.unionByName, build_contributions(nodes, ways, rels, nodes, ways)
+    ))
     return _fullrow_project(_fullrow_enrich(spark, sf_dir, contribs))
 
 
@@ -1581,21 +1558,13 @@ def _osc_roundtrip_batch(spark: SparkSession, wave: DataFrame) -> DataFrame:
     it back, and return the entity batch frame — the .osc wire seam the
     production replication loop consumes (``apply_sequences`` does the
     identical parse from a server)."""
-    from ..sources.osmxml import encode_osc, parse_osc_bytes
-    from ..sources.pbf import ENTITY_ROW_SCHEMA
+    from ..sources.osmxml import encode_osc, osc_entity_batch
 
     rows = [
         r.asDict(recursive=True)
         for r in wave.orderBy("osm_type", "osm_id", "version").collect()
     ]
-    parsed = parse_osc_bytes(encode_osc(rows))
-    cols = [
-        "osm_type", "osm_id", "version", "ts", "changeset", "user_id",
-        "user_name", "visible", "tags", "lon", "lat", "refs", "members",
-    ]
-    return spark.createDataFrame(
-        pd.DataFrame(parsed, columns=cols), ENTITY_ROW_SCHEMA
-    )
+    return osc_entity_batch(spark, encode_osc(rows))
 
 
 @_register("contrib_full_row_incremental", _fullrow_oracle())
@@ -1647,9 +1616,10 @@ def contrib_full_row_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     contribs = _produce_then_query(
         spark, sf_dir, "fullrow_base",
-        lambda: _fullrow_build(
-            updater.node_history, updater.way_history, updater.rel_history
-        ),
+        lambda: reduce(DataFrame.unionByName, build_contributions(
+            updater.node_history, updater.way_history, updater.rel_history,
+            updater.node_history, updater.way_history,
+        )),
     )
     # two replication batches: the node-move wave (v2), then the tag-edit +
     # delete wave (v3+v4 in ONE batch — multiple versions of the same

@@ -14,6 +14,7 @@ query and mirrored in its oracle.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from functools import reduce
 
 import pandas as pd
 
@@ -43,6 +44,7 @@ from ..functions.xz import G_DEFAULT, _n_elem, xz_code_expr, xz_level_expr
 from ..operators.asof import asof_join
 from ..session import fan_out
 from ..operators.contributions import (
+    build_contributions,
     node_contribution_events,
     relation_contribution_events,
     synthesize_contributions,

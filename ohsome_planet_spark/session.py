@@ -243,12 +243,9 @@ def get_spark(
         # builders are the "user code" the call sites would point at, so
         # the enrichment buys nothing here; disabling it is pure
         # driver-time win on every query build (guide §7.3 — planning
-        # time is driver time). SPARK_GRAFT_DF_DEBUGGING=true restores
-        # the default for interactive debugging sessions.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
-        )
+        # time is driver time). Interactive debugging sessions can set it
+        # back to true through ``extra_conf``.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -94,12 +94,6 @@ def write_contributions(
     df = contribs
     if sort_spatially:
         df = df.sortWithinPartitions(F.col("xzcode.code"))
-    writer = df.write.mode("overwrite").option("compression", "zstd").option(
-        "parquet.enable.dictionary", "true"
-    ).option("parquet.enable.dictionary#osm_id", "false")
-    for col in bloom_filter_columns:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
-
     if split_latest:
         df = df.withColumn(
             "layer",
@@ -107,11 +101,12 @@ def write_contributions(
                 F.lit("history")
             ),
         )
-        writer = df.write.mode("overwrite").option("compression", "zstd").option(
-            "parquet.enable.dictionary#osm_id", "false"
-        )
-        for col in bloom_filter_columns:
-            writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
+    writer = df.write.mode("overwrite").option("compression", "zstd").option(
+        "parquet.enable.dictionary", "true"
+    ).option("parquet.enable.dictionary#osm_id", "false")
+    for col in bloom_filter_columns:
+        writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
+    if split_latest:
         writer = writer.partitionBy("layer", "osm_type")
     writer.parquet(path)
 

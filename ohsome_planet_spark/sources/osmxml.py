@@ -80,6 +80,15 @@ def parse_osc_bytes(data: bytes) -> list[dict]:
     return out
 
 
+def osc_entity_batch(spark: SparkSession, data: bytes) -> DataFrame:
+    """One osmChange document → entity batch DataFrame
+    (``ENTITY_ROW_SCHEMA``), parsed on the driver — the seam every
+    replication sequence enters Spark through (diffs are tiny)."""
+    return spark.createDataFrame(
+        pd.DataFrame(parse_osc_bytes(data), columns=_COLUMNS), ENTITY_ROW_SCHEMA
+    )
+
+
 def encode_osc(rows: list[dict]) -> bytes:
     """Entity dicts → osmChange XML bytes — the inverse of
     :func:`parse_osc_bytes` (fixture/round-trip writer: visible rows go

@@ -412,8 +412,8 @@ def read_pbf(spark: SparkSession, path: str, entity_type: str | None = None) -> 
     """PBF file → unified entity DataFrame (filterable by osm_type).
 
     The blob index is computed driver-side; decode runs distributed via
-    ``mapInPandas`` over index partitions. ``entity_type`` prunes whole
-    blobs when the file carries per-type blobs (Sort.Type_then_ID files do).
+    ``mapInPandas`` over index partitions. ``entity_type`` filters the
+    decoded rows to one osm_type; every blob is still decoded.
     """
     from ..session import ship_package
 

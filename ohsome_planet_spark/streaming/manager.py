@@ -33,7 +33,6 @@ import os
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -156,18 +155,11 @@ class ContributionReplicationManager:
         """One sequence: fetch → parse → J6/J7 apply → R3 rebuild → write
         parquet + state files → advance (``ContributionStateManager
         .java:177-245``)."""
-        from ..sources.osmxml import parse_osc_bytes
-        from ..sources.pbf import ENTITY_ROW_SCHEMA
+        from ..operators.contributions import enrich_contributions
+        from ..sources.osmxml import osc_entity_batch
 
         seq = state.sequence
-        rows = parse_osc_bytes(self.server.get_replication_file(seq))
-        cols = [
-            "osm_type", "osm_id", "version", "ts", "changeset", "user_id",
-            "user_name", "visible", "tags", "lon", "lat", "refs", "members",
-        ]
-        batch = self.spark.createDataFrame(
-            pd.DataFrame(rows, columns=cols), ENTITY_ROW_SCHEMA
-        )
+        batch = osc_entity_batch(self.spark, self.server.get_replication_file(seq))
 
         node_contribs, way_contribs = updater.apply_batch(batch)
         # only the J6-surviving delta is appended to storage — O(|diff|)
@@ -180,7 +172,11 @@ class ContributionReplicationManager:
             (F.size(F.coalesce("tags", F.create_map())) > 0)
             | (F.size(F.coalesce("tags_before", F.create_map())) > 0)
         )
-        contribs = self._enrich(contribs)
+        # the same enrichment as the bulk import, so every per-sequence
+        # file has the bulk output's columns
+        contribs = enrich_contributions(
+            contribs, self.changeset_store, self.country_features
+        )
 
         out_rel = sequence_path(seq)
         out_path = os.path.join(self.out_dir, f"{out_rel}.opc.parquet")
@@ -208,20 +204,6 @@ class ContributionReplicationManager:
         self._publish_state(state, out_path)
         self._advance_local_state(state)
         self.applied.append(seq)
-
-    def _enrich(self, contribs: DataFrame) -> DataFrame:
-        from ..operators.contributions import with_changesets
-
-        if self.changeset_store is not None:
-            contribs = with_changesets(contribs, self.changeset_store)
-        if self.country_features:
-            from ..operators.spatial import geometry_countries_udf
-
-            contribs = contribs.withColumn(
-                "countries",
-                geometry_countries_udf(self.country_features)(F.col("geometry")),
-            )
-        return contribs
 
     def _publish_state(self, state: ReplicationState, parquet_path: str) -> None:
         """Published artifacts next to the parquet: per-sequence

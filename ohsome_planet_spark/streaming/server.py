@@ -177,7 +177,7 @@ class Server:
         lower, upper = self._states_around(remote_state, target)
         if self._state_ts(lower) == target:
             return lower
-        while True:
+        while lower.sequence + 1 < upper.sequence:
             est = self.get_remote_state(self._estimate_seq(target, lower, upper))
             est_ts = self._state_ts(est)
             if est_ts < target:
@@ -186,8 +186,7 @@ class Server:
                 return est
             else:
                 upper = est
-            if lower.sequence + 1 >= upper.sequence:
-                return lower
+        return lower
 
     def _states_around(
         self, upper: ReplicationState, target: datetime
@@ -204,13 +203,17 @@ class Server:
 
     def _earliest_available(self, upper: ReplicationState) -> ReplicationState:
         """Probe from sequence 0 upward; on a gap (expired state file),
-        bisect toward the known-good upper (``Server.java:247-263``)."""
+        bisect toward the known-good upper (``Server.java:247-263``). When
+        no state below ``upper`` is published, ``upper`` is the earliest."""
         seq = 0
         while True:
             try:
                 return self.get_remote_state(seq + self.replication_offset)
             except FileNotFoundError:
-                seq = (upper.sequence + seq) // 2
+                probe = (upper.sequence + seq) // 2
+                if probe <= seq:
+                    return upper
+                seq = probe
 
     def _estimate_seq(
         self, target: datetime, lower: ReplicationState, upper: ReplicationState

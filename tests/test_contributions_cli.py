@@ -30,7 +30,7 @@ WAYS = [
 
 @pytest.fixture()
 def pbf(tmp_path):
-    from tests.pbf_encoder import encode_block, write_pbf
+    from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
 
     path = str(tmp_path / "fixture.osh.pbf")
     write_pbf(path, [encode_block(dense_nodes=NODES), encode_block(ways=WAYS)])
@@ -139,3 +139,52 @@ def test_contributions_cli_with_ohsome_filter(spark, pbf, tmp_path):
     # node 1 v1 (amenity=cafe) passes; v2 (amenity=bar) is excluded by the
     # not-clause; the untagged way has no amenity at all
     assert rows == [("node", 1, 1)]
+
+
+def test_contributions_cli_runs_the_way_merge_once(spark, tmp_path, monkeypatch):
+    """The bulk import stages ONE J3 way merge for the way stream and the
+    relation member streams: an untagged ring way (a member only) and a
+    tagged way both come out of a single ``way_contribution_instants``
+    call, and the multipolygon relation still builds from it."""
+    from ohsome_planet_spark.operators import temporal_merge
+    from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
+
+    calls = []
+    merge = temporal_merge.way_contribution_instants
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return merge(*args, **kwargs)
+
+    monkeypatch.setattr(temporal_merge, "way_contribution_instants", counted)
+
+    def node(i, lon, lat):
+        return dict(osm_id=i, version=1, ts_ms=1_000_000, changeset=10, uid=7,
+                    user="alice", visible=True, tags={}, lon=lon, lat=lat)
+
+    nodes = [node(1, 0.0, 0.0), node(2, 1.0, 0.0), node(3, 1.0, 1.0),
+             node(4, 0.0, 1.0), node(5, 2.0, 2.0)]
+    ways = [
+        dict(osm_id=100, version=1, ts_ms=2_000_000, changeset=11, uid=7,
+             user="alice", visible=True, tags={}, refs=[1, 2, 3, 4, 1]),
+        dict(osm_id=101, version=1, ts_ms=2_000_000, changeset=11, uid=7,
+             user="alice", visible=True, tags={"highway": "path"}, refs=[3, 5]),
+    ]
+    rels = [
+        dict(osm_id=500, version=1, ts_ms=3_000_000, changeset=12, uid=7,
+             user="alice", visible=True,
+             tags={"type": "multipolygon", "landuse": "forest"},
+             members=[dict(type="way", id=100, role="outer")]),
+    ]
+    pbf = str(tmp_path / "mp.osh.pbf")
+    write_pbf(pbf, [encode_block(dense_nodes=nodes),
+                    encode_block(ways=ways, relations=rels)])
+
+    out = str(tmp_path / "contribs")
+    assert main(["contributions", "--pbf", pbf, "--out", out]) == 0
+    assert len(calls) == 1
+
+    rows = {(r.osm_type, r.osm_id): r for r in spark.read.parquet(out).collect()}
+    assert set(rows) == {("way", 101), ("relation", 500)}
+    assert rows[("relation", 500)].geometry_type in ("Polygon", "MultiPolygon")
+    assert rows[("relation", 500)].members[0].geometry_type == "LineString"

@@ -9,7 +9,7 @@ from ohsome_planet_spark.sources.pbf_datasource import (
     register_pbf_source,
     type_range,
 )
-from tests.pbf_encoder import encode_block, write_pbf
+from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
 from tests.test_pbf_source import NODES, RELS, WAYS
 
 

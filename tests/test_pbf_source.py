@@ -12,11 +12,11 @@ from ohsome_planet_spark.sources.pbf import (
     read_pbf,
     scan_blobs,
 )
-from tests.pbf_encoder import encode_block, write_pbf
+from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
 
 
 def test_packed_varint_vectorized_decode():
-    from tests.pbf_encoder import packed
+    from ohsome_planet_spark.sources.pbf_encoder import packed
 
     buf = packed(1, [0, 1, 127, 128, 300, 2**40])
     # strip the field header (1 byte) + length varint
@@ -25,7 +25,7 @@ def test_packed_varint_vectorized_decode():
 
 
 def test_packed_sint_delta_roundtrip():
-    from tests.pbf_encoder import packed_sint_delta as enc
+    from ohsome_planet_spark.sources.pbf_encoder import packed_sint_delta as enc
 
     values = [5, 3, 10, -7, 10**12]
     buf = enc(1, values)

@@ -135,7 +135,7 @@ way_st = st.fixed_dictionaries(
     ways=st.lists(way_st, min_size=0, max_size=4),
 )
 def test_pbf_roundtrip_property(spark, tmp_path_factory, nodes, ways):
-    from tests.pbf_encoder import encode_block, write_pbf
+    from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
     from ohsome_planet_spark.sources.pbf import read_pbf
 
     # de-dup (id, version) pairs — the wire format itself permits them but

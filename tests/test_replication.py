@@ -19,9 +19,9 @@ from ohsome_planet_spark.streaming.replication import (
     filter_diff_against_state,
     latest_state,
     merge_latest_state,
-    rebuild_affected_ways,
     sequence_path,
 )
+from ohsome_planet_spark.operators.contributions import build_contributions
 from ohsome_planet_spark.schemas import NODE_SCHEMA, WAY_SCHEMA
 
 
@@ -170,10 +170,14 @@ class TestStateAndDiff:
             nodes_before + [(2, 2, ts(50), 9, 1, "u", True, {}, 2.0, 0.0)], NODE_SCHEMA
         )
         affected = spark.createDataFrame([(10,)], "osm_id bigint")
-        out = sorted(
-            rebuild_affected_ways(ways, node_hist, affected).collect(),
-            key=lambda r: r.osm_edits,
+        _, way_contribs = build_contributions(
+            node_hist.limit(0),
+            ways.join(affected, "osm_id", "left_semi"),
+            None,
+            node_hist,
+            ways,
         )
+        out = sorted(way_contribs.collect(), key=lambda r: r.osm_edits)
         assert [r.osm_minor_version for r in out] == [0, 1]
         assert out[1].valid_from == ts(50)
         assert out[0].valid_to == ts(50)
@@ -274,3 +278,35 @@ def test_waiter_sleep_interruptible():
     w = Waiter(shutdown_event=stop, clock=lambda: None)
     with pytest.raises(InterruptedError):
         w.sleep(5, "test")
+
+
+def test_start_state_when_only_the_latest_state_is_published(tmp_path):
+    """A mirror that publishes only its latest state (no state below it,
+    not even sequence 0): the earliest-state probe ends at that state
+    instead of bisecting forever."""
+    import signal
+
+    from ohsome_planet_spark.streaming.server import entity_server, file_fetch
+
+    state = "sequenceNumber=5\ntimestamp=2024-01-01T00\\:05\\:00Z\n"
+    (tmp_path / "000" / "000").mkdir(parents=True)
+    (tmp_path / "000" / "000" / "005.state.txt").write_text(state)
+    (tmp_path / "state.txt").write_text(state)
+    server = entity_server("local://mirror/", fetch=file_fetch(str(tmp_path)))
+    latest = server.get_latest_remote_state()
+
+    class Hung(BaseException):
+        """Escapes the transport's retry loop and its OSError-as-miss
+        mapping."""
+
+    def timeout(*_):
+        raise Hung("find_start_state_by_timestamp did not return")
+
+    previous = signal.signal(signal.SIGALRM, timeout)
+    signal.alarm(10)
+    try:
+        for target in (dt.datetime(2024, 1, 1, 0, 10), dt.datetime(2023, 1, 1)):
+            assert server.find_start_state_by_timestamp(target, latest).sequence == 5
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, previous)

@@ -334,7 +334,7 @@ def test_bulk_to_incremental_handoff(spark, handoff_mirror, tmp_path, capsys):
     Contributions2Parquet.java:109-201)."""
     from datetime import datetime, timezone
 
-    from tests.pbf_encoder import encode_block, write_pbf
+    from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
 
     def ms(iso):
         return int(datetime.fromisoformat(iso).replace(
@@ -394,3 +394,35 @@ def test_bulk_to_incremental_handoff(spark, handoff_mirror, tmp_path, capsys):
     peek = json.loads(capsys.readouterr().out)
     assert peek["n/5"]["entity"]["version"] == 2
     assert peek["n/5"]["ways"] == [20]
+
+
+def test_replication_output_has_the_bulk_columns(spark, mirror, tmp_path, capsys):
+    """`replications --jcb` without changesets or a country file writes
+    per-sequence parquet with the bulk import's columns: the default
+    ``changeset`` struct and an empty ``countries`` array included."""
+    from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
+
+    out = str(tmp_path / "out")
+    assert main([
+        "replications", "--data", str(tmp_path / "data"), "--parquet-data", out,
+        "--endpoint", f"file://{mirror}", "--jcb", "--start-sequence", "100",
+    ]) == 0
+    written = spark.read.parquet(os.path.join(out, "000/000/101.opc.parquet"))
+
+    pbf = str(tmp_path / "bulk.osh.pbf")
+    write_pbf(pbf, [encode_block(dense_nodes=[
+        dict(osm_id=1, version=1, ts_ms=1_000_000, changeset=10, uid=7,
+             user="alice", visible=True, tags={"amenity": "cafe"}, lon=1.0, lat=1.0),
+    ])])
+    bulk_out = str(tmp_path / "bulk")
+    assert main(["contributions", "--pbf", pbf, "--out", bulk_out]) == 0
+    capsys.readouterr()
+    # layer is the bulk output's latest/history partition directory
+    bulk = spark.read.parquet(bulk_out).drop("layer")
+
+    def columns(df):
+        return {f.name: f.dataType.simpleString() for f in df.schema.fields}
+
+    assert columns(written) == columns(bulk)
+    row = written.filter("osm_type = 'node' and osm_id = 1").first()
+    assert row.countries == [] and row.changeset.id == 11

@@ -95,7 +95,7 @@ def test_sql_cli_filter_composes_with_aggregate(tmp_path, capsys):
     """--filter + aggregate SQL: the filter must hit the views before the
     query runs, so a SELECT that projects away tags still works."""
     from ohsome_planet_spark.cli import main
-    from tests.pbf_encoder import encode_block, write_pbf
+    from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
     from tests.test_sql_views import NODES, RELS, WAYS
 
     pbf = str(tmp_path / "f.osh.pbf")

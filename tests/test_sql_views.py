@@ -29,7 +29,7 @@ RELS = [
 
 @pytest.fixture(scope="module")
 def dataset(spark, tmp_path_factory):
-    from tests.pbf_encoder import encode_block, write_pbf
+    from ohsome_planet_spark.sources.pbf_encoder import encode_block, write_pbf
 
     tmp = tmp_path_factory.mktemp("sqlviews")
     pbf = str(tmp / "fixture.osh.pbf")
