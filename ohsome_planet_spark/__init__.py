@@ -16,7 +16,7 @@ Layout
                  hashtags, text analytics.
 - ``operators``  relational operators: contribution synthesis windows,
                  temporal member merge (as-of), spatial join, dedup family,
-                 similarity search, multimodal plumbing.
+                 similarity search.
 - ``sources``    PBF / OSC / changeset-XML / testdata readers.
 - ``plans``      the query registry surfaced through ``__spark_entry__``.
 - ``streaming``  incremental replication as Structured-Streaming-style

@@ -814,80 +814,6 @@ def cmd_dedup_embeddings(args) -> int:
     return 0
 
 
-def cmd_wds(args) -> int:
-    """WebDataset shards as a user surface (`sources/tar.py`,
-    `operators/webdataset.py`): `pack` turns a documents parquet into
-    .tar shards (key.txt + key.json members, optional gzip), `list`
-    inventories shards back into a samples parquet. Both print a
-    one-line JSON report."""
-    import glob as _glob
-
-    from .session import get_spark
-
-    spark = get_spark(app_name="wds")
-    if args.wds_cmd == "pack":
-        from .operators.webdataset import write_wds_shards
-
-        docs = spark.read.parquet(args.input)
-        rows = docs.select(
-            F.concat(F.lit("doc"), F.col("doc_id").cast("string")).alias("key"),
-            F.col("text"),
-            F.to_json(F.struct("doc_id", "lang", "source")).alias("meta"),
-        ).repartition(args.partitions)
-        report = write_wds_shards(
-            rows,
-            args.out,
-            {"txt": "text", "json": "meta"},
-            samples_per_shard=args.samples_per_shard,
-            gzip_envelope=args.gzip,
-        )
-        agg = report.agg(
-            F.count("*").alias("shards"),
-            F.sum("n_samples").alias("samples"),
-            F.sum("n_bytes").alias("bytes"),
-        ).collect()[0]
-        print(json.dumps({
-            "shards": int(agg.shards),
-            "samples": int(agg.samples or 0),
-            "bytes": int(agg.bytes or 0),
-            "out": args.out,
-        }))
-        return 0
-
-    from .operators.webdataset import wds_samples
-
-    paths = sorted(_glob.glob(os.path.join(args.input, "*.tar*")))
-    if not paths:
-        print(json.dumps({"error": "no .tar shards found", "dir": args.input}))
-        return 2
-    shards = (
-        spark.read.format("binaryFile")
-        .load(paths)
-        .select(F.col("path").alias("shard_path"), F.col("content").alias("shard"))
-    )
-    samples = wds_samples(shards, "shard").select(
-        "shard_path",
-        "sample_idx",
-        "key",
-        "n_parts",
-        F.concat_ws(",", "exts").alias("exts"),
-    )
-    if args.out:
-        samples.write.mode("overwrite").parquet(args.out)
-    agg = samples.agg(
-        F.count("*").alias("samples"),
-        F.countDistinct("shard_path").alias("shards"),
-        F.sum("n_parts").alias("parts"),
-    ).collect()[0]
-    print(json.dumps({
-        "shards": int(agg.shards),
-        "samples": int(agg.samples),
-        "parts": int(agg.parts or 0),
-        "out": args.out,
-    }))
-    return 0
-
-
 def cmd_sql(args) -> int:
     """Run SQL over a written contributions dataset — the tutorial's
     'explore the produced parquet with DuckDB' workflow
@@ -1119,23 +1045,6 @@ def main(argv=None) -> int:
     cc.add_argument("--bucket-mode", choices=("rank", "cutoff"),
                     default="rank")
     cc.set_defaults(fn=cmd_ccnet)
-
-    wd = sub.add_parser(
-        "wds",
-        help="WebDataset shards: pack a documents parquet / list shards",
-    )
-    wsub = wd.add_subparsers(dest="wds_cmd", required=True)
-    wp = wsub.add_parser("pack", help="documents parquet -> .tar shards")
-    wp.add_argument("--input", required=True, help="documents parquet")
-    wp.add_argument("--out", required=True, help="shard output dir")
-    wp.add_argument("--samples-per-shard", type=int, default=1000)
-    wp.add_argument("--partitions", type=int, default=4)
-    wp.add_argument("--gzip", action="store_true")
-    wp.set_defaults(fn=cmd_wds)
-    wl = wsub.add_parser("list", help="shard dir -> samples inventory")
-    wl.add_argument("--input", required=True, help="dir of .tar shards")
-    wl.add_argument("--out", help="write samples parquet here")
-    wl.set_defaults(fn=cmd_wds)
 
     sq = sub.add_parser(
         "sql",

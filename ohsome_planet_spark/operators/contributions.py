@@ -389,24 +389,17 @@ def build_contributions(
     ``rels=None`` skips the relation stream (a store without relation
     history).
 
-    The J3 way merge + geometry bundle runs ONCE, staged over the emitted
-    ways plus the ways ``rels`` references; the way stream and the
-    relation member streams both read it (the reference memoizes member
-    way contributions the same way, ``Contribution.java:26-28``). The
-    per-type constructions are long blocking chains of py4j planning
-    round-trips, so they run on concurrent driver threads."""
+    With relations, the J3 way merge + geometry bundle runs ONCE, staged
+    over the emitted ways plus the ways ``rels`` references; the way
+    stream and the relation member streams both read it (the reference
+    memoizes member way contributions the same way,
+    ``Contribution.java:26-28``). Without relations the way stream is the
+    bundle's only reader, so it builds the bundle inline and nothing is
+    staged. The per-type constructions are long blocking chains of py4j
+    planning round-trips, so they run on concurrent driver threads."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..session import truncate_lineage
-
-    way_ids = ways.select("osm_id")
-    touched_way_ids = way_ids
-    if rels is not None:
-        touched_way_ids = touched_way_ids.unionByName(
-            rels.select(F.explode("members").alias("m"))
-            .filter(F.col("m.type") == "way")
-            .select(F.col("m.id").alias("osm_id"))
-        )
 
     with ThreadPoolExecutor(3) as ex:
 
@@ -418,6 +411,15 @@ def build_contributions(
         # the node stream does not read the bundle: its construction
         # overlaps the bundle's staging
         futs = [synthesized(node_contribution_events, nodes)]
+        if rels is None:
+            futs.append(synthesized(way_contribution_events, ways, node_history))
+            return tuple(f.result() for f in futs)
+        way_ids = ways.select("osm_id")
+        touched_way_ids = way_ids.unionByName(
+            rels.select(F.explode("members").alias("m"))
+            .filter(F.col("m.type") == "way")
+            .select(F.col("m.id").alias("osm_id"))
+        )
         # lineage-cut, not just persist: the bundle is re-embedded in the
         # way stream and (through the member merge) the relation stream;
         # persist alone leaves its full logical tree in each, re-walked by
@@ -430,11 +432,10 @@ def build_contributions(
             way_contribution_events, ways, node_history,
             bundled=bundled.join(way_ids.distinct(), "osm_id", "left_semi"),
         ))
-        if rels is not None:
-            futs.append(synthesized(
-                relation_contribution_events, rels, way_history, node_history,
-                member_limit=member_limit, bundled_ways=bundled,
-            ))
+        futs.append(synthesized(
+            relation_contribution_events, rels, way_history, node_history,
+            member_limit=member_limit, bundled_ways=bundled,
+        ))
         return tuple(f.result() for f in futs)
 
 

@@ -1,17 +1,13 @@
-"""Multimodal column operators for training-data pipelines.
+"""Media column operators.
 
 Images/audio/video travel as opaque ``binary`` columns with typed metadata
 structs; every kernel is a single Arrow-batched map pass (media bytes
-never shuffle, broadcast, or reach the driver). The decode surface is
-REAL where stdlib/numpy reach, stubbed only for perceptual codecs that
-need external libraries:
+never shuffle, broadcast, or reach the driver):
 
 - :func:`decode_media`        — PNG / GIF / JPEG (baseline + progressive)
                                 / baseline TIFF pixel decode
                                 (``functions/png.py`` / ``gif.py`` /
                                 ``jpeg.py`` / ``tiff.py``);
-- :func:`resize_media`        — exact-integer nearest-neighbor downscale
-                                over the decoded pixels;
 - :func:`decode_audio`        — WAV PCM, G.711 µ-law/A-law, IMA ADPCM and
                                 FLAC (``functions/wav.py`` / ``flac.py``);
 - :func:`audio_features`      — integer-exact energy/zero-crossings/peak;
@@ -20,10 +16,7 @@ need external libraries:
                                 slice-header parse (``functions/h264.py``);
 - :func:`sample_video_frames` — every-Nth MJPEG frame decode (sampling
                                 BEFORE decode);
-- :func:`with_media_meta` / :func:`decode_stub` / :func:`resize_plan` /
-  :func:`frame_sample_plan`   — the metadata pass plus the documented
-                                deterministic-fake seam for formats with
-                                no native decoder (mp3/aac/h264/...).
+- :func:`with_media_meta`     — byte length and magic-byte container kind.
 """
 
 from __future__ import annotations
@@ -33,13 +26,6 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.text import hash60_expr
-
-MEDIA_SCHEMA = (
-    "media_id bigint, media binary, kind string, n_bytes int,"
-    " fake_width int, fake_height int"
-)
 
 
 def _decode_media_real(payload: bytes) -> tuple[int, int, int, int | None]:
@@ -58,8 +44,8 @@ def _decode_media_real(payload: bytes) -> tuple[int, int, int, int | None]:
     LZW + interlace, ``functions/gif.py``) and baseline TIFF (strips,
     PackBits/LZW with early change + predictor, gray/RGB/palette/
     WhiteIsZero, both byte orders, ``functions/tiff.py``) decode for real
-    too. Other containers raise NotImplementedError and callers fall back
-    to the stub."""
+    too. Other containers raise NotImplementedError, which
+    :func:`decode_media` turns into null columns."""
     from ..functions.gif import GIF_MAGICS, decode_gif
     from ..functions.jpeg import (
         JPEG_SOI,
@@ -93,9 +79,7 @@ def _decode_media_real(payload: bytes) -> tuple[int, int, int, int | None]:
         "no native pixel decoder for this container (PNG/GIF/JPEG/TIFF "
         "decode "
         "natively; audio goes through decode_audio, video through "
-        "probe_video/sample_video_frames); other formats need an external "
-        "library not present in this environment — decode_stub provides "
-        "the deterministic fake"
+        "probe_video/sample_video_frames)"
     )
 
 
@@ -138,59 +122,12 @@ def with_media_meta(df: DataFrame, media_col: str = "media") -> DataFrame:
     )
 
 
-def fake_dims_expr(media: Column) -> tuple[Column, Column]:
-    """Deterministic fake dimensions from the content hash — stands in for
-    the decoded header until a real decoder is wired into
-    ``_decode_media_real``. Exactly reproducible in SQL (md5-based)."""
-    h = hash60_expr(F.hex(media))
-    # pure modular arithmetic: int64-exact in Spark, DuckDB and Python
-    # (integer division of a 60-bit hash through doubles loses precision)
-    return (
-        (F.pmod(h, F.lit(1920)) + 1).cast("int"),
-        (F.pmod(h, F.lit(1080)) + 1).cast("int"),
-    )
-
-
-def decode_stub(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """``mapInPandas`` decode plumbing: batches of binary payloads in, rows
-    with dimension metadata out. The per-item kernel is the deterministic
-    fake; the Arrow batch shape and schema are what a real decoder uses."""
-
-    cols = df.columns
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            widths, heights = [], []
-            for payload in pdf[media_col]:
-                if payload is None:
-                    widths.append(None)
-                    heights.append(None)
-                    continue
-                # real decoders plug in at _decode_media_real(payload)
-                # uppercase hex matches fake_dims_expr / F.hex exactly
-                h = int(
-                    hashlib.md5(bytes(payload).hex().upper().encode()).hexdigest()[:15], 16
-                )
-                widths.append(h % 1920 + 1)
-                heights.append(h % 1080 + 1)
-            out = pdf.copy()
-            out["fake_width"] = pd.array(widths, dtype="Int32")
-            out["fake_height"] = pd.array(heights, dtype="Int32")
-            yield out
-
-    schema = df.schema.simpleString()[7:-1] + ",fake_width int,fake_height int"
-    return df.mapInPandas(decode, schema)
-
-
 def decode_media(df: DataFrame, media_col: str = "media") -> DataFrame:
     """REAL decode via ``mapInPandas``: per-batch kernel calling
     :func:`_decode_media_real` (PNG: full pixel decode). Non-decodable or
     unsupported payloads yield null dims instead of failing the task —
-    at 100 TB a corrupt image must not kill the job. Same Arrow batch
-    shape as :func:`decode_stub`; columns ``width/height/channels/
-    pixel_sum`` appended."""
+    at 100 TB a corrupt image must not kill the job. Columns
+    ``width/height/channels/pixel_sum`` are appended."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct
@@ -382,8 +319,8 @@ def probe_adts_stream(df: DataFrame, media_col: str = "media") -> DataFrame:
     """REAL AAC ADTS transport probe via ``mapInPandas``: per-frame
     56-bit header walk (``functions/aac.py``) — profile/object type,
     sampling-frequency and channel-configuration tables, CRC skip,
-    multi-raw-data-block duration arithmetic. The AAC filterbank stays
-    behind the documented external-codec stub; undecodable payloads
+    multi-raw-data-block duration arithmetic. The AAC filterbank is not
+    decoded; undecodable payloads
     null out like every other media seam."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -423,7 +360,7 @@ def probe_ogg_stream(df: DataFrame, media_col: str = "media") -> DataFrame:
     (``functions/ogg.py``): CRC-verified page walk, lacing-table packet
     assembly incl. page-spanning packets, OpusHead / Vorbis ID header
     decode, granule-position duration arithmetic. SILK/CELT/MDCT audio
-    decode stays behind the documented external-codec stub; undecodable
+    is not decoded; undecodable
     payloads null out."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -461,8 +398,8 @@ def probe_webm_stream(df: DataFrame, media_col: str = "media") -> DataFrame:
     """REAL EBML/Matroska/WebM probe via ``mapInPandas``
     (``functions/ebml.py``): varint walk (non-minimal sizes, unknown-size
     segments), Info/Tracks/Cluster decode, SimpleBlock counting.
-    VP8/VP9/AV1/Opus frame decode stays behind the documented
-    external-codec stub; undecodable payloads null out."""
+    VP8/VP9/AV1/Opus frames are not decoded; undecodable payloads null
+    out."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.ebml import EbmlFormatError, probe_webm
@@ -497,57 +434,6 @@ def probe_webm_stream(df: DataFrame, media_col: str = "media") -> DataFrame:
         "n_clusters int,n_blocks int"
     )
     return df.mapInPandas(probe, schema)
-
-
-def subtitle_cues(df: DataFrame, media_col: str = "media") -> DataFrame:
-    """Explode SRT/WebVTT caption payloads into one row per cue
-    (``functions/subtitles.py``): magic-sniffed format, millisecond
-    timings, markup-stripped text. Unparseable payloads yield zero rows
-    (crawl captions are dirty by construction)."""
-    base_cols = [c for c in df.columns if c != media_col]
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.subtitles import SubtitleFormatError, parse_subtitles
-
-        rec_cols = ("fmt", "cue_idx", "start_ms", "end_ms", "cue_text")
-        for pdf in batches:
-            acc: dict[str, list] = {c: [] for c in base_cols}
-            acc.update({c: [] for c in rec_cols})
-            for _, r in pdf.iterrows():
-                try:
-                    fmt, cues = parse_subtitles(r[media_col])
-                except (SubtitleFormatError, ValueError, TypeError):
-                    continue
-                for i, cue in enumerate(cues):
-                    for c in base_cols:
-                        acc[c].append(r[c])
-                    acc["fmt"].append(fmt)
-                    acc["cue_idx"].append(i)
-                    acc["start_ms"].append(cue["start_ms"])
-                    acc["end_ms"].append(cue["end_ms"])
-                    acc["cue_text"].append(cue["text"])
-            out = pd.DataFrame(
-                {
-                    c: pd.Series(acc[c], dtype=object)
-                    for c in base_cols + list(rec_cols)
-                }
-            )
-            out["cue_idx"] = pd.array(acc["cue_idx"], dtype="Int32")
-            for k in ("start_ms", "end_ms"):
-                out[k] = pd.array(acc[k], dtype="Int64")
-            yield out
-
-    base_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema
-        if f.name != media_col
-    )
-    return df.mapInPandas(
-        walk,
-        base_schema
-        + ", fmt string, cue_idx int, start_ms bigint, end_ms bigint,"
-        " cue_text string",
-    )
 
 
 def audio_tags(df: DataFrame, media_col: str = "media") -> DataFrame:
@@ -591,8 +477,8 @@ def probe_ts_stream(df: DataFrame, media_col: str = "media") -> DataFrame:
     """REAL MPEG transport-stream probe via ``mapInPandas``
     (``functions/mpegts.py``): 188-byte packet walk, continuity
     checking, CRC-verified PAT/PMT, PCR duration, per-PID PES counts —
-    the HLS-segment metadata pass. Elementary codec payloads stay
-    behind the dedicated probes/stubs; undecodable payloads null out."""
+    the HLS-segment metadata pass. Elementary codec payloads are
+    left to the dedicated probes; undecodable payloads null out."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct
@@ -643,7 +529,7 @@ def probe_video(df: DataFrame, media_col: str = "media") -> DataFrame:
     ``width/height/duration_ms`` — the metadata pass a training pipeline
     runs on every video before spending decode cycles. Frame pixel decode
     is real for MJPEG-in-AVI (:func:`sample_video_frames`); other codecs
-    stay behind the external-codec stub."""
+    are not decoded."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct
@@ -685,8 +571,8 @@ def probe_h264(df: DataFrame, media_col: str = "media") -> DataFrame:
     frame-cropping arithmetic, ITU-T H.264 §7.4.2.1.1) and the
     slice-header prefix (IDR/I/P/B classification, frame_num) — the
     metadata/keyframe pass a video pipeline runs before spending
-    external-codec decode cycles. Macroblock reconstruction stays
-    behind the documented perceptual-codec stub."""
+    external-codec decode cycles. Macroblock reconstruction is
+    not done here."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.h264 import parse_annexb
@@ -758,112 +644,6 @@ def probe_h264(df: DataFrame, media_col: str = "media") -> DataFrame:
     return df.mapInPandas(probe, schema)
 
 
-def _decode_media_rows(payload: bytes) -> tuple[int, int, int, list]:
-    """(width, height, channels, pixel rows) for the formats whose pixel
-    decode is real (PNG / GIF / baseline+progressive JPEG / baseline
-    TIFF); raises on
-    anything else — the same seam contract as ``_decode_media_real``."""
-    from ..functions.gif import GIF_MAGICS, decode_gif
-    from ..functions.jpeg import JPEG_SOI, decode_jpeg
-    from ..functions.png import PNG_SIGNATURE, decode_png
-    from ..functions.tiff import TIFF_MAGICS, decode_tiff
-
-    payload = bytes(payload)
-    if payload[:8] == PNG_SIGNATURE:
-        return decode_png(payload)
-    if payload[:6] in GIF_MAGICS:
-        return decode_gif(payload)
-    if payload[:2] == JPEG_SOI:
-        return decode_jpeg(payload)
-    if payload[:4] in TIFF_MAGICS:
-        return decode_tiff(payload)
-    raise NotImplementedError("no native pixel decoder for this container")
-
-
-def resize_media(
-    df: DataFrame,
-    max_side: int = 512,
-    media_col: str = "media",
-    max_side_col: str | None = None,
-) -> DataFrame:
-    """REAL image resize through the multimodal seam: decode (PNG/GIF/
-    JPEG/TIFF), then nearest-neighbor downscale to fit ``max_side`` (never
-    upscale) with the floor source mapping ``sx = (x_t * w) // tw`` —
-    exact integer arithmetic, so the kernel is bit-deterministic and
-    oracle-replayable. Emits genuine ``width/height/target_width/
-    target_height/resized_pixel_sum``; undecodable payloads null out.
-
-    ``max_side_col`` switches to a per-row budget column (mixed-policy
-    collections). Scale shape: one Arrow-batched pass, numpy fancy
-    indexing per image; media bytes never leave the executors."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        import numpy as np
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("width", "height", "target_width", "target_height",
-                     "resized_pixel_sum")}
-            budgets = (
-                pdf[max_side_col] if max_side_col is not None
-                else [max_side] * len(pdf)
-            )
-            for payload, ms in zip(pdf[media_col], budgets):
-                try:
-                    w, h, ch, rows = _decode_media_rows(payload)
-                except (NotImplementedError, ValueError, TypeError):
-                    for k in cols:
-                        cols[k].append(None)
-                    continue
-                scale = min(1.0, float(ms) / float(max(w, h)))
-                tw = int(math.ceil(w * scale))
-                th = int(math.ceil(h * scale))
-                img = np.frombuffer(b"".join(bytes(r) for r in rows),
-                                    dtype=np.uint8).reshape(h, w * ch)
-                sy = (np.arange(th, dtype=np.int64) * h) // th
-                sx = (np.arange(tw, dtype=np.int64) * w) // tw
-                # gather whole source pixels (all channels per column)
-                colsel = (sx[:, None] * ch + np.arange(ch)[None, :]).ravel()
-                resized = img[sy][:, colsel]
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["target_width"].append(tw)
-                cols["target_height"].append(th)
-                cols["resized_pixel_sum"].append(int(resized.sum(dtype=np.int64)))
-            out = pdf.copy()
-            for k in ("width", "height", "target_width", "target_height"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            out["resized_pixel_sum"] = pd.array(
-                cols["resized_pixel_sum"], dtype="Int64"
-            )
-            yield out
-
-    schema = (
-        df.schema.simpleString()[7:-1]
-        + ",width int,height int,target_width int,target_height int,"
-        "resized_pixel_sum bigint"
-    )
-    return df.mapInPandas(resize, schema)
-
-
-def resize_plan(
-    df: DataFrame, max_side: int = 512, media_col: str = "media"
-) -> DataFrame:
-    """Resize plumbing: target dimensions computed natively from the decoded
-    (fake) dims; the pixel kernel itself is the stub seam
-    (:func:`resize_media` is the real-kernel counterpart for the formats
-    with native pixel decoders)."""
-    scale = F.least(
-        F.lit(1.0),
-        F.lit(max_side) / F.greatest(F.col("fake_width"), F.col("fake_height")),
-    )
-    return df.withColumn(
-        "target_width", F.ceil(F.col("fake_width") * scale).cast("int")
-    ).withColumn("target_height", F.ceil(F.col("fake_height") * scale).cast("int"))
-
-
 def sample_video_frames(
     df: DataFrame,
     every_n: int = 30,
@@ -922,12 +702,3 @@ def sample_video_frames(
     return df.mapInPandas(sample, schema)
 
 
-def frame_sample_plan(df: DataFrame, every_n: int = 30, max_frames: int = 8) -> DataFrame:
-    """Video frame-sampling plumbing: fake frame count from content length,
-    deterministic sampled indices exploded into one row per frame — the
-    exact shape a real ffmpeg-backed sampler produces."""
-    n_frames = (F.length("media") % 900 + 30).cast("int")
-    idx = F.slice(F.sequence(F.lit(0), n_frames - 1, F.lit(every_n)), 1, max_frames)
-    return df.withColumn("n_frames", n_frames).withColumn(
-        "frame_idx", F.explode(idx)
-    )

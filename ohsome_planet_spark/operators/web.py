@@ -4,8 +4,7 @@ training-data pipeline (WARC → HTTP body → HTML → text), feeding the
 quality/dedup/packing operators downstream.
 
 Both kernels are single Arrow-batched ``mapInPandas`` passes: archive
-bytes never shuffle, broadcast, or reach the driver (the same seam
-contract as ``operators/multimodal.py``). At 100 TB the unit of
+bytes never shuffle, broadcast, or reach the driver. At 100 TB the unit of
 parallelism is the WARC member — independently decodable per record —
 so files shard by byte range; here each row carries one archive."""
 

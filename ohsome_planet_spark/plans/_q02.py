@@ -2,7 +2,7 @@
 item 7: mechanical, zero-semantic split by CONTIGUOUS line range,
 so definition order — and therefore import-time oracle
 construction — is preserved exactly). Families in this slice:
-ANN family (IVF/kmeans/PQ/residual), capped sign-LSH kNN + SemDeDup, curation funnel, text quality/lang-id, multimodal image decode rows (JPEG/PNG/GIF start).
+ANN family (IVF/kmeans/PQ/residual), capped sign-LSH kNN + SemDeDup, curation funnel, text quality/lang-id.
 
 Each slice star-imports its predecessor (cumulative namespace
 chain), so cross-slice helper references resolve identically to
@@ -2105,524 +2105,6 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_a",
         "vec_b",
     )
-
-
-# ===========================================================================
-# multimodal plumbing (binary media columns, deterministic fake decode)
-# ===========================================================================
-
-
-@_register(
-    "multimodal_decode",
-    f"""
-    WITH media AS (
-      SELECT doc_id, encode(text) AS payload FROM documents
-    ), hashed AS (
-      SELECT doc_id,
-             CAST(octet_length(payload) AS INT) AS n_bytes,
-             {hash60_sql('hex(payload)')} AS h
-      FROM media
-    )
-    SELECT doc_id, n_bytes,
-           CAST(h % 1920 + 1 AS INT) AS fake_width,
-           CAST(h % 1080 + 1 AS INT) AS fake_height
-    FROM hashed ORDER BY doc_id
-    """,
-)
-def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal columns: text bytes as an opaque binary media column with
-    metadata + deterministic fake decode dims (the stubbed decode seam —
-    real image/audio decoders slot into operators/multimodal.py)."""
-    from ..operators.multimodal import fake_dims_expr
-
-    docs = _t(spark, sf_dir, "documents")
-    media = docs.select(
-        "doc_id", F.encode(F.col("text"), "UTF-8").alias("media")
-    )
-    w, h = fake_dims_expr(F.col("media"))
-    return media.select(
-        "doc_id",
-        F.length("media").cast("int").alias("n_bytes"),
-        w.alias("fake_width"),
-        h.alias("fake_height"),
-    ).orderBy("doc_id")
-
-
-@_register(
-    "multimodal_pipeline",
-    f"""
-    WITH media AS (
-      SELECT doc_id, encode(text) AS payload FROM documents
-    ), hashed AS (
-      SELECT doc_id,
-             CAST(octet_length(payload) AS INT) AS n_bytes,
-             {hash60_sql('hex(payload)')} AS h
-      FROM media
-    ), dims AS (
-      SELECT doc_id, n_bytes,
-             CAST(h % 1920 + 1 AS INT) AS fake_width,
-             CAST(h % 1080 + 1 AS INT) AS fake_height
-      FROM hashed
-    ), resized AS (
-      SELECT *, least(1.0, 512.0 / greatest(fake_width, fake_height)) AS scale
-      FROM dims
-    )
-    SELECT doc_id, fake_width, fake_height,
-           CAST(ceil(fake_width * scale) AS INT)  AS target_width,
-           CAST(ceil(fake_height * scale) AS INT) AS target_height,
-           CAST(n_bytes % 900 + 30 AS INT)        AS n_frames,
-           CAST(unnest(list_slice(range(0, n_bytes % 900 + 30, 30), 1, 8)) AS INT)
-                                                  AS frame_idx
-    FROM resized ORDER BY doc_id, frame_idx
-    """,
-)
-def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full multimodal chain: opaque binary media → ``mapInPandas``
-    decode (Arrow-batched stub kernel at the real-decoder seam) → native
-    resize targeting → per-frame sampling exploded one row per frame.
-    Everything except the stubbed pixel kernel is JVM-side; the decode
-    UDF sees exactly the batch shape a PIL/ffmpeg implementation would."""
-    from ..operators.multimodal import decode_stub, frame_sample_plan, resize_plan
-
-    docs = fan_out(_t(spark, sf_dir, "documents"))
-    media = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("media"))
-    frames = frame_sample_plan(resize_plan(decode_stub(media), max_side=512))
-    return staged_sort(
-        frames.select(
-        "doc_id",
-        "fake_width",
-        "fake_height",
-        "target_width",
-        "target_height",
-        "n_frames",
-        F.col("frame_idx").cast("int").alias("frame_idx"),
-    ),
-        "doc_id",
-        "frame_idx",
-    )
-
-
-@_register(
-    "multimodal_png_decode",
-    """
-    SELECT doc_id,
-           CAST(doc_id % 16 + 1 AS INT) AS width,
-           CAST(doc_id % 12 + 1 AS INT) AS height,
-           CAST(1 AS INT) AS channels,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 12 + 1),
-                 r -> list_transform(range(0, doc_id % 16 + 1),
-                   c -> (doc_id * 31 + r * 7 + c * 13) % 256)))) AS BIGINT)
-             AS pixel_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode through the multimodal seam: deterministic
-    grayscale pixels are encoded to genuine PNG bytes (zlib + per-row
-    filters cycling through all five filter types), then decoded back by
-    the stdlib decoder behind ``_decode_media_real``. The oracle computes
-    the expected dimensions and whole-image pixel sum arithmetically —
-    a single wrong byte in filter reversal breaks the hash. Both kernels
-    are Arrow-batched ``mapInPandas``; media bytes never leave the
-    executors."""
-    from ..operators.multimodal import decode_media
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.png import encode_png
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 16 + 1, d % 12 + 1
-                rows = [
-                    bytes((d * 31 + r * 7 + c * 13) % 256 for c in range(w))
-                    for r in range(h)
-                ]
-                payloads.append(
-                    encode_png(w, h, rows, row_filters=[(d + r) % 5 for r in range(h)])
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        decode_media(media)
-        .select("doc_id", "width", "height", "channels", "pixel_sum"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_resize",
-    """
-    WITH dims AS (
-      SELECT doc_id,
-             CAST(doc_id % 16 + 1 AS INT) AS w,
-             CAST(doc_id % 12 + 1 AS INT) AS h,
-             CAST(doc_id % 10 + 4 AS INT) AS ms
-      FROM documents
-    ), t AS (
-      SELECT doc_id, w, h,
-             CAST(ceil(w * least(1.0, CAST(ms AS DOUBLE) / greatest(w, h)))
-                  AS INT) AS tw,
-             CAST(ceil(h * least(1.0, CAST(ms AS DOUBLE) / greatest(w, h)))
-                  AS INT) AS th
-      FROM dims
-    )
-    SELECT doc_id, w AS width, h AS height,
-           tw AS target_width, th AS target_height,
-           CAST(list_sum(flatten(list_transform(range(0, th), y ->
-             list_transform(range(0, tw), x ->
-               (doc_id * 31 + ((y * h) // th) * 7 + ((x * w) // tw) * 13)
-                 % 256)))) AS BIGINT) AS resized_pixel_sum
-    FROM t ORDER BY doc_id
-    """,
-)
-def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image resize through the multimodal seam: the PNG-decode
-    fixture images (real zlib + filter-reversal decode) downscale to a
-    per-doc ``max_side`` budget with the exact-integer nearest-neighbor
-    kernel (``sx = (x_t*w)//tw``, floor mapping, never upscales). The
-    oracle replays the target-dimension float arithmetic and the resized
-    pixel sum arithmetically — a wrong scale clamp, ceil, source mapping
-    or decode defect breaks the hash."""
-    from ..operators.multimodal import resize_media
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.png import encode_png
-
-        for pdf in batches:
-            ids, payloads, budgets = [], [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 16 + 1, d % 12 + 1
-                rows = [
-                    bytes((d * 31 + r * 7 + c * 13) % 256 for c in range(w))
-                    for r in range(h)
-                ]
-                ids.append(d)
-                payloads.append(
-                    encode_png(w, h, rows,
-                               row_filters=[(d + r) % 5 for r in range(h)])
-                )
-                budgets.append(d % 10 + 4)
-            yield pd.DataFrame(
-                {"doc_id": ids, "media": payloads, "ms": budgets}
-            )
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary, ms int")
-    return staged_sort(
-        resize_media(media, max_side_col="ms")
-        .select("doc_id", "width", "height", "target_width", "target_height",
-                "resized_pixel_sum"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_jpeg_dims",
-    """
-    SELECT doc_id,
-           CAST(doc_id % 1919 + 1 AS INT) AS width,
-           CAST(doc_id % 1079 + 1 AS INT) AS height,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS INT) AS channels,
-           CAST(NULL AS BIGINT) AS pixel_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_jpeg_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL JPEG header decode through the multimodal seam: deterministic
-    baseline/progressive JPEG byte streams (varying APPn padding segments
-    and COM markers, so the marker-walk is exercised) are parsed back by
-    the stdlib SOFn parser behind ``_decode_media_real``. Dimensions and
-    channel counts are genuine; pixel_sum is null — JPEG entropy decode
-    stays behind the documented external-library stub. The oracle replays
-    the dimensions arithmetically."""
-    from ..operators.multimodal import decode_media
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.jpeg import encode_jpeg_header
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    encode_jpeg_header(
-                        d % 1919 + 1,
-                        d % 1079 + 1,
-                        channels=3 if d % 2 == 0 else 1,
-                        progressive=d % 3 == 0,
-                        n_app_segments=d % 4 + 1,
-                        comment=b"c" * (d % 7),
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        decode_media(media)
-        .select("doc_id", "width", "height", "channels", "pixel_sum"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_jpeg_pixels",
-    """
-    SELECT doc_id,
-           CAST((doc_id % 4 + 1) * 8 AS INT) AS width,
-           CAST((doc_id % 3 + 1) * 8 AS INT) AS height,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS INT) AS channels,
-           CAST((CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END) *
-             list_sum(flatten(list_transform(range(0, doc_id % 3 + 1), by ->
-               list_transform(range(0, doc_id % 4 + 1), bx ->
-                 64 * ((doc_id * 37 + bx * 11 + by * 23) % 256)))))
-             AS BIGINT) AS pixel_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_jpeg_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-JPEG PIXEL decode through the multimodal seam
-    (VERDICT r9 item 3): deterministic flat-8×8-block images — grayscale
-    for odd docs, gray-content RGB through 4:2:0 subsampling for even
-    docs, restart markers every ``doc_id % 5`` MCUs — are encoded to
-    genuine SOF0 byte streams (``functions/jpeg.py::encode_jpeg``) and
-    decoded back by the full huffman+IDCT pipeline behind
-    ``_decode_media_real``. Flat blocks make the lossy codec bit-exact
-    (only the DC coefficient is nonzero and it is an exact multiple of 8
-    at quant=1; gray content pins the chroma planes at 128 so 4:2:0 and
-    the color transform are lossless too), so the oracle computes the
-    whole-image pixel sum arithmetically — one wrong huffman code, DC
-    predictor, dequant step, IDCT basis entry, restart re-sync, upsample
-    or color-convert constant breaks the hash. Both kernels are
-    Arrow-batched ``mapInPandas``; media bytes never leave the executors."""
-    from ..operators.multimodal import decode_media
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.jpeg import encode_jpeg
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                bw, bh = d % 4 + 1, d % 3 + 1
-                channels = 3 if d % 2 == 0 else 1
-                rows = []
-                for r in range(bh * 8):
-                    row = bytearray()
-                    for c in range(bw * 8):
-                        v = (d * 37 + (c // 8) * 11 + (r // 8) * 23) % 256
-                        row += bytes([v] * channels)
-                    rows.append(bytes(row))
-                payloads.append(
-                    encode_jpeg(
-                        bw * 8, bh * 8, rows,
-                        channels=channels, quant=1,
-                        subsample=channels == 3,
-                        restart_interval=d % 5,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        decode_media(media)
-        .select("doc_id", "width", "height", "channels", "pixel_sum"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_jpeg_progressive",
-    """
-    SELECT doc_id,
-           CAST((doc_id % 4 + 1) * 8 AS INT) AS width,
-           CAST((doc_id % 3 + 1) * 8 AS INT) AS height,
-           CAST(CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END AS INT) AS channels,
-           CAST((CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 1 END) *
-             list_sum(flatten(list_transform(range(0, doc_id % 3 + 1), by ->
-               list_transform(range(0, doc_id % 4 + 1), bx ->
-                 64 * ((doc_id * 41 + bx * 17 + by * 29) % 256)))))
-             AS BIGINT) AS pixel_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PROGRESSIVE (SOF2) JPEG pixel decode through the multimodal
-    seam: the same flat-block corpus trick as ``multimodal_jpeg_pixels``
-    but encoded with the four-scan progressive script — DC first (Al=1),
-    DC refinement, per-component AC first, AC refinement with EOB runs —
-    so spectral selection AND successive approximation sit inside the
-    hash gate (one wrong refinement bit, EOBRUN count, or non-interleaved
-    block raster breaks it). Flat blocks keep the pipeline bit-exact, so
-    the oracle stays fully arithmetic."""
-    from ..operators.multimodal import decode_media
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.jpeg import encode_jpeg
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                bw, bh = d % 4 + 1, d % 3 + 1
-                channels = 3 if d % 2 == 0 else 1
-                rows = []
-                for r in range(bh * 8):
-                    row = bytearray()
-                    for c in range(bw * 8):
-                        v = (d * 41 + (c // 8) * 17 + (r // 8) * 29) % 256
-                        row += bytes([v] * channels)
-                    rows.append(bytes(row))
-                payloads.append(
-                    encode_jpeg(
-                        bw * 8, bh * 8, rows,
-                        channels=channels, quant=1,
-                        subsample=channels == 3, progressive=True,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        decode_media(media)
-        .select("doc_id", "width", "height", "channels", "pixel_sum"),
-        "doc_id",
-    )
-
-
-_GIF_PIX = (
-    "(((((doc_id*7 + x*3 + y*5) % 16) * 37) % 256)"
-    " + ((((doc_id*7 + x*3 + y*5) % 16) * 59) % 256)"
-    " + ((((doc_id*7 + x*3 + y*5) % 16) * 83) % 256))"
-)
-
-
-@_register(
-    "multimodal_gif_decode",
-    f"""
-    SELECT doc_id,
-           CAST(doc_id % 20 + 1 AS INT) AS width,
-           CAST(doc_id % 14 + 1 AS INT) AS height,
-           CAST(3 AS INT) AS channels,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 14 + 1),
-             y -> list_transform(range(0, doc_id % 20 + 1),
-               x -> {_GIF_PIX})))) AS BIGINT) AS pixel_sum,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 14 + 1),
-             y -> list_transform(range(0, doc_id % 20 + 1),
-               x -> (y * (doc_id % 20 + 1) + x + 1) * {_GIF_PIX}))))
-             AS BIGINT) AS weighted_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL GIF decode through the multimodal seam: deterministic
-    16-color index grids are LZW-compressed into genuine GIF89a bytes
-    (interlaced for even docs, comment-extension padding so the block
-    walk is exercised) and decoded back by ``functions/gif.py``. GIF is
-    lossless, so the oracle computes BOTH the plain pixel sum and a
-    position-WEIGHTED sum arithmetically — the weighted column is
-    order-sensitive, so a wrong interlace de-scramble or row order
-    breaks the hash even though the plain sum wouldn't."""
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.gif import encode_gif
-
-        pal = [((i * 37) % 256, (i * 59) % 256, (i * 83) % 256) for i in range(16)]
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 20 + 1, d % 14 + 1
-                idx = [
-                    (d * 7 + x * 3 + y * 5) % 16
-                    for y in range(h)
-                    for x in range(w)
-                ]
-                payloads.append(
-                    encode_gif(
-                        w, h, pal, idx,
-                        interlace=d % 2 == 0, n_extensions=d % 3,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.gif import decode_gif
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("width", "height", "channels", "pixel_sum", "weighted_sum")}
-            for payload in pdf["media"]:
-                w, h, c, rows = decode_gif(bytes(payload))
-                ps = 0
-                ws = 0
-                for y, row in enumerate(rows):
-                    for x in range(w):
-                        s = row[3 * x] + row[3 * x + 1] + row[3 * x + 2]
-                        ps += s
-                        ws += (y * w + x + 1) * s
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["channels"].append(c)
-                cols["pixel_sum"].append(ps)
-                cols["weighted_sum"].append(ws)
-            out = pdf.copy()
-            for k in ("width", "height", "channels"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("pixel_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="Int64")
-            yield out
-
-    return staged_sort(
-        media.mapInPandas(
-            decode,
-            "doc_id bigint, media binary, width int, height int,"
-            " channels int, pixel_sum bigint, weighted_sum bigint",
-        )
-        .select("doc_id", "width", "height", "channels", "pixel_sum",
-                "weighted_sum"),
-        "doc_id",
-    )
-
-
-_TIFF_PIXSUM = """
-CASE doc_id % 4
-  WHEN 0 THEN (doc_id*41 + x*7 + y*13) % 256
-  WHEN 1 THEN ((doc_id*41 + x*7 + y*13) % 256)
-            + ((doc_id*41 + x*7 + y*13 + 19) % 256)
-            + ((doc_id*41 + x*7 + y*13 + 38) % 256)
-  WHEN 2 THEN 255 - ((doc_id*41 + x*7 + y*13) % 256)
-  ELSE (((doc_id*41 + x*7 + y*13) % 16) * 37) % 256
-     + (((doc_id*41 + x*7 + y*13) % 16) * 59) % 256
-     + (((doc_id*41 + x*7 + y*13) % 16) * 83) % 256
-END
-"""
-
 
 
 __all__ = [n for n in dict(globals()) if not n.startswith("__")]

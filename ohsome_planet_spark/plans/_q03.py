@@ -2,7 +2,7 @@
 item 7: mechanical, zero-semantic split by CONTIGUOUS line range,
 so definition order — and therefore import-time oracle
 construction — is preserved exactly). Families in this slice:
-multimodal decode rows (TIFF/WAV/audio/video), resize/features, packing start, streaming rows.
+packing start, streaming rows.
 
 Each slice star-imports its predecessor (cumulative namespace
 chain), so cross-slice helper references resolve identically to
@@ -12,877 +12,6 @@ final namespace."""
 from __future__ import annotations
 
 from ._q02 import *  # noqa: F401,F403
-
-@_register(
-    "multimodal_tiff_decode",
-    f"""
-    SELECT doc_id,
-           CAST(doc_id % 13 + 1 AS INT) AS width,
-           CAST(doc_id % 9 + 1 AS INT) AS height,
-           CAST(CASE WHEN doc_id % 4 IN (1, 3) THEN 3 ELSE 1 END AS INT)
-             AS channels,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 9 + 1),
-             y -> list_transform(range(0, doc_id % 13 + 1),
-               x -> {_TIFF_PIXSUM})))) AS BIGINT) AS pixel_sum,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 9 + 1),
-             y -> list_transform(range(0, doc_id % 13 + 1),
-               x -> (y * (doc_id % 13 + 1) + x + 1) * ({_TIFF_PIXSUM})))))
-             AS BIGINT) AS weighted_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline-TIFF decode through the multimodal seam
-    (``functions/tiff.py``): deterministic pixel grids are written as
-    genuine TIFF bytes rotating through the format surface — photometric
-    gray/RGB/WhiteIsZero/palette by doc%4, compression none/PackBits/LZW
-    by doc%3 (LZW with horizontal-differencing predictor on even docs),
-    byte order II/MM by doc%2, multi-strip layout by doc%3 — and decoded
-    back. TIFF is lossless, so the oracle replays the pixel function
-    arithmetically; the position-WEIGHTED sum is order-sensitive, so a
-    wrong strip order, predictor direction, or palette fold breaks the
-    hash even when the plain sum survives."""
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.tiff import encode_tiff
-
-        pal = (
-            [((i * 37) % 256) << 8 for i in range(256)]
-            + [((i * 59) % 256) << 8 for i in range(256)]
-            + [((i * 83) % 256) << 8 for i in range(256)]
-        )
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = d % 13 + 1, d % 9 + 1
-                mode = d % 4
-                comp = (1, 32773, 5)[d % 3]
-                pred = 2 if (comp == 5 and d % 2 == 0 and mode != 3) else 1
-                if mode == 0:
-                    photo, ch = 1, 1
-                    val = lambda x, y, c: (d * 41 + x * 7 + y * 13) % 256  # noqa: E731
-                elif mode == 1:
-                    photo, ch = 2, 3
-                    val = lambda x, y, c: (d * 41 + x * 7 + y * 13 + 19 * c) % 256  # noqa: E731
-                elif mode == 2:
-                    photo, ch = 0, 1
-                    # stored sample v; WhiteIsZero decode yields 255 - v,
-                    # which is what the oracle replays
-                    val = lambda x, y, c: (d * 41 + x * 7 + y * 13) % 256  # noqa: E731
-                else:
-                    photo, ch = 3, 1
-                    val = lambda x, y, c: (d * 41 + x * 7 + y * 13) % 16  # noqa: E731
-                rows = [
-                    bytes(
-                        val(x, y, c)
-                        for x in range(w)
-                        for c in range(ch)
-                    )
-                    for y in range(h)
-                ]
-                payloads.append(
-                    encode_tiff(
-                        w, h, rows,
-                        channels=ch, compression=comp,
-                        big_endian=d % 2 == 1,
-                        rows_per_strip=d % 3 + 1,
-                        predictor=pred, photometric=photo,
-                        colormap=pal if mode == 3 else None,
-                        # every 5th doc uses the TILED organization
-                        # (16x16, zero-padded edges) — the oracle is
-                        # organization-independent pixel arithmetic
-                        tile_size=(16, 16) if d % 5 == 0 else None,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.tiff import decode_tiff
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("width", "height", "channels", "pixel_sum",
-                     "weighted_sum")}
-            for payload in pdf["media"]:
-                w, h, c, rows = decode_tiff(bytes(payload))
-                ps = 0
-                ws = 0
-                for y, row in enumerate(rows):
-                    for x in range(w):
-                        s = sum(row[c * x + i] for i in range(c))
-                        ps += s
-                        ws += (y * w + x + 1) * s
-                cols["width"].append(w)
-                cols["height"].append(h)
-                cols["channels"].append(c)
-                cols["pixel_sum"].append(ps)
-                cols["weighted_sum"].append(ws)
-            out = pdf.copy()
-            for k in ("width", "height", "channels"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("pixel_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="Int64")
-            yield out
-
-    return staged_sort(
-        media.mapInPandas(
-            decode,
-            "doc_id bigint, media binary, width int, height int,"
-            " channels int, pixel_sum bigint, weighted_sum bigint",
-        )
-        .select("doc_id", "width", "height", "channels", "pixel_sum",
-                "weighted_sum"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_wav_decode",
-    """
-    SELECT doc_id,
-           CAST(doc_id % 2 + 1 AS INT) AS channels,
-           CAST(8000 + (doc_id % 5) * 1000 AS INT) AS sample_rate,
-           CAST(CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS INT) AS bits,
-           CAST(doc_id % 50 + 1 AS INT) AS n_frames,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 50 + 1), f ->
-             list_transform(range(0, doc_id % 2 + 1), c ->
-               CASE WHEN doc_id % 3 = 0
-                    THEN (doc_id * 13 + f * 7 + c * 3) % 256
-                    ELSE (doc_id * 13 + f * 7 + c * 3) % 200 - 100 END))))
-             AS BIGINT) AS sample_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode through the multimodal seam: deterministic PCM
-    frames (8-bit unsigned / 16-bit signed, mono and stereo) are written
-    as genuine RIFF/WAVE bytes and decoded back by the stdlib parser
-    behind :func:`operators.multimodal.decode_audio`. PCM is lossless, so
-    the oracle computes the exact whole-stream sample sum arithmetically
-    — a wrong byte order, chunk walk, or sign convention breaks the hash.
-    Arrow-batched both ways; audio bytes never leave the executors."""
-    from ..operators.multimodal import decode_audio
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.wav import encode_wav
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch, n = d % 2 + 1, d % 50 + 1
-                bits = 8 if d % 3 == 0 else 16
-                frames = [
-                    tuple(
-                        (d * 13 + f * 7 + c * 3) % 256
-                        if bits == 8
-                        else (d * 13 + f * 7 + c * 3) % 200 - 100
-                        for c in range(ch)
-                    )
-                    for f in range(n)
-                ]
-                payloads.append(
-                    encode_wav(ch, 8000 + (d % 5) * 1000, bits, frames)
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        decode_audio(media)
-        .select("doc_id", "channels", "sample_rate", "bits", "n_frames",
-                "sample_sum"),
-        "doc_id",
-    )
-
-
-_G711_BYTE = "(doc_id * 13 + f * 11) % 256"
-_G711_ULAW = f"""(
-  CASE WHEN (255 - ({_G711_BYTE})) >= 128 THEN -1 ELSE 1 END *
-  ((((255 - ({_G711_BYTE})) % 16) * 8 + 132)
-    * (1 << (((255 - ({_G711_BYTE})) // 16) % 8)) - 132)
-)"""
-_G711_ALAW = f"""(
-  CASE WHEN xor({_G711_BYTE}, 85) >= 128 THEN 1 ELSE -1 END *
-  (CASE WHEN ((xor({_G711_BYTE}, 85) // 16) % 8) = 0
-        THEN (xor({_G711_BYTE}, 85) % 16) * 16 + 8
-        ELSE ((xor({_G711_BYTE}, 85) % 16) * 16 + 264)
-               * (1 << (((xor({_G711_BYTE}, 85) // 16) % 8) - 1)) END)
-)"""
-
-
-@_register(
-    "multimodal_g711_decode",
-    f"""
-    SELECT doc_id,
-           CAST(1 AS INT) AS channels,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(16 AS INT) AS bits,
-           CAST(doc_id % 40 + 1 AS INT) AS n_frames,
-           CAST(list_sum(list_transform(range(0, doc_id % 40 + 1), f ->
-             CASE WHEN doc_id % 2 = 0 THEN {_G711_ULAW}
-                  ELSE {_G711_ALAW} END)) AS BIGINT) AS sample_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_g711_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-telephony decode through the multimodal seam:
-    deterministic G.711 wire bytes wrap in RIFF/WAVE with format tag 7
-    (µ-law, even docs) or 6 (A-law, odd docs) and expand to linear PCM
-    through the stateless ITU segment/mantissa formulas inside the same
-    ``decode_audio`` kernel. The oracle replays both expansion formulas
-    byte-for-byte — a wrong complement mask, exponent shift or sign
-    convention on either law breaks the hash."""
-    from ..operators.multimodal import decode_audio
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.wav import TAG_ALAW, TAG_ULAW, encode_wav_g711
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                law = TAG_ULAW if d % 2 == 0 else TAG_ALAW
-                raw = bytes((d * 13 + f * 11) % 256 for f in range(d % 40 + 1))
-                payloads.append(encode_wav_g711(1, 8000, law, raw))
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        decode_audio(media)
-        .select("doc_id", "channels", "sample_rate", "bits", "n_frames",
-                "sample_sum"),
-        "doc_id",
-    )
-
-
-def _adpcm_oracle() -> str:
-    from ..functions.wav import _IMA_INDEX_TABLE, _IMA_STEP_TABLE
-
-    step_tbl = "[" + ", ".join(str(v) for v in _IMA_STEP_TABLE) + "]"
-    idx_tbl = "[" + ", ".join(str(v) for v in _IMA_INDEX_TABLE) + "]"
-    # the transition out of state f consumes nibble index f+1 - 0-based
-    nib = "((s.doc_id * 7 + (s.f + 1) * 5) % 16)"
-    step = f"({step_tbl}[s.idx + 1])"
-    diff = (
-        f"(({step} >> 3)"
-        f" + CASE WHEN {nib} & 4 <> 0 THEN {step} ELSE 0 END"
-        f" + CASE WHEN {nib} & 2 <> 0 THEN ({step} >> 1) ELSE 0 END"
-        f" + CASE WHEN {nib} & 1 <> 0 THEN ({step} >> 2) ELSE 0 END)"
-    )
-    pred2 = (
-        f"least(greatest(CASE WHEN {nib} & 8 <> 0"
-        f" THEN s.pred - {diff} ELSE s.pred + {diff} END, -32768), 32767)"
-    )
-    idx2 = f"least(greatest(s.idx + {idx_tbl}[({nib} % 8) + 1], 0), 88)"
-    return f"""
-    WITH RECURSIVE st AS (
-      SELECT doc_id,
-             CAST((doc_id % 5 + 1) * 8 AS INT) AS n,
-             -1 AS f,
-             CAST((doc_id * 31) % 200 - 100 AS INT) AS pred,
-             CAST((doc_id * 3) % 89 AS INT) AS idx,
-             CAST((doc_id * 31) % 200 - 100 AS BIGINT) AS total
-      FROM documents
-      UNION ALL
-      SELECT s.doc_id, s.n, s.f + 1,
-             CAST({pred2} AS INT),
-             CAST({idx2} AS INT),
-             s.total + {pred2}
-      FROM st s WHERE s.f + 1 < s.n
-    )
-    SELECT doc_id,
-           CAST(1 AS INT) AS channels,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(16 AS INT) AS bits,
-           CAST(n + 1 AS INT) AS n_frames,
-           CAST(total AS BIGINT) AS sample_sum
-    FROM st WHERE f = n - 1 ORDER BY doc_id
-    """
-
-
-@_register("multimodal_adpcm_decode", _adpcm_oracle())
-def multimodal_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossy-compressed audio through the multimodal seam: IMA/DVI
-    ADPCM (WAV format tag 0x11) — deterministic 4-bit nibble streams
-    with per-doc seed (predictor, step index) decode through the exact
-    integer state machine (``functions/wav.py::ima_adpcm_step``, pinned
-    against stdlib audioop for every transition in tests). The oracle is
-    a RECURSIVE CTE replaying the state machine transition-for-
-    transition in DuckDB — the first sequential-state codec the gate
-    hashes end-to-end."""
-    from ..operators.multimodal import decode_audio
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.wav import encode_wav_ima
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = (d % 5 + 1) * 8
-                nibs = [(d * 7 + f * 5) % 16 for f in range(n)]
-                payloads.append(
-                    encode_wav_ima(
-                        8000, (d * 31) % 200 - 100, (d * 3) % 89, nibs
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        decode_audio(media)
-        .select("doc_id", "channels", "sample_rate", "bits", "n_frames",
-                "sample_sum"),
-        "doc_id",
-    )
-
-
-_FLAC_SAMP = (
-    "(doc_id * 31 + f * 17 + c * 11) % (CASE WHEN doc_id % 3 = 0 THEN 256 "
-    "ELSE 65536 END) - (CASE WHEN doc_id % 3 = 0 THEN 128 ELSE 32768 END)"
-)
-
-
-@_register(
-    "multimodal_flac_decode",
-    f"""
-    SELECT doc_id,
-           CAST(doc_id % 2 + 1 AS INT) AS channels,
-           CAST(CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                                WHEN 2 THEN 11025 ELSE 44100 END AS INT)
-             AS sample_rate,
-           CAST(CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS INT) AS bits,
-           CAST(doc_id % 60 + 1 AS INT) AS n_frames,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 60 + 1), f ->
-             list_transform(range(0, doc_id % 2 + 1), c -> {_FLAC_SAMP}))))
-             AS BIGINT) AS sample_sum,
-           CAST(list_sum(flatten(list_transform(range(0, doc_id % 60 + 1), f ->
-             list_transform(range(0, doc_id % 2 + 1), c ->
-               (f * (doc_id % 2 + 1) + c + 1) * ({_FLAC_SAMP})))))
-             AS BIGINT) AS weighted_sum
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL compressed-audio decode through the multimodal seam:
-    deterministic PCM signals are FLAC-encoded into genuine bitstreams —
-    fixed predictors + Rice-partitioned residuals (4- and 5-bit
-    parameters, raw-escape partitions), all four stereo channel
-    assignments, odd block sizes, PADDING metadata blocks — and decoded
-    back by ``functions/flac.py`` (CRC-8/CRC-16/MD5-verified). FLAC is
-    lossless, so the oracle computes the exact sums arithmetically; the
-    position-WEIGHTED sum is frame/channel-order-sensitive, so a wrong
-    channel de-correlation (left/side vs mid/side) or frame order breaks
-    the hash even though the plain sum wouldn't."""
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.flac import (
-            CH_LEFT_SIDE,
-            CH_MID_SIDE,
-            CH_RIGHT_SIDE,
-            encode_flac,
-        )
-
-        modes = [None, CH_LEFT_SIDE, CH_RIGHT_SIDE, CH_MID_SIDE]
-        rates = [8000, 16000, 11025, 44100]
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch, n = d % 2 + 1, d % 60 + 1
-                bits = 8 if d % 3 == 0 else 16
-                half = 1 << (bits - 1)
-                frames = [
-                    tuple(
-                        (d * 31 + f * 17 + c * 11) % (2 * half) - half
-                        for c in range(ch)
-                    )
-                    for f in range(n)
-                ]
-                payloads.append(
-                    encode_flac(
-                        ch, rates[d % 4], bits, frames,
-                        block_size=16 + d % 50,
-                        stereo_mode=modes[(d // 2) % 4] if ch == 2 else None,
-                        partition_order=d % 3,
-                        rice2=d % 5 == 0,
-                        force_escape=d % 7 == 0,
-                        pad_metadata=(d % 4) * 3,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.flac import decode_flac
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("channels", "sample_rate", "bits", "n_frames",
-                     "sample_sum", "weighted_sum")}
-            for payload in pdf["media"]:
-                ch, rate, bits, frames = decode_flac(bytes(payload))
-                ss = 0
-                ws = 0
-                for f, fr in enumerate(frames):
-                    for c, s in enumerate(fr):
-                        ss += s
-                        ws += (f * ch + c + 1) * s
-                cols["channels"].append(ch)
-                cols["sample_rate"].append(rate)
-                cols["bits"].append(bits)
-                cols["n_frames"].append(len(frames))
-                cols["sample_sum"].append(ss)
-                cols["weighted_sum"].append(ws)
-            out = pdf.copy()
-            for k in ("channels", "sample_rate", "bits", "n_frames"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="Int64")
-            yield out
-
-    return staged_sort(
-        media.mapInPandas(
-            decode,
-            "doc_id bigint, media binary, channels int, sample_rate int,"
-            " bits int, n_frames int, sample_sum bigint, weighted_sum bigint",
-        )
-        .select("doc_id", "channels", "sample_rate", "bits", "n_frames",
-                "sample_sum", "weighted_sum"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_audio_features",
-    """
-    WITH base AS (
-      SELECT doc_id, doc_id % 2 + 1 AS ch, doc_id % 50 + 1 AS n
-      FROM documents
-    ), mono AS (
-      SELECT doc_id, ch, n,
-             list_transform(range(0, n), f ->
-               CAST(floor(list_sum(list_transform(range(0, ch), c ->
-                 (doc_id * 13 + f * 7 + c * 3) % 200 - 100))
-                 / CAST(ch AS DOUBLE)) AS BIGINT)) AS m
-      FROM base
-    )
-    SELECT doc_id,
-           CAST(ceil(n / 16.0) AS INT) AS n_analysis_frames,
-           CAST(list_sum(list_transform(m, v -> v * v)) AS BIGINT)
-             AS energy_total,
-           CAST(coalesce(list_sum(list_transform(range(1, n), i ->
-               CASE WHEN (m[i] < 0) <> (m[i + 1] < 0) THEN 1 ELSE 0 END)), 0)
-             AS INT) AS zero_crossings,
-           CAST(list_max(list_transform(m, v -> abs(v))) AS BIGINT)
-             AS peak_abs
-    FROM mono ORDER BY doc_id
-    """,
-)
-def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio feature extraction through the multimodal seam: the
-    same deterministic 16-bit PCM signal family travels as RIFF/WAVE for
-    even docs and as genuine FLAC (varying stereo decorrelation modes)
-    for odd docs — the feature kernel magic-sniffs and decodes both —
-    then integer-exact features: floor-downmixed mono lane, total energy
-    (Σ s²), zero-crossing count and peak amplitude. The oracle replays
-    every feature arithmetically; a wrong decode, downmix rounding or
-    sign convention on either codec path breaks the hash."""
-    from ..operators.multimodal import audio_features
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.flac import (
-            CH_LEFT_SIDE,
-            CH_MID_SIDE,
-            CH_RIGHT_SIDE,
-            encode_flac,
-        )
-        from ..functions.wav import encode_wav
-
-        modes = [None, CH_LEFT_SIDE, CH_RIGHT_SIDE, CH_MID_SIDE]
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch, n = d % 2 + 1, d % 50 + 1
-                frames = [
-                    tuple((d * 13 + f * 7 + c * 3) % 200 - 100
-                          for c in range(ch))
-                    for f in range(n)
-                ]
-                if d % 2 == 0:
-                    payloads.append(encode_wav(ch, 16000, 16, frames))
-                else:
-                    payloads.append(
-                        encode_flac(
-                            ch, 16000, 16, frames, block_size=16,
-                            stereo_mode=modes[(d // 2) % 4] if ch == 2 else None,
-                            partition_order=d % 2,
-                        )
-                    )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        audio_features(media, frame_len=16)
-        .select("doc_id", "n_analysis_frames", "energy_total",
-                "zero_crossings", "peak_abs"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_mp4_probe",
-    """
-    SELECT doc_id,
-           CAST(doc_id % 1904 + 16 AS INT) AS width,
-           CAST(doc_id % 1064 + 16 AS INT) AS height,
-           CAST((doc_id % 9000 + 1000) * 1000
-                // (CASE WHEN doc_id % 2 = 1 THEN 600 ELSE 1000 END)
-             AS BIGINT) AS duration_ms
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_mp4_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video container probe through the multimodal seam:
-    deterministic ISO-BMFF streams (mvhd v0/v1, classic-MOV 600 and
-    1000 timescales, free-box padding so the box walk is exercised) are
-    parsed back by :func:`operators.multimodal.probe_video`. Dimensions
-    (16.16 fixed point) and duration_ms are genuine; frame decode stays
-    behind the documented external-codec stub. The oracle replays the
-    fixed-point and timescale arithmetic."""
-    from ..operators.multimodal import probe_video
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.isobmff import encode_mp4_header
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    encode_mp4_header(
-                        d % 1904 + 16,
-                        d % 1064 + 16,
-                        duration=d % 9000 + 1000,
-                        timescale=600 if d % 2 == 1 else 1000,
-                        version=d % 2,
-                        extra_boxes=d % 4,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_video(media)
-        .select("doc_id", "width", "height", "duration_ms"),
-        "doc_id",
-    )
-
-
-_MP3_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id,
-    CASE doc_id % 3 WHEN 0 THEN 3 WHEN 1 THEN 2 ELSE 0 END AS version,
-    (doc_id // 3) % 3 AS layer,
-    doc_id % 3 AS sr_idx,
-    CAST(1 + doc_id % 2 AS INT) AS channels,
-    CAST(doc_id % 25 + 1 AS INT) AS nf,
-    doc_id % 256 AS padpat,
-    doc_id % 4 = 0 AS vary
-  FROM documents
-),
-t AS (
-  SELECT *,
-    CASE WHEN version = 3 THEN 0 ELSE 1 END AS vgroup,
-    CAST(CASE version
-      WHEN 3 THEN [44100, 48000, 32000][sr_idx + 1]
-      WHEN 2 THEN [22050, 24000, 16000][sr_idx + 1]
-      ELSE [11025, 12000, 8000][sr_idx + 1] END AS INT) AS rate
-  FROM cfg
-),
-t2 AS (
-  SELECT *,
-    CASE
-      WHEN vgroup = 0 AND layer = 0 THEN
-        [0,32,64,96,128,160,192,224,256,288,320,352,384,416,448]
-      WHEN vgroup = 0 AND layer = 1 THEN
-        [0,32,48,56,64,80,96,112,128,160,192,224,256,320,384]
-      WHEN vgroup = 0 THEN
-        [0,32,40,48,56,64,80,96,112,128,160,192,224,256,320]
-      WHEN layer = 0 THEN
-        [0,32,48,56,64,80,96,112,128,144,160,176,192,224,256]
-      ELSE [0,8,16,24,32,40,48,56,64,80,96,112,128,144,160]
-    END AS brt,
-    CASE WHEN layer = 0 THEN 384
-         WHEN layer = 1 OR version = 3 THEN 1152
-         ELSE 576 END AS spf
-  FROM t
-),
-fr AS (
-  SELECT *,
-    list_transform(range(0, nf), k -> CASE
-      WHEN vary THEN brt[5 + (doc_id + k) % 10 + 1]
-      ELSE brt[1 + doc_id % 14 + 1] END * 1000) AS brs,
-    list_transform(range(0, nf), k -> (padpat >> (k % 8)) & 1) AS pads
-  FROM t2
-),
-fb AS (
-  SELECT *,
-    list_sum(list_transform(range(0, nf), k -> CASE
-      WHEN layer = 0 THEN (12 * brs[k + 1] // rate + pads[k + 1]) * 4
-      WHEN layer = 1 OR vgroup = 0 THEN 144 * brs[k + 1] // rate + pads[k + 1]
-      ELSE 72 * brs[k + 1] // rate + pads[k + 1] END)) AS total_bytes
-  FROM fr
-)
-SELECT doc_id, rate AS sample_rate, channels,
-       nf AS n_frames,
-       CAST(nf * (spf * 1000000 // rate) AS BIGINT) AS duration_us,
-       CAST(CASE WHEN NOT vary OR nf = 1 THEN brs[1] // 1000
-            ELSE total_bytes * 8 * rate // (nf * spf) // 1000
-       END AS INT) AS bitrate_kbps,
-       CASE WHEN vary AND nf >= 2 THEN true
-            WHEN vary AND nf = 1 AND layer = 2 THEN true
-            ELSE false END AS is_vbr
-FROM fb ORDER BY doc_id
-"""
-
-
-@_register("multimodal_mp3_probe", _MP3_ORACLE)
-def multimodal_mp3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-audio frame walk through the multimodal seam
-    (``functions/mp3.py``): genuine sync-word frame sequences rotate the
-    published header tables — MPEG1/2/2.5 by doc%3, Layers I/II/III by
-    (doc//3)%3, all three sample-rate slots, mono/stereo, per-frame
-    padding bits from a doc-specific pattern, ID3v2 prefixes, and
-    varying-bitrate sequences with a first-frame Xing header on Layer III
-    — and the probe walks every frame (no size guessing). The oracle
-    replays the ISO 11172-3/13818-3 bitrate/rate/frame-size arithmetic
-    per frame, so one wrong table entry, slot rounding, or padding bit
-    breaks the hash."""
-    from ..operators.multimodal import probe_audio_stream
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mp3 import encode_mp3
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                version = (3, 2, 0)[d % 3]
-                layer = (d // 3) % 3
-                nf = d % 25 + 1
-                vary = d % 4 == 0
-                if vary:
-                    brs = [5 + (d + k) % 10 for k in range(nf)]
-                else:
-                    brs = [1 + d % 14] * nf
-                payloads.append(
-                    encode_mp3(
-                        version, layer, brs, d % 3,
-                        channels=1 + d % 2,
-                        padding_pattern=d % 256,
-                        id3_bytes=(d % 5) * 11,
-                        xing=vary and layer == 2,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_audio_stream(media)
-        .select("doc_id", "sample_rate", "channels", "n_frames",
-                "duration_us", "bitrate_kbps", "is_vbr"),
-        "doc_id",
-    )
-
-
-def _avi_jpeg_frame(d: int, f: int) -> "bytes":
-    """One deterministic flat-block grayscale JPEG frame (bit-exact at
-    quant=1, same construction as multimodal_jpeg_pixels)."""
-    from ..functions.jpeg import encode_jpeg
-
-    bw, bh = d % 3 + 1, d % 2 + 1
-    rows = []
-    for r in range(bh * 8):
-        rows.append(
-            bytes(
-                (d * 37 + f * 29 + (c // 8) * 11 + (r // 8) * 23) % 256
-                for c in range(bw * 8)
-            )
-        )
-    return encode_jpeg(bw * 8, bh * 8, rows, channels=1, quant=1)
-
-
-@_register(
-    "multimodal_avi_probe",
-    """
-    SELECT doc_id,
-           CAST((doc_id % 3 + 1) * 8 AS INT) AS width,
-           CAST((doc_id % 2 + 1) * 8 AS INT) AS height,
-           CAST((doc_id % 12 + 1) * 1000 // (15 + doc_id % 10) AS BIGINT)
-             AS duration_ms
-    FROM documents ORDER BY doc_id
-    """,
-)
-def multimodal_avi_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL AVI container probe: deterministic MJPEG AVIs (RIFF chunk
-    tree with strh/strf agreement checks, JUNK padding for odd docs,
-    idx1 index verified entry-by-entry against real chunk offsets) are
-    parsed back by ``functions/avi.py`` through the same ``probe_video``
-    seam as ISO-BMFF — the dispatcher sniffs the magic. The oracle
-    replays the rate/scale duration arithmetic."""
-    from ..operators.multimodal import probe_video
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.avi import encode_avi_mjpeg
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 12 + 1
-                payloads.append(
-                    encode_avi_mjpeg(
-                        (d % 3 + 1) * 8, (d % 2 + 1) * 8,
-                        [_avi_jpeg_frame(d, f) for f in range(n)],
-                        rate=15 + d % 10, scale=1,
-                        write_index=d % 3 != 1,
-                        junk_bytes=(d % 2) * 12,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_video(media)
-        .select("doc_id", "width", "height", "duration_ms"),
-        "doc_id",
-    )
-
-
-@_register(
-    "multimodal_avi_frame_sample",
-    """
-    WITH s AS (
-      SELECT doc_id,
-             UNNEST(list_transform(
-               range(0, least(4, ((doc_id % 12 + 1) + (doc_id % 3))
-                                  // (doc_id % 3 + 1))),
-               i -> i * (doc_id % 3 + 1))) AS frame_idx
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(frame_idx AS INT) AS frame_idx,
-           CAST(doc_id % 12 + 1 AS INT) AS n_frames,
-           CAST((doc_id % 3 + 1) * 8 AS INT) AS width,
-           CAST((doc_id % 2 + 1) * 8 AS INT) AS height,
-           CAST(64 * list_sum(flatten(list_transform(range(0, doc_id % 2 + 1),
-             by -> list_transform(range(0, doc_id % 3 + 1), bx ->
-               (doc_id * 37 + frame_idx * 29 + bx * 11 + by * 23) % 256))))
-             AS BIGINT) AS pixel_sum
-    FROM s ORDER BY doc_id, frame_idx
-    """,
-)
-def multimodal_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL end-to-end video frame decode: MJPEG-in-AVI payloads →
-    RIFF container walk → every-``k``-th frame sampled (k = doc_id%3+1,
-    capped at 4) → full JPEG huffman+IDCT decode per sampled frame → one
-    row per frame with its exact pixel sum (flat blocks are bit-exact at
-    quant=1). The oracle enumerates the same sampled indices and replays
-    the per-frame block arithmetic — a wrong chunk walk, frame order,
-    sampling stride or cap, or any JPEG decode defect breaks the hash."""
-    from ..operators.multimodal import sample_video_frames
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.avi import encode_avi_mjpeg
-
-        for pdf in batches:
-            ids, payloads, strides = [], [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 12 + 1
-                ids.append(d)
-                strides.append(d % 3 + 1)
-                payloads.append(
-                    encode_avi_mjpeg(
-                        (d % 3 + 1) * 8, (d % 2 + 1) * 8,
-                        [_avi_jpeg_frame(d, f) for f in range(n)],
-                        rate=24, scale=1, junk_bytes=(d % 2) * 8,
-                    )
-                )
-            yield pd.DataFrame(
-                {"doc_id": ids, "media": payloads, "stride": strides}
-            )
-
-    # the sampler takes one stride per call; fan the three stride classes
-    # through the operator and union. The class filter runs on doc_id
-    # BEFORE the encode seam (stride ≡ doc_id % 3 + 1 is deterministic),
-    # so every payload is encoded exactly once — filtering the encoded
-    # frame instead re-ran the opaque mapInPandas encode per class, 3×
-    # the Python-side work for identical output (guide §2.3/§4.1: an
-    # opaque seam defeats filter pushdown; apply the filter to its
-    # inputs yourself). At scale this is one pass per distinct sampling
-    # policy over that policy's slice, the shape a real pipeline with
-    # per-collection policies has.
-    parts = [
-        sample_video_frames(
-            docs.filter((F.col("doc_id") % 3 + 1) == k).mapInPandas(
-                encode, "doc_id bigint, media binary, stride int"
-            ),
-            every_n=k,
-            max_frames=4,
-        )
-        for k in (1, 2, 3)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return staged_sort(
-        out.select("doc_id", "frame_idx", "n_frames", "width", "height",
-                   "pixel_sum"),
-        "doc_id", "frame_idx",
-    )
 
 
 @_register(
@@ -2497,7 +1626,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # ===========================================================================
 # training-data curation: deterministic splits, TF-IDF, semantic dedup
 # ===========================================================================
@@ -2601,7 +1729,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 3)
         .orderBy("doc_id", "rank")
     )
-
 
 
 __all__ = [n for n in dict(globals()) if not n.startswith("__")]

@@ -2524,8 +2524,8 @@ def ohsome_contributions_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Web ingestion (Common Crawl front half): WARC record walk + HTML main-
 # text extraction — sources/warc.py, functions/html.py, operators/web.py.
-# Fixture WARCs are genuine wire bytes (per-record gzip on odd docs), the
-# same encode-then-decode gate pattern as the multimodal codecs.
+# Fixture WARCs are genuine wire bytes (per-record gzip on odd docs),
+# encoded then decoded inside the query.
 # ===========================================================================
 
 _WARC_INFO_PAYLOAD = "software: ohsome-planet-spark"

@@ -2,7 +2,7 @@
 item 7: mechanical, zero-semantic split by CONTIGUOUS line range,
 so definition order — and therefore import-time oracle
 construction — is preserved exactly). Families in this slice:
-web ingestion (WARC/CC envelopes), URL dedup, unicode, JSONL, z-order layout rows, and the MPEG-1 Layer III rows.
+web ingestion (WARC/CC envelopes), URL dedup, unicode, JSONL, and z-order layout rows.
 
 Each slice star-imports its predecessor (cumulative namespace
 chain), so cross-slice helper references resolve identically to
@@ -12,6 +12,7 @@ final namespace."""
 from __future__ import annotations
 
 from ._q05 import *  # noqa: F401,F403
+
 
 def _tpl_html(d: int, text: str, lang: str, source: str) -> str:
     ent = "&#68;&amp;" if d % 2 == 0 else "&amp;"
@@ -710,552 +711,6 @@ def kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mp1_oracle() -> str:
-    # replay of ISO 11172-3 §2.4.3.3 Layer I requantization with the
-    # fixture's parameter functions; every step is IEEE-deterministic
-    # (dyadic scalefactors, one division + two multiplies per sample)
-    val = """
-      (2.0 / CAST(1 << ((doc_id + sb + c) % 21) AS DOUBLE))
-      * (CAST(1 << (((doc_id + sb + 2*c) % 3) + 1) AS DOUBLE)
-         / CAST((1 << (((doc_id + sb + 2*c) % 3) + 1)) - 1 AS DOUBLE))
-      * (CAST(xor((doc_id + f*7 + c*3 + sb*5 + s*11)
-                  % (1 << (((doc_id + sb + 2*c) % 3) + 1)),
-              1 << ((doc_id + sb + 2*c) % 3)) AS DOUBLE)
-           / CAST(1 << ((doc_id + sb + 2*c) % 3) AS DOUBLE)
-         - 1.0
-         + 1.0 / CAST(1 << (((doc_id + sb + 2*c) % 3) + 1) AS DOUBLE))
-    """
-    w = "(((f * (1 + doc_id % 2) + c) * 32 + sb) * 12 + s + 1)"
-    body = f"""
-      flatten(list_transform(range(0, doc_id % 4 + 1), f ->
-        flatten(list_transform(range(0, 1 + doc_id % 2), c ->
-          flatten(list_transform(range(0, 32), sb ->
-            CASE WHEN (doc_id + sb + 2*c) % 3 = 0
-                 THEN CAST([] AS DOUBLE[])
-                 ELSE list_transform(range(0, 12), s -> {{expr}})
-            END))))))
-    """
-    return f"""
-    SELECT doc_id,
-           CAST([44100, 48000, 32000][doc_id % 3 + 1] AS INT) AS sample_rate,
-           CAST(1 + doc_id % 2 AS INT) AS channels,
-           CAST(doc_id % 4 + 1 AS INT) AS n_frames,
-           round(coalesce(list_sum({body.format(expr=val)}), 0.0), 6)
-             AS sample_sum,
-           round(coalesce(list_sum({body.format(expr=f"({val}) * {w}")}),
-                          0.0), 6) AS weighted_sum
-    FROM documents ORDER BY doc_id
-    """
-
-
-@_register("multimodal_mp1_decode", _mp1_oracle())
-def multimodal_mp1_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer I SAMPLE decode through the multimodal seam
-    (``functions/mp3.py::decode_mp1_subbands``): genuine Layer I frames —
-    4-bit allocations, 6-bit scalefactors, MSB-packed raw samples — are
-    requantized per ISO 11172-3 §2.4.3.3 in the subband domain. The
-    fixture keeps every arithmetic step IEEE-deterministic (scalefactor
-    indices are multiples of 3, so scf = 2·2^-k is an exact dyadic), and
-    the oracle replays the requantization formula term-for-term; the
-    position-WEIGHTED sum pins bit order, channel interleave, and frame
-    order. The synthesis filterbank (the perceptual half) is documented
-    out of scope — subband samples are the bitstream's exact content."""
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mp3 import encode_mp1
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch = 1 + d % 2
-                alloc = [
-                    [(d + sb + 2 * c) % 3 for sb in range(32)]
-                    for c in range(ch)
-                ]
-                scf = [
-                    [3 * ((d + sb + c) % 21) for sb in range(32)]
-                    for c in range(ch)
-                ]
-
-                def sample_fn(f, c, sb, s, d=d, alloc=alloc):
-                    nb = alloc[c][sb] + 1
-                    return (d + f * 7 + c * 3 + sb * 5 + s * 11) % (1 << nb)
-
-                payloads.append(
-                    encode_mp1(
-                        alloc, scf, None,
-                        sr_idx=d % 3, br_idx=14, channels=ch,
-                        n_frames=d % 4 + 1, sample_fn=sample_fn,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mp3 import decode_mp1_subbands
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("sample_rate", "channels", "n_frames", "sample_sum",
-                     "weighted_sum")}
-            for payload in pdf["media"]:
-                rate, ch, nf, frames = decode_mp1_subbands(bytes(payload))
-                ss = 0.0
-                ws = 0.0
-                for f, chans in enumerate(frames):
-                    for c, sbs in enumerate(chans):
-                        for sb, vals in enumerate(sbs):
-                            for s, v in enumerate(vals):
-                                ss += v
-                                ws += v * (
-                                    ((f * ch + c) * 32 + sb) * 12 + s + 1
-                                )
-                cols["sample_rate"].append(rate)
-                cols["channels"].append(ch)
-                cols["n_frames"].append(nf)
-                cols["sample_sum"].append(round(ss, 6))
-                cols["weighted_sum"].append(round(ws, 6))
-            out = pdf.copy()
-            for k in ("sample_rate", "channels", "n_frames"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="float64")
-            yield out
-
-    return staged_sort(
-        media.mapInPandas(
-            decode,
-            "doc_id bigint, media binary, sample_rate int, channels int,"
-            " n_frames int, sample_sum double, weighted_sum double",
-        )
-        .select("doc_id", "sample_rate", "channels", "n_frames",
-                "sample_sum", "weighted_sum"),
-        "doc_id",
-    )
-
-
-def _mp2_oracle() -> str:
-    """DuckDB replay of the Layer II fixture: allocation-table selection,
-    per-(c,sb) allocation/scfsi/scalefactor derivation, group-code
-    degrouping, and the §2.4.3.4 requantization — term-for-term the same
-    IEEE arithmetic as ``decode_mp2_subbands`` (C = 2^nb/m and the
-    dyadic D/scf/s''' terms are exact; the two multiplies round
-    identically)."""
-    from ..functions.mp3 import (
-        _MP2_NB,
-        mp2_alloc_table,
-        mp2_table_for,
-    )
-
-    rates = [44100, 48000, 32000]
-    per_ch_kbps = [48, 64, 96, 160]
-    tbl_names = []
-    sblimits = []
-    for r24 in range(24):
-        rate = rates[r24 % 3]
-        ch = 1 + r24 % 2
-        name = mp2_table_for(rate, per_ch_kbps[r24 % 4])
-        tbl_names.append("abcd".index(name))
-        sblimits.append(len(mp2_alloc_table(name)))
-    steps_all = "[" + ",".join(
-        "[" + ",".join(
-            "[" + ",".join(str(m) for m in sb_steps) + "]"
-            for sb_steps in mp2_alloc_table(n)
-        ) + "]"
-        for n in "abcd"
-    ) + "]"
-    nb_case = ("CASE m " + " ".join(
-        f"WHEN {m} THEN {nb}" for m, nb in sorted(_MP2_NB.items())
-    ) + " END")
-
-    idx_expr = """
-      CASE WHEN (doc_id + sb + c) % 2 <> 0 THEN 0
-           WHEN sb = doc_id % 3 THEN 3
-           WHEN sb = 24 AND doc_id % 4 >= 2 AND (doc_id + c) % 5 = 2 THEN 3
-           ELSE 1 + (doc_id + sb + 2*c) % 2 END
-    """
-    # part -> transmitted scalefactor slot under scfsi=(d+sb+c)%4
-    trans_idx = """
-      CASE (doc_id + sb + c) % 4
-        WHEN 0 THEN (s // 12)
-        WHEN 1 THEN (CASE WHEN s // 12 <= 1 THEN 0 ELSE 1 END)
-        WHEN 2 THEN 0
-        ELSE (CASE WHEN s // 12 = 0 THEN 0 ELSE 1 END) END
-    """
-    scf = f"""
-      (2.0 / CAST(1 << ((doc_id + sb + c + ({trans_idx})) % 21) AS DOUBLE))
-    """
-    code = """
-      CASE WHEN m IN (3, 5, 9)
-           THEN ((doc_id + f*7 + (s//3)*5 + sb*11 + c*13) % (m*m*m))
-                // CASE s % 3 WHEN 0 THEN 1 WHEN 1 THEN m ELSE m*m END % m
-           ELSE (doc_id + f*7 + (s//3)*5 + (s%3)*3 + sb*11 + c*13) % m END
-    """
-    val = f"""
-      ({scf}) * (
-        (CAST(1 << nb AS DOUBLE) / CAST(m AS DOUBLE)) * (
-          CAST(({code}) AS DOUBLE) / CAST(1 << (nb - 1) AS DOUBLE) - 1.0
-          + CAST((1 << nb) - m + 1 AS DOUBLE) / CAST(1 << nb AS DOUBLE)
-        )
-      )
-    """
-    w = "(((f * (1 + doc_id % 2) + c) * 30 + sb) * 36 + s + 1)"
-    body = f"""
-      flatten(list_transform(range(0, doc_id % 3 + 1), f ->
-        flatten(list_transform(range(0, 1 + doc_id % 2), c ->
-          flatten(list_transform(
-            range(0, [{",".join(map(str, sblimits))}][doc_id % 24 + 1]),
-            sb ->
-            flatten(list_transform([{idx_expr}], idx ->
-              CASE WHEN idx = 0
-                   THEN list_transform(range(0, 36), s -> 0.0)
-                   ELSE flatten(list_transform(
-                     [({steps_all})
-                       [[{",".join(map(str, tbl_names))}][doc_id % 24 + 1]
-                        + 1][sb + 1][idx + 1]], m ->
-                     flatten(list_transform([{nb_case}], nb ->
-                       list_transform(range(0, 36), s -> {{expr}})
-                     ))))
-              END))))))))
-    """
-    return f"""
-    SELECT doc_id,
-           CAST([44100, 48000, 32000][doc_id % 3 + 1] AS INT) AS sample_rate,
-           CAST(1 + doc_id % 2 AS INT) AS channels,
-           CAST(doc_id % 3 + 1 AS INT) AS n_frames,
-           round(coalesce(list_sum({body.format(expr=val)}), 0.0), 6)
-             AS sample_sum,
-           round(coalesce(list_sum({body.format(expr=f"({val}) * {w}")}),
-                          0.0), 6) AS weighted_sum
-    FROM documents WHERE doc_id < 120 ORDER BY doc_id
-    """
-
-
-@_register("multimodal_mp2_decode", _mp2_oracle())
-def multimodal_mp2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer II SAMPLE decode through the multimodal seam
-    (``functions/mp3.py::decode_mp2_subbands``): genuine Layer II frames
-    — Annex-B table-selected allocations (all four tables B.2a-d are hit
-    across the doc grid), scfsi-shared scalefactors, GROUPED 3/5/9-step
-    codes degrouped least-significant-first, and ungrouped codes up to
-    the 16-bit 65535-step class — requantized per ISO 11172-3 §2.4.3.4.
-    Scalefactor indices are multiples of 3 (exact dyadics) and C/D are
-    exact closed forms of the published Table 3-C.3 constants, so every
-    arithmetic step is IEEE-deterministic; the oracle replays the decode
-    term-for-term and the position-weighted sum pins bit order, channel
-    interleave, scfsi sharing, and frame order.
-
-    The grid is TRIMMED to doc_id < 120 (5 full cycles of the %24
-    rate/channel/table matrix × every %5 residue — lcm(24,5)): the
-    coverage property, not the doc count, is the referee
-    (tests/test_mp2.py::test_gate_grid_coverage_at_120 asserts all four
-    tables, both channel modes, all rates, all scfsi modes, grouped and
-    max-step classes, and the sb-24 4th-slot case are still hit)."""
-    from ..functions.mp3 import mp2_alloc_table, mp2_table_for
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id").filter(F.col("doc_id") < 120)
-    _BR_IDX = {(0, 1): 2, (0, 2): 6, (1, 1): 4, (1, 2): 8,
-               (2, 1): 6, (2, 2): 10, (3, 1): 9, (3, 2): 13}
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mp3 import encode_mp2
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ch = 1 + d % 2
-                rate = [44100, 48000, 32000][d % 3]
-                p = d % 4
-                table = mp2_alloc_table(
-                    mp2_table_for(rate, [48, 64, 96, 160][p])
-                )
-                sblimit = len(table)
-
-                def idx_fn(c, sb, d=d, p=p):
-                    if (d + sb + c) % 2 != 0:
-                        return 0
-                    if sb == d % 3:
-                        return 3
-                    if sb == 24 and p >= 2 and (d + c) % 5 == 2:
-                        return 3
-                    return 1 + (d + sb + 2 * c) % 2
-
-                alloc = [
-                    [idx_fn(c, sb) for sb in range(sblimit)]
-                    for c in range(ch)
-                ]
-                scfsi = [
-                    [(d + sb + c) % 4 for sb in range(sblimit)]
-                    for c in range(ch)
-                ]
-
-                def code_fn(f, c, sb, g, k, d=d, table=table, alloc=alloc):
-                    m = table[sb][alloc[c][sb]]
-                    if m in (3, 5, 9):
-                        v = (d + f * 7 + g * 5 + sb * 11 + c * 13) % (
-                            m * m * m
-                        )
-                        return (v // (m**k)) % m
-                    return (
-                        d + f * 7 + g * 5 + k * 3 + sb * 11 + c * 13
-                    ) % m
-
-                payloads.append(
-                    encode_mp2(
-                        alloc, scfsi,
-                        lambda c, sb, i, d=d: 3 * ((d + sb + c + i) % 21),
-                        code_fn,
-                        sr_idx=d % 3, br_idx=_BR_IDX[(p, ch)],
-                        channels=ch, n_frames=1 + d % 3,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mp3 import decode_mp2_subbands
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("sample_rate", "channels", "n_frames", "sample_sum",
-                     "weighted_sum")}
-            for payload in pdf["media"]:
-                rate, ch, nf, frames = decode_mp2_subbands(bytes(payload))
-                ss = 0.0
-                ws = 0.0
-                for f, chans in enumerate(frames):
-                    for c, sbs in enumerate(chans):
-                        for sb, vals in enumerate(sbs):
-                            for s, v in enumerate(vals):
-                                ss += v
-                                ws += v * (
-                                    ((f * ch + c) * 30 + sb) * 36 + s + 1
-                                )
-                cols["sample_rate"].append(rate)
-                cols["channels"].append(ch)
-                cols["n_frames"].append(nf)
-                cols["sample_sum"].append(round(ss, 6))
-                cols["weighted_sum"].append(round(ws, 6))
-            out = pdf.copy()
-            for k in ("sample_rate", "channels", "n_frames"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="float64")
-            yield out
-
-    return staged_sort(
-        media.mapInPandas(
-            decode,
-            "doc_id bigint, media binary, sample_rate int, channels int,"
-            " n_frames int, sample_sum double, weighted_sum double",
-        )
-        .select("doc_id", "sample_rate", "channels", "n_frames",
-                "sample_sum", "weighted_sum"),
-        "doc_id",
-    )
-
-
-def _mp2_joint_oracle() -> str:
-    """DuckDB replay of the JOINT-stereo Layer II fixture: fixed table
-    B.2a (48 kHz / 192 kbps-per-channel), per-doc intensity bound
-    4·(doc%4+1). Below the bound everything is per-channel; at/above it
-    allocation and sample codes drop their channel term (ONE shared code
-    set) while scalefactors stay per-channel — the §A.2.2.2 sharing
-    rule, hash-pinned."""
-    from ..functions.mp3 import _MP2_NB, mp2_alloc_table
-
-    steps_a = "[" + ",".join(
-        "[" + ",".join(str(m) for m in sb_steps) + "]"
-        for sb_steps in mp2_alloc_table("a")
-    ) + "]"
-    nb_case = ("CASE m " + " ".join(
-        f"WHEN {m} THEN {nb}" for m, nb in sorted(_MP2_NB.items())
-    ) + " END")
-    bound = "(4 * (doc_id % 4) + 4)"
-    idx_expr = f"""
-      CASE WHEN sb < {bound}
-           THEN CASE WHEN (doc_id + sb + c) % 2 <> 0 THEN 0
-                     ELSE 1 + (doc_id + sb + 2*c) % 2 END
-           ELSE CASE WHEN (doc_id + sb) % 2 <> 0 THEN 0
-                     ELSE 1 + (doc_id + sb) % 2 END END
-    """
-    trans_idx = """
-      CASE (doc_id + sb + c) % 4
-        WHEN 0 THEN (s // 12)
-        WHEN 1 THEN (CASE WHEN s // 12 <= 1 THEN 0 ELSE 1 END)
-        WHEN 2 THEN 0
-        ELSE (CASE WHEN s // 12 = 0 THEN 0 ELSE 1 END) END
-    """
-    scf = f"""
-      (2.0 / CAST(1 << ((doc_id + sb + c + ({trans_idx})) % 21) AS DOUBLE))
-    """
-    cc = f"(CASE WHEN sb < {bound} THEN c ELSE 0 END)"
-    code = f"""
-      CASE WHEN m IN (3, 5, 9)
-           THEN ((doc_id + f*7 + (s//3)*5 + sb*11 + {cc}*13) % (m*m*m))
-                // CASE s % 3 WHEN 0 THEN 1 WHEN 1 THEN m ELSE m*m END % m
-           ELSE (doc_id + f*7 + (s//3)*5 + (s%3)*3 + sb*11 + {cc}*13) % m
-      END
-    """
-    val = f"""
-      ({scf}) * (
-        (CAST(1 << nb AS DOUBLE) / CAST(m AS DOUBLE)) * (
-          CAST(({code}) AS DOUBLE) / CAST(1 << (nb - 1) AS DOUBLE) - 1.0
-          + CAST((1 << nb) - m + 1 AS DOUBLE) / CAST(1 << nb AS DOUBLE)
-        )
-      )
-    """
-    w = "(((f * 2 + c) * 30 + sb) * 36 + s + 1)"
-    body = f"""
-      flatten(list_transform(range(0, doc_id % 2 + 1), f ->
-        flatten(list_transform(range(0, 2), c ->
-          flatten(list_transform(range(0, 27), sb ->
-            flatten(list_transform([{idx_expr}], idx ->
-              CASE WHEN idx = 0
-                   THEN list_transform(range(0, 36), s -> 0.0)
-                   ELSE flatten(list_transform(
-                     [({steps_a})[sb + 1][idx + 1]], m ->
-                     flatten(list_transform([{nb_case}], nb ->
-                       list_transform(range(0, 36), s -> {{expr}})
-                     ))))
-              END))))))))
-    """
-    return f"""
-    SELECT doc_id,
-           CAST(48000 AS INT) AS sample_rate,
-           CAST(2 AS INT) AS channels,
-           CAST(doc_id % 2 + 1 AS INT) AS n_frames,
-           round(coalesce(list_sum({body.format(expr=val)}), 0.0), 6)
-             AS sample_sum,
-           round(coalesce(list_sum({body.format(expr=f"({val}) * {w}")}),
-                          0.0), 6) AS weighted_sum
-    FROM documents WHERE doc_id < 120 ORDER BY doc_id
-    """
-
-
-@_register("multimodal_mp2_joint_decode", _mp2_joint_oracle())
-def multimodal_mp2_joint_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JOINT (intensity) stereo Layer II decode through the multimodal
-    seam — mode 01, the dominant real-world stereo MP2 form: at and
-    above the bound 4·(mode_extension+1) each subband carries ONE
-    allocation and ONE code set shared by both channels while each
-    channel applies its own scalefactors (ISO 11172-3 §A.2.2.2). The
-    fixture varies the bound per doc (ext = doc%4) with per-channel
-    content below it and shared content above; the oracle replays both
-    regimes and the position-weighted sum pins exactly where the sharing
-    starts — an off-by-one bound reads the whole rest of the frame
-    desynced."""
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id").filter(F.col("doc_id") < 120)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mp3 import encode_mp2, mp2_alloc_table
-
-        table = mp2_alloc_table("a")
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ext = d % 4
-                bound = 4 * (ext + 1)
-
-                def idx_fn(c, sb, d=d, bound=bound):
-                    if sb < bound:
-                        if (d + sb + c) % 2 != 0:
-                            return 0
-                        return 1 + (d + sb + 2 * c) % 2
-                    if (d + sb) % 2 != 0:
-                        return 0
-                    return 1 + (d + sb) % 2
-
-                alloc = [
-                    [idx_fn(c, sb) for sb in range(27)] for c in range(2)
-                ]
-                scfsi = [
-                    [(d + sb + c) % 4 for sb in range(27)] for c in range(2)
-                ]
-
-                def code_fn(f, c, sb, g, k, d=d, table=table, alloc=alloc,
-                            bound=bound):
-                    # the encoder calls with c=0 for shared subbands; the
-                    # cc term mirrors the oracle's CASE
-                    cc = c if sb < bound else 0
-                    m = table[sb][alloc[c][sb]]
-                    if m in (3, 5, 9):
-                        v = (d + f * 7 + g * 5 + sb * 11 + cc * 13) % (
-                            m * m * m
-                        )
-                        return (v // (m**k)) % m
-                    return (
-                        d + f * 7 + g * 5 + k * 3 + sb * 11 + cc * 13
-                    ) % m
-
-                payloads.append(
-                    encode_mp2(
-                        alloc, scfsi,
-                        lambda c, sb, i, d=d: 3 * ((d + sb + c + i) % 21),
-                        code_fn,
-                        sr_idx=1, br_idx=13, channels=2,
-                        n_frames=1 + d % 2, joint_ext=ext,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mp3 import decode_mp2_subbands
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("sample_rate", "channels", "n_frames", "sample_sum",
-                     "weighted_sum")}
-            for payload in pdf["media"]:
-                rate, ch, nf, frames = decode_mp2_subbands(bytes(payload))
-                ss = 0.0
-                ws = 0.0
-                for f, chans in enumerate(frames):
-                    for c, sbs in enumerate(chans):
-                        for sb, vals in enumerate(sbs):
-                            for s, v in enumerate(vals):
-                                ss += v
-                                ws += v * (
-                                    ((f * ch + c) * 30 + sb) * 36 + s + 1
-                                )
-                cols["sample_rate"].append(rate)
-                cols["channels"].append(ch)
-                cols["n_frames"].append(nf)
-                cols["sample_sum"].append(round(ss, 6))
-                cols["weighted_sum"].append(round(ws, 6))
-            out = pdf.copy()
-            for k in ("sample_rate", "channels", "n_frames"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="float64")
-            yield out
-
-    return staged_sort(
-        media.mapInPandas(
-            decode,
-            "doc_id bigint, media binary, sample_rate int, channels int,"
-            " n_frames int, sample_sum double, weighted_sum double",
-        )
-        .select("doc_id", "sample_rate", "channels", "n_frames",
-                "sample_sum", "weighted_sum"),
-        "doc_id",
-    )
-
-
 def _hilbert_oracle() -> str:
     from ..functions.zorder import hilbert_key_sql
 
@@ -1560,730 +1015,6 @@ def kmv_merge_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("true_distinct").cast("bigint").alias("true_distinct"),
         F.round(est, 4).alias("merged_estimate"),
     )
-
-
-# --- MPEG-1 Layer III sample decode (functions/mp3_l3.py) --------------------
-
-
-def _l3_grid(d: int) -> dict:
-    """Doc-grid parameters for the Layer III gate row — closed forms
-    shared verbatim by the Spark fixture encoder and the DuckDB oracle
-    (same discipline as the MP2 rows)."""
-    return {
-        "channels": 1 + d % 2,
-        "sr_idx": d % 3,
-        "n_frames": 1 + (d // 2) % 2,
-        "ms": d % 4 == 3,
-    }
-
-
-# per-(d, gr) region table rotation; vmax is each table's largest legal
-# magnitude (xlen-1, or 15 + 2^linbits - 1 for the ESC tables)
-_L3_TSETS = [[1, 5, 2], [5, 13, 1], [13, 16, 5],
-             [16, 24, 2], [24, 7, 1], [7, 15, 5]]
-_L3_VMAX = {1: 1, 2: 2, 5: 3, 7: 5, 13: 15, 15: 15, 16: 16, 24: 30}
-
-
-def _l3_granule(d: int, f: int, gr: int, c: int, sr: int) -> dict:
-    from ..functions.mp3_l3 import SFB_LONG, SLEN
-
-    bt = [0, 2, 1, 3][(d + 2 * f + gr) % 4]
-    sc = (d + gr + c) % 16
-    slen1, slen2 = SLEN[sc]
-    npairs = 12 + ((d + gr) * 7) % 40
-    nquads = (d + 2 * gr + c) % 6
-    tsel = list(_L3_TSETS[(d + gr) % 6])
-    if bt != 0:
-        tsel = tsel[:2] + [0]
-        r0e, r1e = 36, 576
-    else:
-        bands = SFB_LONG[sr]
-        r0e, r1e = bands[8], bands[14]
-    lines = []
-    for i in range(2 * npairs):
-        region = 0 if i < r0e else (1 if i < r1e else 2)
-        vmax = _L3_VMAX[tsel[region]] if tsel[region] else 0
-        m = (d + 11 * i + 3 * gr + 5 * c + f) % (vmax + 1)
-        lines.append(-m if (d + i + gr) % 2 == 1 else m)
-    quads = [
-        tuple(((d + 5 * i + j + gr) % 3) - 1 for j in range(4))
-        for i in range(nquads)
-    ]
-    g = {
-        "block_type": bt,
-        "global_gain": 200 + (d + 3 * f + 5 * gr + 7 * c) % 16,
-        "scalefac_compress": sc,
-        "preflag": (d + gr) % 2 if bt != 2 else 0,
-        "scalefac_scale": (d + c) % 2,
-        "subblock_gain": [(d + gr + w) % 3 for w in range(3)]
-        if bt == 2 else [0, 0, 0],
-        "table_select": tsel,
-        "count1table_select": (d + gr) % 2,
-        "lines": lines,
-        "quads": quads,
-    }
-    if bt == 2:
-        g["sf"] = [
-            [(d + 3 * sfb + w + gr) % (1 << (slen1 if sfb < 6 else slen2))
-             for w in range(3)]
-            for sfb in range(12)
-        ]
-    else:
-        g["sf"] = [
-            (d + 3 * sfb + gr + 2 * c)
-            % (1 << (slen1 if sfb < 11 else slen2))
-            for sfb in range(21)
-        ]
-    return g
-
-
-def _mp3_l3_oracle() -> str:
-    """DuckDB replay of the Layer III fixture grid, RELATIONAL form (one
-    row per spectral line — the list-lambda form was quadratic in the
-    engine): the intended huffman symbols from the closed forms,
-    §2.4.3.4.7 requantization with preflag/pretab/subblock gains,
-    short-block reorder (inlined permutation constants), MS stereo,
-    the printed alias butterflies as self-joins on the partner line,
-    the windowed 36/12-point IMDCT as a relational matmul against the
-    unnested 36×18 matrices (imdct_matrix — pytest-refereed against an
-    independent numpy derivation), overlap-add via a granule self-join,
-    and frequency inversion — term-for-term what decode_mp3_subbands
-    does from the genuine bitstream."""
-    from ..functions.mp3_l3 import (
-        ALIAS_CA,
-        ALIAS_CS,
-        PRETAB,
-        SFB_LONG,
-        SFB_SHORT,
-        SLEN,
-        imdct_matrix,
-        reorder_permutation,
-    )
-
-    def lit(xs):
-        return "[" + ",".join(
-            repr(x) if isinstance(x, float) else str(x) for x in xs
-        ) + "]"
-
-    def lit2(xss):
-        return "[" + ",".join(lit(xs) for xs in xss) + "]"
-
-    def sfb_of(bands, n):
-        out = []
-        for sfb in range(len(bands) - 1):
-            out += [sfb] * (bands[sfb + 1] - bands[sfb])
-        assert len(out) == n
-        return out
-
-    sfl = lit2([sfb_of(SFB_LONG[sr], 576) for sr in range(3)])
-    sfs_t = lit2([sfb_of(SFB_SHORT[sr], 192) for sr in range(3)])
-    perm = lit2([reorder_permutation(sr) for sr in range(3)])
-    mm = "[" + ",".join(lit2(imdct_matrix(bt)) for bt in range(4)) + "]"
-    cs, ca = lit(ALIAS_CS), lit(ALIAS_CA)
-    pre = lit(PRETAB)
-    slen1 = lit([s[0] for s in SLEN])
-    slen2 = lit([s[1] for s in SLEN])
-    tset_v = lit2([[_L3_VMAX.get(t, 0) for t in ts] for ts in _L3_TSETS])
-    r1e_long = lit([SFB_LONG[sr][14] for sr in range(3)])
-
-    return f"""
-    WITH params AS (
-      SELECT doc_id AS d,
-             CAST(1 + doc_id % 2 AS INT) AS ch,
-             CAST(doc_id % 3 AS INT) AS sr,
-             CAST(1 + (doc_id // 2) % 2 AS INT) AS nf,
-             (doc_id % 4 = 3) AS ms
-      FROM documents WHERE doc_id < 120
-    ), base AS (
-      SELECT d, ch, sr, nf, ms, g, g // 2 AS f, g % 2 AS gr, c,
-             CAST([0,2,1,3][CAST((d + 2 * (g // 2) + g % 2) % 4 AS INT) + 1]
-                  AS INT) AS bt,
-             200 + (d + 3 * (g // 2) + 5 * (g % 2) + 7 * c) % 16 AS gg,
-             CAST((d + g % 2 + c) % 16 AS INT) AS sc,
-             (d + c) % 2 AS sfs_flag,
-             12 + ((d + g % 2) * 7) % 40 AS npairs,
-             (d + 2 * (g % 2) + c) % 6 AS nquads,
-             CAST((d + g % 2) % 6 AS INT) AS tset
-      FROM params,
-           UNNEST(range(0, 2 * nf)) AS tg(g),
-           UNNEST(range(0, ch)) AS tc(c)
-    ), lines AS (
-      SELECT b.*,
-             CASE WHEN bt <> 2 THEN (d + gr) % 2 ELSE 0 END AS preflag,
-             i,
-             CASE WHEN bt = 2 THEN ({perm})[sr + 1][CAST(i AS INT) + 1]
-                  ELSE i END AS hidx
-      FROM base b, UNNEST(range(0, 576)) AS ti(i)
-    ), symv AS (
-      SELECT *,
-        CASE
-          WHEN hidx < 2 * npairs THEN
-            (CASE WHEN (d + hidx + gr) % 2 = 1 THEN -1 ELSE 1 END)
-            * ((d + 11 * hidx + 3 * gr + 5 * c + f)
-               % (({tset_v})[tset + 1][
-                    CASE WHEN hidx < 36 THEN 1
-                         WHEN bt <> 0 THEN 2
-                         WHEN hidx < ({r1e_long})[sr + 1] THEN 2
-                         ELSE 3 END] + 1))
-          WHEN hidx < 2 * npairs + 4 * nquads THEN
-            ((d + 5 * ((hidx - 2 * npairs) // 4)
-              + ((hidx - 2 * npairs) % 4) + gr) % 3) - 1
-          ELSE 0 END AS isv
-      FROM lines
-    ), xr0 AS (
-      SELECT d, ch, sr, nf, ms, g, c, bt, i,
-        CASE WHEN isv = 0 THEN 0.0 ELSE
-          (CASE WHEN isv < 0 THEN -1.0 ELSE 1.0 END)
-          * pow(abs(CAST(isv AS DOUBLE)), 4.0 / 3.0)
-          * pow(2.0,
-              CASE WHEN bt = 2 THEN
-                0.25 * (gg - 210)
-                - 2.0 * ((d + gr + ((i % 18) // 6)) % 3)
-                - 0.5 * (1 + sfs_flag) * (
-                    CASE WHEN ({sfs_t})[sr + 1]
-                              [CAST((i // 18) * 6 + (i % 6) AS INT) + 1] < 12
-                    THEN (d + 3 * ({sfs_t})[sr + 1]
-                                   [CAST((i // 18) * 6 + (i % 6) AS INT) + 1]
-                          + ((i % 18) // 6) + gr)
-                         % (1 << (CASE WHEN ({sfs_t})[sr + 1]
-                                    [CAST((i // 18) * 6 + (i % 6) AS INT) + 1] < 6
-                                  THEN ({slen1})[sc + 1]
-                                  ELSE ({slen2})[sc + 1] END))
-                    ELSE 0 END)
-              ELSE
-                0.25 * (gg - 210)
-                - 0.5 * (1 + sfs_flag) * (
-                    CASE WHEN ({sfl})[sr + 1][CAST(i AS INT) + 1] < 21
-                    THEN (d + 3 * ({sfl})[sr + 1][CAST(i AS INT) + 1]
-                          + gr + 2 * c)
-                         % (1 << (CASE WHEN ({sfl})[sr + 1]
-                                            [CAST(i AS INT) + 1] < 11
-                                  THEN ({slen1})[sc + 1]
-                                  ELSE ({slen2})[sc + 1] END))
-                         + preflag * ({pre})[({sfl})[sr + 1]
-                                             [CAST(i AS INT) + 1] + 1]
-                    ELSE 0 END)
-              END)
-        END AS xr
-      FROM symv
-    ), xr1 AS (
-      SELECT a.d, a.ch, a.sr, a.nf, a.g, a.bt, a.i, 0 AS c,
-             (a.xr + b.xr) / sqrt(2.0) AS xr
-      FROM xr0 a JOIN xr0 b
-        ON a.d = b.d AND a.g = b.g AND a.i = b.i
-       AND a.c = 0 AND b.c = 1 AND a.ms
-      UNION ALL
-      SELECT a.d, a.ch, a.sr, a.nf, a.g, a.bt, a.i, 1 AS c,
-             (a.xr - b.xr) / sqrt(2.0) AS xr
-      FROM xr0 a JOIN xr0 b
-        ON a.d = b.d AND a.g = b.g AND a.i = b.i
-       AND a.c = 0 AND b.c = 1 AND a.ms
-      UNION ALL
-      SELECT d, ch, sr, nf, g, bt, i, c, xr FROM xr0 WHERE NOT ms
-    ), aax AS (
-      SELECT x.d, x.ch, x.sr, x.nf, x.g, x.c, x.bt, x.i,
-        CASE
-          WHEN x.bt = 2 THEN x.xr
-          WHEN (x.i % 18) >= 10 AND (x.i // 18) < 31 THEN
-            x.xr * ({cs})[18 - CAST(x.i % 18 AS INT)]
-            - hi.xr * ({ca})[18 - CAST(x.i % 18 AS INT)]
-          WHEN (x.i % 18) <= 7 AND (x.i // 18) > 0 THEN
-            x.xr * ({cs})[CAST(x.i % 18 AS INT) + 1]
-            + lo.xr * ({ca})[CAST(x.i % 18 AS INT) + 1]
-          ELSE x.xr END AS aa
-      FROM xr1 x
-      LEFT JOIN xr1 hi
-        ON hi.d = x.d AND hi.g = x.g AND hi.c = x.c
-       AND hi.i = x.i + 2 * (17 - (x.i % 18)) + 1
-      LEFT JOIN xr1 lo
-        ON lo.d = x.d AND lo.g = x.g AND lo.c = x.c
-       AND lo.i = x.i - (2 * (x.i % 18) + 1)
-    ), mmt AS (
-      SELECT bt, n, k,
-             ({mm})[CAST(bt AS INT) + 1][CAST(n AS INT) + 1]
-                   [CAST(k AS INT) + 1] AS m
-      FROM UNNEST(range(0, 4)) AS tb(bt),
-           UNNEST(range(0, 36)) AS tn(n),
-           UNNEST(range(0, 18)) AS tk(k)
-    ), hyb AS (
-      SELECT a.d, a.ch, a.sr, a.nf, a.g, a.c, a.i // 18 AS sb, t.n,
-             sum(t.m * a.aa) AS raw
-      FROM aax a JOIN mmt t ON t.bt = a.bt AND t.k = a.i % 18
-      GROUP BY 1, 2, 3, 4, 5, 6, 7, 8
-    ), ov AS (
-      SELECT h.d, h.ch, h.sr, h.nf, h.g, h.c, h.sb, h.n,
-             h.raw + coalesce(p.raw, 0.0) AS s
-      FROM hyb h LEFT JOIN hyb p
-        ON p.d = h.d AND p.c = h.c AND p.sb = h.sb
-       AND p.n = h.n + 18 AND p.g = h.g - 1
-      WHERE h.n < 18
-    ), vals AS (
-      SELECT d, ch, sr, nf, g, c, sb, n,
-             CASE WHEN sb % 2 = 1 AND n % 2 = 1 THEN -s ELSE s END AS v
-      FROM ov
-    )
-    SELECT d AS doc_id,
-           CAST(CASE max(sr) WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS INT) AS sample_rate,
-           CAST(max(ch) AS INT) AS channels,
-           CAST(2 * max(nf) AS INT) AS n_granules,
-           -- per-value snap at 1e-4 then EXACT integer sums: the two
-           -- engines' IMDCT matmuls drift by <=1.2e-13 (measured, from
-           -- 18-term summation order), so a 6-dp rounded float sum was
-           -- a genuine flake (caught round 12); at the 1e-4 grid a
-           -- boundary flip needs a value within 1.2e-13 of a half-step
-           -- (~1e-3 expected flips per FULL gate run) while any real
-           -- decode bug moves values orders of magnitude more
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)) / 10000.0
-             AS sample_sum,
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)
-               * (((g * ch + c) * 32 + sb) * 18 + n + 1)) / 10000.0
-             AS weighted_sum
-    FROM vals GROUP BY d ORDER BY d
-    """
-
-
-@_register("multimodal_mp3_decode", _mp3_l3_oracle())
-def multimodal_mp3_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer III SAMPLE decode through the multimodal seam
-    (``functions/mp3_l3.py::decode_mp3_subbands``): genuine Layer III
-    frames — side info, scalefactors, big-values/count1 huffman regions
-    with linbits escapes (fixture-canonical codebooks over the published
-    alphabet — see the module docstring), §2.4.3.4.7 requantization with
-    preflag/pretab/subblock gains, short-block reorder, MS stereo, the
-    printed alias butterflies, and the windowed 36/12-point IMDCT with
-    window switching (all four block types across the grid), overlap-add
-    and frequency inversion. 120-doc grid (the MP2 trim discipline)
-    covering mono/stereo/MS × 3 rates × 1-2 frames × all block types ×
-    six region-table rotations including both ESC classes. The oracle
-    replays the entire synthesis term-for-term; the position-weighted
-    sum pins granule order, channel interleave, reorder, overlap
-    chaining, and the inversion pattern."""
-    docs = (
-        fan_out(_t(spark, sf_dir, "documents"))
-        .select("doc_id")
-        .filter(F.col("doc_id") < 120)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        from ..functions.mp3_l3 import decode_mp3_subbands, encode_mp3_l3
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("sample_rate", "channels", "n_granules", "sample_sum",
-                     "weighted_sum")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                p = _l3_grid(d)
-
-                def granule_fn(f, gr, c, d=d, sr=p["sr_idx"]):
-                    return _l3_granule(d, f, gr, c, sr)
-
-                payload = encode_mp3_l3(
-                    granule_fn,
-                    sr_idx=p["sr_idx"],
-                    br_idx=14,
-                    channels=p["channels"],
-                    n_frames=p["n_frames"],
-                    ms_stereo=p["ms"],
-                )
-                rate, ch, ng, grans = decode_mp3_subbands(payload)
-                # per-value 1e-4 snap + exact integer sums mirrors the
-                # oracle: accumulation order is irrelevant on BOTH
-                # engines, and the snap grid sits ~9 orders above the
-                # measured cross-engine IMDCT drift (<=1.2e-13)
-                ss = ws = 0
-                for g, chans_out in enumerate(grans):
-                    for c, sbs in enumerate(chans_out):
-                        for sb, vals in enumerate(sbs):
-                            for n, v in enumerate(vals):
-                                nv = math.floor(v * 10_000 + 0.5)
-                                ss += nv
-                                ws += nv * (
-                                    ((g * ch + c) * 32 + sb) * 18 + n + 1
-                                )
-                cols["sample_rate"].append(rate)
-                cols["channels"].append(ch)
-                cols["n_granules"].append(ng)
-                cols["sample_sum"].append(ss / 10_000)
-                cols["weighted_sum"].append(ws / 10_000)
-            out = pdf[["doc_id"]].copy()
-            for k in ("sample_rate", "channels", "n_granules"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="float64")
-            yield out
-
-    return staged_sort(
-        docs.mapInPandas(
-            run,
-            "doc_id bigint, sample_rate int, channels int,"
-            " n_granules int, sample_sum double, weighted_sum double",
-        ),
-        "doc_id",
-    )
-
-
-def _l3_intensity_granule(d: int, f: int, gr: int, c: int, sr: int) -> dict:
-    """Intensity-row grid: all long blocks, stereo. The LEFT channel is a
-    normal granule; the RIGHT channel's lines stop exactly at band
-    boundary ``bound_sfb = 8 + d%6`` (its zero region starts there) and
-    its scalefactor slots carry is_pos = (d + sfb + gr) % 8 — value 7
-    exercises the illegal-position MS/LR fallback."""
-    from ..functions.mp3_l3 import SFB_LONG, SLEN
-
-    bands = SFB_LONG[sr]
-    if c == 0:
-        sc = (d + gr) % 16
-        slen1, slen2 = SLEN[sc]
-        tsel = list(_L3_TSETS[(d + gr) % 6])
-        npairs = 12 + ((d + gr) * 7) % 40
-        nquads = (d + gr) % 6
-        r0e, r1e = bands[8], bands[14]
-        lines = []
-        for i in range(2 * npairs):
-            region = 0 if i < r0e else (1 if i < r1e else 2)
-            vmax = _L3_VMAX[tsel[region]] if tsel[region] else 0
-            m = (d + 11 * i + 3 * gr + f) % (vmax + 1)
-            lines.append(-m if (d + i + gr) % 2 == 1 else m)
-        return {
-            "block_type": 0,
-            "global_gain": 200 + (d + 3 * f + 5 * gr) % 16,
-            "scalefac_compress": sc,
-            "preflag": (d + gr) % 2,
-            "scalefac_scale": d % 2,
-            "subblock_gain": [0, 0, 0],
-            "table_select": tsel,
-            "count1table_select": (d + gr) % 2,
-            "lines": lines,
-            "quads": [
-                tuple(((d + 5 * i + j + gr) % 3) - 1 for j in range(4))
-                for i in range(nquads)
-            ],
-            "sf": [
-                (d + 3 * sfb + gr)
-                % (1 << (slen1 if sfb < 11 else slen2))
-                for sfb in range(21)
-            ],
-        }
-    bound_sfb = 8 + d % 6
-    npairs = bands[bound_sfb] // 2
-    tsel = list(_L3_TSETS[(d + gr + 3) % 6])
-    r0e, r1e = bands[8], bands[14]
-    lines = []
-    for i in range(2 * npairs):
-        region = 0 if i < r0e else (1 if i < r1e else 2)
-        vmax = _L3_VMAX[tsel[region]] if tsel[region] else 0
-        m = (d + 7 * i + 3 * gr + f + 1) % (vmax + 1)
-        lines.append(-m if (d + i + gr + 1) % 2 == 1 else m)
-    return {
-        "block_type": 0,
-        "global_gain": 200 + (d + 3 * f + 5 * gr + 7) % 16,
-        # (3, 3) slens: every is_pos 0..7 fits the scalefactor slots
-        "scalefac_compress": 13,
-        "preflag": 0,
-        "scalefac_scale": (d + 1) % 2,
-        "subblock_gain": [0, 0, 0],
-        "table_select": tsel,
-        "count1table_select": 0,
-        "lines": lines,
-        "quads": [],
-        "sf": [(d + sfb + gr) % 8 for sfb in range(21)],
-    }
-
-
-def _mp3_intensity_oracle() -> str:
-    """Relational DuckDB replay of the intensity-stereo Layer III grid:
-    both channels requantized (the right channel's scalefactors act as
-    REAL scalefactors below its zero bound and as is_pos ABOVE it),
-    then per line: MS below the bound when the MS flag is set, the
-    tan(is_pos·π/12) energy split at/above it, is_pos 7 falling back to
-    MS/LR — then the shared alias/IMDCT/overlap/inversion tail."""
-    import math as _math
-
-    from ..functions.mp3_l3 import (
-        ALIAS_CA,
-        ALIAS_CS,
-        PRETAB,
-        SFB_LONG,
-        SLEN,
-        imdct_matrix,
-    )
-
-    def lit(xs):
-        return "[" + ",".join(
-            repr(x) if isinstance(x, float) else str(x) for x in xs
-        ) + "]"
-
-    def lit2(xss):
-        return "[" + ",".join(lit(xs) for xs in xss) + "]"
-
-    def sfb_of(bands, n):
-        out = []
-        for sfb in range(len(bands) - 1):
-            out += [sfb] * (bands[sfb + 1] - bands[sfb])
-        assert len(out) == n
-        return out
-
-    sfl = lit2([sfb_of(SFB_LONG[sr], 576) for sr in range(3)])
-    m0 = lit2(imdct_matrix(0))
-    cs, ca = lit(ALIAS_CS), lit(ALIAS_CA)
-    pre = lit(PRETAB)
-    slen1 = lit([s[0] for s in SLEN])
-    slen2 = lit([s[1] for s in SLEN])
-    tset_v = lit2([[_L3_VMAX.get(t, 0) for t in ts] for ts in _L3_TSETS])
-    r1e_long = lit([SFB_LONG[sr][14] for sr in range(3)])
-    bounds = lit2([[SFB_LONG[sr][8 + rem] for rem in range(6)]
-                   for sr in range(3)])
-    tan = [_math.tan(p * _math.pi / 12) for p in range(6)]
-    kl = lit([t / (1 + t) for t in tan] + [1.0])
-    kr = lit([1 / (1 + t) for t in tan] + [0.0])
-
-    return f"""
-    WITH params AS (
-      SELECT doc_id AS d,
-             CAST(doc_id % 3 AS INT) AS sr,
-             CAST(1 + (doc_id // 2) % 2 AS INT) AS nf,
-             (doc_id % 2 = 0) AS ms
-      FROM documents WHERE doc_id < 120
-    ), base AS (
-      SELECT d, sr, nf, ms, g, g // 2 AS f, g % 2 AS gr, c,
-             ({bounds})[sr + 1][CAST(d % 6 AS INT) + 1] AS bound_line,
-             CASE WHEN c = 0
-                  THEN 200 + (d + 3 * (g // 2) + 5 * (g % 2)) % 16
-                  ELSE 200 + (d + 3 * (g // 2) + 5 * (g % 2) + 7) % 16
-             END AS gg,
-             CASE WHEN c = 0 THEN CAST((d + g % 2) % 16 AS INT)
-                  ELSE 13 END AS sc,
-             CASE WHEN c = 0 THEN d % 2 ELSE (d + 1) % 2 END AS sfs_flag,
-             CASE WHEN c = 0 THEN (d + g % 2) % 2 ELSE 0 END AS preflag,
-             CASE WHEN c = 0 THEN 12 + ((d + g % 2) * 7) % 40
-                  ELSE ({bounds})[sr + 1][CAST(d % 6 AS INT) + 1] // 2
-             END AS npairs,
-             CASE WHEN c = 0 THEN (d + g % 2) % 6 ELSE 0 END AS nquads,
-             CASE WHEN c = 0 THEN CAST((d + g % 2) % 6 AS INT)
-                  ELSE CAST((d + g % 2 + 3) % 6 AS INT) END AS tset
-      FROM params,
-           UNNEST(range(0, 2 * nf)) AS tg(g),
-           UNNEST(range(0, 2)) AS tc(c)
-    ), symv AS (
-      SELECT b.*, i,
-        CASE
-          WHEN i < 2 * npairs THEN
-            (CASE WHEN (d + i + gr + c) % 2 = 1 THEN -1 ELSE 1 END)
-            * ((d + (CASE WHEN c = 0 THEN 11 ELSE 7 END) * i
-                + 3 * gr + (CASE WHEN c = 0 THEN f ELSE f + 1 END))
-               % (({tset_v})[tset + 1][
-                    CASE WHEN i < 36 THEN 1
-                         WHEN i < ({r1e_long})[sr + 1] THEN 2
-                         ELSE 3 END] + 1))
-          WHEN c = 0 AND i < 2 * npairs + 4 * nquads THEN
-            ((d + 5 * ((i - 2 * npairs) // 4)
-              + ((i - 2 * npairs) % 4) + gr) % 3) - 1
-          ELSE 0 END AS isv
-      FROM base b, UNNEST(range(0, 576)) AS ti(i)
-    ), xr0 AS (
-      SELECT d, sr, nf, ms, g, gr, c, i, bound_line,
-        CASE WHEN isv = 0 THEN 0.0 ELSE
-          (CASE WHEN isv < 0 THEN -1.0 ELSE 1.0 END)
-          * pow(abs(CAST(isv AS DOUBLE)), 4.0 / 3.0)
-          * pow(2.0,
-              0.25 * (gg - 210)
-              - 0.5 * (1 + sfs_flag) * (
-                  CASE WHEN ({sfl})[sr + 1][CAST(i AS INT) + 1] < 21
-                  THEN (CASE WHEN c = 0
-                        THEN (d + 3 * ({sfl})[sr + 1][CAST(i AS INT) + 1]
-                              + gr)
-                             % (1 << (CASE WHEN ({sfl})[sr + 1]
-                                           [CAST(i AS INT) + 1] < 11
-                                      THEN ({slen1})[sc + 1]
-                                      ELSE ({slen2})[sc + 1] END))
-                        ELSE (d + ({sfl})[sr + 1][CAST(i AS INT) + 1]
-                              + gr) % 8 END)
-                       + preflag * ({pre})[({sfl})[sr + 1]
-                                           [CAST(i AS INT) + 1] + 1]
-                  ELSE 0 END))
-        END AS xr
-      FROM symv
-    ), st AS (
-      SELECT a.d, a.sr, a.nf, a.g, a.i, cc.c,
-        CASE
-          WHEN a.i >= a.bound_line THEN
-            CASE WHEN (CASE WHEN ({sfl})[a.sr + 1]
-                                 [CAST(a.i AS INT) + 1] < 21
-                       THEN (a.d + ({sfl})[a.sr + 1]
-                                   [CAST(a.i AS INT) + 1] + a.gr) % 8
-                       ELSE 7 END) = 7
-            THEN CASE WHEN a.ms
-                 THEN CASE WHEN cc.c = 0
-                      THEN (a.xr + b.xr) / sqrt(2.0)
-                      ELSE (a.xr - b.xr) / sqrt(2.0) END
-                 ELSE CASE WHEN cc.c = 0 THEN a.xr ELSE b.xr END END
-            ELSE a.xr * (CASE WHEN cc.c = 0
-                 THEN ({kl})[(CASE WHEN ({sfl})[a.sr + 1]
-                                        [CAST(a.i AS INT) + 1] < 21
-                              THEN (a.d + ({sfl})[a.sr + 1]
-                                    [CAST(a.i AS INT) + 1] + a.gr) % 8
-                              ELSE 7 END) + 1]
-                 ELSE ({kr})[(CASE WHEN ({sfl})[a.sr + 1]
-                                        [CAST(a.i AS INT) + 1] < 21
-                              THEN (a.d + ({sfl})[a.sr + 1]
-                                    [CAST(a.i AS INT) + 1] + a.gr) % 8
-                              ELSE 7 END) + 1] END)
-          END
-          WHEN a.ms THEN
-            CASE WHEN cc.c = 0 THEN (a.xr + b.xr) / sqrt(2.0)
-                 ELSE (a.xr - b.xr) / sqrt(2.0) END
-          ELSE CASE WHEN cc.c = 0 THEN a.xr ELSE b.xr END
-        END AS xr
-      FROM xr0 a
-      JOIN xr0 b ON a.d = b.d AND a.g = b.g AND a.i = b.i
-                AND a.c = 0 AND b.c = 1,
-           UNNEST(range(0, 2)) AS cc(c)
-    ), aax AS (
-      SELECT x.d, x.sr, x.nf, x.g, x.c, x.i,
-        CASE
-          WHEN (x.i % 18) >= 10 AND (x.i // 18) < 31 THEN
-            x.xr * ({cs})[18 - CAST(x.i % 18 AS INT)]
-            - hi.xr * ({ca})[18 - CAST(x.i % 18 AS INT)]
-          WHEN (x.i % 18) <= 7 AND (x.i // 18) > 0 THEN
-            x.xr * ({cs})[CAST(x.i % 18 AS INT) + 1]
-            + lo.xr * ({ca})[CAST(x.i % 18 AS INT) + 1]
-          ELSE x.xr END AS aa
-      FROM st x
-      LEFT JOIN st hi
-        ON hi.d = x.d AND hi.g = x.g AND hi.c = x.c
-       AND hi.i = x.i + 2 * (17 - (x.i % 18)) + 1
-      LEFT JOIN st lo
-        ON lo.d = x.d AND lo.g = x.g AND lo.c = x.c
-       AND lo.i = x.i - (2 * (x.i % 18) + 1)
-    ), mmt AS (
-      SELECT n, k,
-             ({m0})[CAST(n AS INT) + 1][CAST(k AS INT) + 1] AS m
-      FROM UNNEST(range(0, 36)) AS tn(n), UNNEST(range(0, 18)) AS tk(k)
-    ), hyb AS (
-      SELECT a.d, a.sr, a.nf, a.g, a.c, a.i // 18 AS sb, t.n,
-             sum(t.m * a.aa) AS raw
-      FROM aax a JOIN mmt t ON t.k = a.i % 18
-      GROUP BY 1, 2, 3, 4, 5, 6, 7
-    ), ov AS (
-      SELECT h.d, h.sr, h.nf, h.g, h.c, h.sb, h.n,
-             h.raw + coalesce(p.raw, 0.0) AS s
-      FROM hyb h LEFT JOIN hyb p
-        ON p.d = h.d AND p.c = h.c AND p.sb = h.sb
-       AND p.n = h.n + 18 AND p.g = h.g - 1
-      WHERE h.n < 18
-    ), vals AS (
-      SELECT d, sr, nf, g, c, sb, n,
-             CASE WHEN sb % 2 = 1 AND n % 2 = 1 THEN -s ELSE s END AS v
-      FROM ov
-    )
-    SELECT d AS doc_id,
-           CAST(CASE max(sr) WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS INT) AS sample_rate,
-           CAST(2 AS INT) AS channels,
-           CAST(2 * max(nf) AS INT) AS n_granules,
-           -- per-value snap at 1e-4 then EXACT integer sums: the two
-           -- engines' IMDCT matmuls drift by <=1.2e-13 (measured, from
-           -- 18-term summation order), so a 6-dp rounded float sum was
-           -- a genuine flake (caught round 12); at the 1e-4 grid a
-           -- boundary flip needs a value within 1.2e-13 of a half-step
-           -- (~1e-3 expected flips per FULL gate run) while any real
-           -- decode bug moves values orders of magnitude more
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)) / 10000.0
-             AS sample_sum,
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)
-               * (((g * 2 + c) * 32 + sb) * 18 + n + 1)) / 10000.0
-             AS weighted_sum
-    FROM vals GROUP BY d ORDER BY d
-    """
-
-
-@_register("multimodal_mp3_intensity_decode", _mp3_intensity_oracle())
-def multimodal_mp3_intensity_decode(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Layer III INTENSITY stereo decode (§2.4.3.4.9.3), the MP2 joint
-    row's Layer III counterpart: every doc is a stereo long-block stream
-    where the right channel's genuine lines stop exactly at a per-doc
-    band boundary (bound_sfb = 8 + d%6) and its scalefactor slots above
-    carry is_pos ∈ 0..7 — 7 exercising the illegal-position MS/LR
-    fallback; half the docs also set the MS flag (mode_ext = 3), so the
-    region below the bound processes as MS while the region above takes
-    the tan(is_pos·π/12) energy split. The oracle replays both
-    channels' requantization (the SAME right-channel scalefactor field
-    acting as a real scalefactor below the bound and as a position
-    above it), the per-line stereo decision, and the shared
-    alias/IMDCT/overlap/inversion tail."""
-    docs = (
-        fan_out(_t(spark, sf_dir, "documents"))
-        .select("doc_id")
-        .filter(F.col("doc_id") < 120)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        from ..functions.mp3_l3 import decode_mp3_subbands, encode_mp3_l3
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("sample_rate", "channels", "n_granules", "sample_sum",
-                     "weighted_sum")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sr = d % 3
-
-                def granule_fn(f, gr, c, d=d, sr=sr):
-                    return _l3_intensity_granule(d, f, gr, c, sr)
-
-                payload = encode_mp3_l3(
-                    granule_fn,
-                    sr_idx=sr,
-                    br_idx=14,
-                    channels=2,
-                    n_frames=1 + (d // 2) % 2,
-                    ms_stereo=d % 2 == 0,
-                    intensity=True,
-                )
-                rate, ch, ng, grans = decode_mp3_subbands(payload)
-                # per-value 1e-4 snap + exact integer sums mirrors the
-                # oracle: accumulation order is irrelevant on BOTH
-                # engines, and the snap grid sits ~9 orders above the
-                # measured cross-engine IMDCT drift (<=1.2e-13)
-                ss = ws = 0
-                for g, chans_out in enumerate(grans):
-                    for c, sbs in enumerate(chans_out):
-                        for sb, vals in enumerate(sbs):
-                            for n, v in enumerate(vals):
-                                nv = math.floor(v * 10_000 + 0.5)
-                                ss += nv
-                                ws += nv * (
-                                    ((g * ch + c) * 32 + sb) * 18 + n + 1
-                                )
-                cols["sample_rate"].append(rate)
-                cols["channels"].append(ch)
-                cols["n_granules"].append(ng)
-                cols["sample_sum"].append(ss / 10_000)
-                cols["weighted_sum"].append(ws / 10_000)
-            out = pdf[["doc_id"]].copy()
-            for k in ("sample_rate", "channels", "n_granules"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="float64")
-            yield out
-
-    return staged_sort(
-        docs.mapInPandas(
-            run,
-            "doc_id bigint, sample_rate int, channels int,"
-            " n_granules int, sample_sum double, weighted_sum double",
-        ),
-        "doc_id",
-    )
-
 
 
 __all__ = [n for n in dict(globals()) if not n.startswith("__")]

@@ -1,416 +1,11 @@
-"""Slice 7: round-12 additions — H.264 Annex-B probe, AAC ADTS probe,
-PDF text extraction. Star-imports the cumulative namespace chain so
-these rows compose with every earlier helper; ``plans/queries.py``
-re-exports the final namespace."""
+"""Slice 7: crawl admission rows — robots.txt URL filter, bitext
+mining margin and the crawl frontier. Star-imports the cumulative
+namespace chain so these rows compose with every earlier helper;
+``plans/queries.py`` re-exports the final namespace."""
 
 from __future__ import annotations
 
 from ._q06 import *  # noqa: F401,F403
-
-
-_H264_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d,
-    [66, 77, 100][doc_id % 3 + 1] AS profile_idc,
-    [10, 20, 30, 31, 40, 41, 50, 51][doc_id % 8 + 1] AS level_idc,
-    doc_id % 120 + 1 AS w_mbs,
-    doc_id % 68 + 1 AS h_map,
-    CASE WHEN doc_id % 5 = 0 THEN 0 ELSE 1 END AS fmo,
-    doc_id % 3 = 0 AS has_crop,
-    doc_id % 2 AS cl, (doc_id // 2) % 2 AS cr,
-    (doc_id // 3) % 3 AS ct, (doc_id // 5) % 2 AS cb,
-    CAST(doc_id % 7 + 1 AS INT) AS n_frames,
-    doc_id % 4 = 0 AS sei
-  FROM documents
-)
-SELECT doc_id,
-  CAST(profile_idc AS INT) AS profile_idc,
-  CAST(level_idc AS INT) AS level_idc,
-  CAST(w_mbs * 16 - CASE WHEN has_crop THEN 2 * (cl + cr) ELSE 0 END
-    AS INT) AS width,
-  CAST((2 - fmo) * h_map * 16
-       - CASE WHEN has_crop THEN 2 * (2 - fmo) * (ct + cb) ELSE 0 END
-    AS INT) AS height,
-  fmo = 1 AS frame_mbs_only,
-  d % 2 = 1 AS entropy_cabac,
-  CAST(d % 16 AS INT) AS max_ref_frames,
-  CAST(2 + CASE WHEN sei THEN 1 ELSE 0 END + n_frames AS INT) AS n_nals,
-  n_frames AS n_slices,
-  CAST(1 AS INT) AS n_idr,
-  'I' || repeat('P', n_frames - 1) AS slice_types
-FROM cfg ORDER BY doc_id
-"""
-
-
-@_register("multimodal_h264_probe", _H264_ORACLE)
-def multimodal_h264_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL H.264/AVC elementary-stream probe through the multimodal
-    seam: deterministic spec-conformant Annex-B streams (Baseline /
-    Main / High SPS incl. the chroma-format branch, frame cropping,
-    field coding, CAVLC and CABAC PPS, zero-heavy SEI forcing
-    emulation-prevention bytes on the wire, 3- and 4-byte start codes,
-    IDR + P slices) are parsed back by
-    :func:`operators.multimodal.probe_h264` — exp-Golomb decode,
-    §7.4.2.1.1 crop-unit display dimensions, per-slice type walk. The
-    oracle replays the parameter arithmetic; a wrong ue(v) decode, EPB
-    strip or crop-unit factor breaks dims or slice counts. Reference
-    parity: ohsome-planet ships no video codec; this row serves the
-    training-data lane's metadata pass."""
-    from ..operators.multimodal import probe_h264
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.h264 import encode_annexb_stream
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    encode_annexb_stream(
-                        profile_idc=(66, 77, 100)[d % 3],
-                        level_idc=(10, 20, 30, 31, 40, 41, 50, 51)[d % 8],
-                        pic_width_in_mbs=d % 120 + 1,
-                        pic_height_in_map_units=d % 68 + 1,
-                        frame_mbs_only=0 if d % 5 == 0 else 1,
-                        crop=(
-                            (d % 2, (d // 2) % 2, (d // 3) % 3, (d // 5) % 2)
-                            if d % 3 == 0
-                            else None
-                        ),
-                        n_frames=d % 7 + 1,
-                        entropy_cabac=d % 2,
-                        pic_order_cnt_type=0 if d % 2 == 0 else 2,
-                        max_num_ref_frames=d % 16,
-                        with_sei=d % 4 == 0,
-                        long_start_codes=d % 2 == 1,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_h264(media)
-        .select(
-            "doc_id",
-            "profile_idc",
-            "level_idc",
-            "width",
-            "height",
-            "frame_mbs_only",
-            "entropy_cabac",
-            "max_ref_frames",
-            "n_nals",
-            "n_slices",
-            "n_idr",
-            "slice_types",
-        ),
-        "doc_id",
-    )
-
-
-_ADTS_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d,
-    CAST(doc_id % 4 AS INT) AS profile,
-    ['Main', 'LC', 'SSR', 'LTP'][doc_id % 4 + 1] AS profile_name,
-    [96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
-     16000, 12000, 11025, 8000, 7350][doc_id % 13 + 1] AS rate,
-    [1, 2, 3, 4, 5, 6, 8][doc_id % 7 + 1] AS channels,
-    CAST(doc_id % 6 + 1 AS INT) AS nf,
-    (doc_id // 2) % 4 + 1 AS blocks,
-    doc_id % 3 = 0 AS crc
-  FROM documents
-), sized AS (
-  SELECT *,
-    list_sum(list_transform(range(0, nf), i ->
-      (d * 13 + i * 29) % 300 + 20 + CASE WHEN crc THEN 9 ELSE 7 END))
-      AS total_bytes,
-    nf * blocks * 1024 AS n_samples
-  FROM cfg
-)
-SELECT doc_id, profile, profile_name,
-  CAST(rate AS INT) AS sample_rate,
-  CAST(channels AS INT) AS channels,
-  nf AS n_frames,
-  CAST(n_samples AS INT) AS n_samples,
-  CAST(nf * (blocks * 1024 * 1000000 // rate) AS BIGINT) AS duration_us,
-  CAST(total_bytes * 8 * rate // n_samples // 1000 AS INT) AS bitrate_kbps,
-  CAST(CASE WHEN crc THEN nf ELSE 0 END AS INT) AS crc_frames
-FROM sized ORDER BY doc_id
-"""
-
-
-@_register("multimodal_adts_probe", _ADTS_ORACLE)
-def multimodal_adts_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL AAC ADTS transport probe through the multimodal seam:
-    conformant fixture streams sweeping all four profiles, all 13
-    sampling-frequency indices, channel configs 1-7 (incl. the 7→8
-    channel mapping), CRC and CRC-less headers, 1-4 raw data blocks per
-    frame and varying frame lengths are walked back by
-    :func:`operators.multimodal.probe_adts_stream`. The oracle replays
-    the header/duration/bitrate arithmetic; a wrong bit offset in the
-    13-bit frame_length straddle or a missed CRC skip breaks byte
-    positions for every following frame. Reference parity:
-    ohsome-planet ships no audio codec; this row serves the
-    training-data lane's metadata pass (the AAC filterbank stays behind
-    the documented external-codec stub)."""
-    from ..operators.multimodal import probe_adts_stream
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.aac import encode_adts
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = d % 6 + 1
-                payloads.append(
-                    encode_adts(
-                        profile=d % 4,
-                        sf_index=d % 13,
-                        channel_config=d % 7 + 1,
-                        payload_sizes=tuple(
-                            (d * 13 + i * 29) % 300 + 20 for i in range(nf)
-                        ),
-                        mpeg2=d % 2,
-                        with_crc=d % 3 == 0,
-                        raw_blocks=(d // 2) % 4 + 1,
-                        seed=d,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_adts_stream(media)
-        .select(
-            "doc_id",
-            "profile",
-            "profile_name",
-            "sample_rate",
-            "channels",
-            "n_frames",
-            "n_samples",
-            "duration_us",
-            "bitrate_kbps",
-            "crc_frames",
-        ),
-        "doc_id",
-    )
-
-
-_PDF_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, text,
-    string_split(text, ' ') AS words,
-    doc_id % 5 + 3 AS wpl,
-    doc_id % 3 + 2 AS lpp
-  FROM documents
-), sized AS (
-  SELECT *, len(words) AS nw,
-    CAST(ceil(len(words) / CAST(wpl AS DOUBLE)) AS BIGINT) AS n_lines
-  FROM cfg
-)
-SELECT doc_id,
-  array_to_string(
-    list_transform(range(1, nw + 1), i ->
-      words[i] || CASE WHEN i = nw THEN ''
-                       WHEN i % wpl = 0 THEN chr(10)
-                       ELSE ' ' END), '') AS extracted_text,
-  CAST(ceil(n_lines / CAST(lpp AS DOUBLE)) AS INT) AS n_pages,
-  CAST(length(text) AS INT) AS n_chars_out
-FROM sized ORDER BY doc_id
-"""
-
-
-@_register("pdf_text_extract", _PDF_ORACLE)
-def pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PDF text extraction through the crawl-ingestion seam: every
-    document's text is typeset into a spec-conformant PDF (deterministic
-    words-per-line/lines-per-page split; Flate compression, indirect
-    /Length, two-stream /Contents arrays and nested /Pages trees rotate
-    by doc so the xref walk, stream decode and tree order are all load-
-    bearing; line show forms rotate Tj / kerning-TJ / hex string / the
-    ' operator) and extracted back by
-    :func:`operators.web.pdf_text_extract`. The oracle rebuilds the
-    exact extracted text — newline positions included — from the split
-    arithmetic, so a wrong escape decode, a dropped kerning element, a
-    misordered page or an off-by-one in the line machine breaks the
-    hash. Every newline in the output replaces exactly one source
-    space, so n_chars_out must equal the original length(text)."""
-    from ..operators.web import pdf_text_extract as _extract
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.pdf import encode_pdf
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                words = str(text).split(" ")
-                wpl, lpp = d % 5 + 3, d % 3 + 2
-                lines = [
-                    " ".join(words[j : j + wpl])
-                    for j in range(0, len(words), wpl)
-                ]
-                pages = [lines[k : k + lpp] for k in range(0, len(lines), lpp)]
-                payloads.append(
-                    encode_pdf(
-                        pages,
-                        compress=d % 2 == 0,
-                        indirect_length=d % 3 == 0,
-                        split_contents=d % 4 == 0,
-                        nested_tree=d % 5 == 0,
-                    )
-                )
-            out = pdf[["doc_id"]].copy()
-            out["pdf"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, pdf binary")
-    return staged_sort(
-        _extract(media)
-        .select("doc_id", "extracted_text", "n_pages", "n_chars_out"),
-        "doc_id",
-    )
-
-
-_CC_PDF_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, text, lang,
-    string_split(text, ' ') AS words,
-    doc_id % 5 + 3 AS wpl
-  FROM documents
-), sized AS (
-  SELECT *, len(words) AS nw,
-    CAST(ceil(len(words) / CAST(wpl AS DOUBLE)) AS BIGINT) AS n_lines
-  FROM cfg
-)
-SELECT doc_id,
-  array_to_string(
-    list_transform(range(1, nw + 1), i ->
-      words[i] || CASE WHEN i = nw THEN ''
-                       WHEN i % wpl = 0 THEN chr(10)
-                       ELSE ' ' END), '') AS pdf_text,
-  CAST(ceil(n_lines / CAST(doc_id % 3 + 2 AS DOUBLE)) AS INT) AS pdf_pages,
-  CAST(len(list_filter(regexp_split_to_array(lower(text || ' ' || lang),
-       '\\W+'), x -> x <> '')) AS BIGINT) AS html_tokens
-FROM sized ORDER BY doc_id
-"""
-
-
-@_register("cc_pdf_ingest", _CC_PDF_ORACLE)
-def cc_pdf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The crawl-ingestion chain with MIXED media routed by URI: each
-    fixture WARC carries a warcinfo record, an HTML response AND a PDF
-    response whose HTTP envelopes rotate Content-Length / chunked /
-    gzip framing (and the PDFs rotate Flate compression), exactly the
-    mess a real CC segment hands the reader. One record walk feeds two
-    extraction branches — HTML main text and PDF page text — re-joined
-    per document. The PDF branch's oracle rebuilds the typeset text
-    newline-for-newline; the HTML branch re-counts tokens from the
-    template arithmetic. A mis-routed record, a leaked chunk-size line
-    or an un-stripped envelope breaks one side's hash."""
-    from ..operators.web import extract_main_text, pdf_text_extract, warc_records
-    from ..functions.text import tokens_expr
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "text", "lang"
-    )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.pdf import encode_pdf
-        from ..sources.warc import encode_warc, http_response_wrap
-
-        for pdf in batches:
-            payloads = []
-            for _, r in pdf.iterrows():
-                d = int(r["doc_id"])
-                words = str(r["text"]).split(" ")
-                wpl, lpp = d % 5 + 3, d % 3 + 2
-                lines = [
-                    " ".join(words[j : j + wpl])
-                    for j in range(0, len(words), wpl)
-                ]
-                pages = [lines[k : k + lpp] for k in range(0, len(lines), lpp)]
-                pdf_bytes = encode_pdf(pages, compress=d % 2 == 0)
-                html = (
-                    f"<html><body><p>{r['text']}</p>"
-                    f"<ul><li>{r['lang']}</li></ul></body></html>"
-                )
-                env = d % 3
-                recs = [
-                    {"warc_type": "warcinfo", "payload": b"robots: classic"},
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"http://example.test/{d}.html",
-                        "content_type": "application/http;msgtype=response",
-                        "payload": http_response_wrap(
-                            html.encode(),
-                            chunked=env == 0,
-                            chunk_size=48,
-                            content_encoding="gzip" if env == 1 else None,
-                        ),
-                    },
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"http://example.test/{d}.pdf",
-                        "content_type": "application/http;msgtype=response",
-                        "payload": http_response_wrap(
-                            pdf_bytes,
-                            content_type="application/pdf",
-                            chunked=env == 2,
-                            chunk_size=96,
-                            content_encoding="deflate" if env == 0 else None,
-                        ),
-                    },
-                ]
-                payloads.append(encode_warc(recs, gzip_records=d % 2 == 1))
-            out = pdf[["doc_id"]].copy()
-            out["warc"] = payloads
-            yield out
-
-    archives = docs.mapInPandas(encode, "doc_id bigint, warc binary")
-    responses = warc_records(archives, "warc").filter(
-        F.col("warc_type") == "response"
-    )
-    pdf_side = (
-        pdf_text_extract(
-            responses.filter(F.col("target_uri").endswith(".pdf")),
-            "payload",
-            out_col="pdf_text",
-            http=True,
-        )
-        .select("doc_id", "pdf_text", F.col("n_pages").alias("pdf_pages"))
-    )
-    html_side = (
-        extract_main_text(
-            responses.filter(F.col("target_uri").endswith(".html")),
-            "payload",
-            http=True,
-        )
-        .select(
-            "doc_id",
-            F.size(tokens_expr(F.col("extracted_text")))
-            .cast("bigint")
-            .alias("html_tokens"),
-        )
-    )
-    return staged_sort(
-        pdf_side.join(html_side, "doc_id")
-        .select("doc_id", "pdf_text", "pdf_pages", "html_tokens"),
-        "doc_id",
-    )
 
 
 def _fixture_robots_bodies(
@@ -517,1166 +112,6 @@ def robots_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         robots_filter(urls, rules)
         .select("doc_id", "host", "path", "allowed", "matched_pattern")
         .orderBy("doc_id")
-    )
-
-
-_OGG_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d,
-    doc_id % 2 = 0 AS is_opus,
-    CAST(doc_id % 9 + 1 AS INT) AS na,
-    doc_id % 3 + 1 AS ppp,
-    doc_id % 4 = 0 AND doc_id % 9 + 1 > doc_id % 3 + 1 AS span
-  FROM documents
-), t AS (
-  SELECT *,
-    CASE WHEN is_opus THEN 'opus' ELSE 'vorbis' END AS codec,
-    CASE WHEN is_opus THEN (d // 2) % 2 + 1
-         ELSE (d // 2) % 4 + 1 END AS channels,
-    CASE WHEN is_opus
-      THEN [48000, 24000, 16000, 12000, 8000][d % 5 + 1]
-      ELSE [44100, 22050, 32000, 16000, 11025][d % 5 + 1] END AS rate,
-    CASE WHEN is_opus THEN d % 800 ELSE 0 END AS pre_skip
-  FROM cfg
-)
-SELECT doc_id, codec,
-  CAST(channels AS INT) AS channels,
-  CAST(rate AS INT) AS sample_rate,
-  CAST(pre_skip AS INT) AS pre_skip,
-  CAST(2 + CASE WHEN span
-        THEN 2 + ceil(greatest(0, na - ppp - 1) / CAST(ppp AS DOUBLE))
-        ELSE ceil(na / CAST(ppp AS DOUBLE)) END AS INT) AS n_pages,
-  CAST(CASE WHEN is_opus THEN 2 ELSE 3 END + na
-       + CASE WHEN span THEN 1 ELSE 0 END AS INT) AS n_packets,
-  CAST(CASE WHEN is_opus THEN na * 960 * CAST(1000000 AS BIGINT) // 48000
-            ELSE na * 128 * CAST(1000000 AS BIGINT) // rate END AS BIGINT)
-    AS duration_us,
-  CAST(d % 100000 + 1 AS BIGINT) AS serial
-FROM t ORDER BY doc_id
-"""
-
-
-@_register("multimodal_ogg_probe", _OGG_ORACLE)
-def multimodal_ogg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Ogg/Opus/Vorbis probe through the multimodal seam:
-    conformant fixture streams (correct page CRCs under the unreflected
-    Ogg polynomial, rotating packets-per-page lacing, 255-run packets
-    SPANNING page boundaries with the continued flag on every fourth
-    doc, OpusHead pre-skip grid, Vorbis triple-header pages) are walked
-    back by :func:`operators.multimodal.probe_ogg_stream`. The oracle
-    replays page/packet counts and the granule-position duration
-    arithmetic (48 kHz-fixed minus pre-skip for Opus, rate-relative for
-    Vorbis); a lacing off-by-one, a CRC table slip or a wrong
-    continuation merge shifts a count on a concrete row."""
-    from ..operators.multimodal import probe_ogg_stream
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.ogg import encode_ogg_opus, encode_ogg_vorbis
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                na, ppp = d % 9 + 1, d % 3 + 1
-                span = d % 4 == 0 and na > ppp
-                if d % 2 == 0:
-                    payloads.append(
-                        encode_ogg_opus(
-                            channels=(d // 2) % 2 + 1,
-                            input_rate=(48000, 24000, 16000, 12000, 8000)[d % 5],
-                            pre_skip=d % 800,
-                            n_audio=na,
-                            serial=d % 100000 + 1,
-                            seed=d,
-                            packets_per_page=ppp,
-                            span_page=span,
-                        )
-                    )
-                else:
-                    payloads.append(
-                        encode_ogg_vorbis(
-                            channels=(d // 2) % 4 + 1,
-                            rate=(44100, 22050, 32000, 16000, 11025)[d % 5],
-                            n_audio=na,
-                            serial=d % 100000 + 1,
-                            seed=d,
-                            packets_per_page=ppp,
-                            span_page=span,
-                        )
-                    )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_ogg_stream(media)
-        .select(
-            "doc_id",
-            "codec",
-            "channels",
-            "sample_rate",
-            "pre_skip",
-            "n_pages",
-            "n_packets",
-            "duration_us",
-            "serial",
-        ),
-        "doc_id",
-    )
-
-
-def _l3_short_is_layout(sr: int) -> tuple[list[int], list[int]]:
-    """Huffman-order position → (sfb, window) for pure-short granules:
-    per band, the band's lines for window 0, then 1, then 2."""
-    from ..functions.mp3_l3 import SFB_SHORT
-
-    bands = SFB_SHORT[sr]
-    hsfb, hwin = [], []
-    for sfb in range(13):
-        width = bands[sfb + 1] - bands[sfb]
-        for w in range(3):
-            hsfb += [sfb] * width
-            hwin += [w] * width
-    return hsfb, hwin
-
-
-def _l3_short_is_granule(d: int, f: int, gr: int, c: int, sr: int) -> dict:
-    """Short-block intensity grid: BOTH channels pure short (bt=2),
-    sc=13 (3,3 slens — every is_pos 0..7 fits). The RIGHT channel's
-    huffman lines are zero at/above a PER-WINDOW band bound
-    ``b_w = 5 + (d + w) % 4`` so the decoder's per-window zero scan
-    lands on three different boundaries in one granule; its scalefactor
-    slots double as is_pos above each bound."""
-    from ..functions.mp3_l3 import SFB_SHORT
-
-    bands = SFB_SHORT[sr]
-    tsel = list(_L3_TSETS[(d + gr + 3 * c) % 6][:2]) + [0]
-    if c == 0:
-        npairs = 12 + ((d + gr) * 7) % 40
-        lines = []
-        for h in range(2 * npairs):
-            vmax = _L3_VMAX[tsel[0 if h < 36 else 1]]
-            m = (d + 11 * h + 3 * gr + f) % (vmax + 1)
-            lines.append(-m if (d + h + gr) % 2 == 1 else m)
-    else:
-        hsfb, hwin = _l3_short_is_layout(sr)
-        n_lines = 3 * bands[8]
-        lines = []
-        for h in range(n_lines):
-            b_w = 5 + (d + hwin[h]) % 4
-            if hsfb[h] >= b_w:
-                lines.append(0)
-                continue
-            vmax = _L3_VMAX[tsel[0 if h < 36 else 1]]
-            m = (d + 7 * h + 3 * gr + f) % vmax + 1
-            lines.append(-m if (d + h + gr + 1) % 2 == 1 else m)
-    return {
-        "block_type": 2,
-        "global_gain": 200 + (d + 3 * f + 5 * gr + 7 * c) % 16,
-        "scalefac_compress": 13,
-        "preflag": 0,
-        "scalefac_scale": (d + c) % 2,
-        "subblock_gain": [(d + gr + w + c) % 3 for w in range(3)],
-        "table_select": tsel,
-        "count1table_select": (d + gr) % 2,
-        "lines": lines,
-        "quads": [],
-        "sf": [
-            [(d + 3 * sfb + w + gr + 2 * c) % 8 for w in range(3)]
-            for sfb in range(12)
-        ],
-    }
-
-
-def _mp3_short_is_oracle() -> str:
-    """Relational DuckDB replay of the SHORT-block intensity grid: both
-    channels' short requantization (reorder permutation, subblock
-    gains, the right channel's sf slots acting as REAL scalefactors
-    below each window's bound), the per-window intensity decision
-    (closed-form bounds replay the decoder's value scan because every
-    line below a bound is nonzero by construction), tan(is_pos·π/12)
-    splits with the is_pos-7 MS/LR fallback, then the shared
-    IMDCT/overlap/inversion tail (short blocks skip alias reduction)."""
-    import math as _math
-
-    from ..functions.mp3_l3 import (
-        SFB_SHORT,
-        imdct_matrix,
-        reorder_permutation,
-    )
-
-    def lit(xs):
-        return "[" + ",".join(
-            repr(x) if isinstance(x, float) else str(x) for x in xs
-        ) + "]"
-
-    def lit2(xss):
-        return "[" + ",".join(lit(xs) for xs in xss) + "]"
-
-    def sfb_of(bands, n):
-        out = []
-        for sfb in range(len(bands) - 1):
-            out += [sfb] * (bands[sfb + 1] - bands[sfb])
-        assert len(out) == n
-        return out
-
-    sfs_t = lit2([sfb_of(SFB_SHORT[sr], 192) for sr in range(3)])
-    perm = lit2([reorder_permutation(sr) for sr in range(3)])
-    m2 = lit2(imdct_matrix(2))
-    tset_v = lit2([[_L3_VMAX.get(t, 0) for t in ts[:2]] + [0]
-                   for ts in _L3_TSETS])
-    hsfb = lit2([_l3_short_is_layout(sr)[0] for sr in range(3)])
-    hwin = lit2([_l3_short_is_layout(sr)[1] for sr in range(3)])
-    nlin = lit([3 * SFB_SHORT[sr][8] for sr in range(3)])
-    tan = [_math.tan(p * _math.pi / 12) for p in range(6)]
-    kl = lit([t / (1 + t) for t in tan] + [1.0])
-    kr = lit([1 / (1 + t) for t in tan] + [0.0])
-
-    return f"""
-    WITH params AS (
-      SELECT doc_id AS d,
-             CAST(doc_id % 3 AS INT) AS sr,
-             CAST(1 + (doc_id // 2) % 2 AS INT) AS nf,
-             (doc_id % 2 = 0) AS ms
-      FROM documents WHERE doc_id < 120
-    ), base AS (
-      SELECT d, sr, nf, ms, g, g // 2 AS f, g % 2 AS gr, c,
-             200 + (d + 3 * (g // 2) + 5 * (g % 2) + 7 * c) % 16 AS gg,
-             (d + c) % 2 AS sfs_flag,
-             12 + ((d + g % 2) * 7) % 40 AS npairs,
-             CAST((d + g % 2 + 3 * c) % 6 AS INT) AS tset
-      FROM params,
-           UNNEST(range(0, 2 * nf)) AS tg(g),
-           UNNEST(range(0, 2)) AS tc(c)
-    ), lines AS (
-      SELECT b.*, i,
-             ({perm})[sr + 1][CAST(i AS INT) + 1] AS hidx
-      FROM base b, UNNEST(range(0, 576)) AS ti(i)
-    ), symv AS (
-      SELECT *,
-        CASE
-          WHEN c = 0 AND hidx < 2 * npairs THEN
-            (CASE WHEN (d + hidx + gr) % 2 = 1 THEN -1 ELSE 1 END)
-            * ((d + 11 * hidx + 3 * gr + f)
-               % (({tset_v})[tset + 1]
-                            [CASE WHEN hidx < 36 THEN 1 ELSE 2 END] + 1))
-          WHEN c = 1 AND hidx < ({nlin})[sr + 1]
-               AND ({hsfb})[sr + 1][CAST(hidx AS INT) + 1]
-                   < 5 + (d + ({hwin})[sr + 1][CAST(hidx AS INT) + 1]) % 4
-          THEN
-            (CASE WHEN (d + hidx + gr + 1) % 2 = 1 THEN -1 ELSE 1 END)
-            * ((d + 7 * hidx + 3 * gr + f)
-               % ({tset_v})[tset + 1]
-                           [CASE WHEN hidx < 36 THEN 1 ELSE 2 END] + 1)
-          ELSE 0 END AS isv
-      FROM lines
-    ), xr0 AS (
-      SELECT d, sr, nf, ms, g, gr, c, i,
-        CASE WHEN isv = 0 THEN 0.0 ELSE
-          (CASE WHEN isv < 0 THEN -1.0 ELSE 1.0 END)
-          * pow(abs(CAST(isv AS DOUBLE)), 4.0 / 3.0)
-          * pow(2.0,
-              0.25 * (gg - 210)
-              - 2.0 * ((d + gr + ((i % 18) // 6) + c) % 3)
-              - 0.5 * (1 + sfs_flag) * (
-                  CASE WHEN ({sfs_t})[sr + 1]
-                            [CAST((i // 18) * 6 + (i % 6) AS INT) + 1] < 12
-                  THEN (d + 3 * ({sfs_t})[sr + 1]
-                                 [CAST((i // 18) * 6 + (i % 6) AS INT) + 1]
-                        + ((i % 18) // 6) + gr + 2 * c) % 8
-                  ELSE 0 END))
-        END AS xr
-      FROM symv
-    ), st AS (
-      SELECT a.d, a.sr, a.nf, a.g, a.i,
-             ((a.i % 18) // 6) AS win,
-             ({sfs_t})[a.sr + 1]
-                      [CAST((a.i // 18) * 6 + (a.i % 6) AS INT) + 1] AS sfb,
-             a.gr, a.ms, a.xr AS lx, b.xr AS rx
-      FROM xr0 a JOIN xr0 b
-        ON a.d = b.d AND a.g = b.g AND a.i = b.i
-       AND a.c = 0 AND b.c = 1
-    ), dec AS (
-      SELECT *,
-        sfb < 5 + (d + win) % 4
-          OR (CASE WHEN sfb < 12
-                   THEN (d + 3 * sfb + win + gr + 2) % 8
-                   ELSE 7 END) = 7 AS takes_ms,
-        CASE WHEN sfb < 12
-             THEN (d + 3 * sfb + win + gr + 2) % 8
-             ELSE 7 END AS is_pos
-      FROM st
-    ), xr1 AS (
-      SELECT d, sr, nf, g, i, 0 AS c,
-        CASE WHEN takes_ms AND ms THEN (lx + rx) / sqrt(2.0)
-             WHEN takes_ms THEN lx
-             ELSE lx * ({kl})[is_pos + 1] END AS xr
-      FROM dec
-      UNION ALL
-      SELECT d, sr, nf, g, i, 1 AS c,
-        CASE WHEN takes_ms AND ms THEN (lx - rx) / sqrt(2.0)
-             WHEN takes_ms THEN rx
-             ELSE lx * ({kr})[is_pos + 1] END AS xr
-      FROM dec
-    ), mmt AS (
-      SELECT n, k, ({m2})[CAST(n AS INT) + 1][CAST(k AS INT) + 1] AS m
-      FROM UNNEST(range(0, 36)) AS tn(n), UNNEST(range(0, 18)) AS tk(k)
-    ), hyb AS (
-      SELECT a.d, a.sr, a.nf, a.g, a.c, a.i // 18 AS sb, t.n,
-             sum(t.m * a.xr) AS raw
-      FROM xr1 a JOIN mmt t ON t.k = a.i % 18
-      GROUP BY 1, 2, 3, 4, 5, 6, 7
-    ), ov AS (
-      SELECT h.d, h.sr, h.nf, h.g, h.c, h.sb, h.n,
-             h.raw + coalesce(p.raw, 0.0) AS s
-      FROM hyb h LEFT JOIN hyb p
-        ON p.d = h.d AND p.c = h.c AND p.sb = h.sb
-       AND p.n = h.n + 18 AND p.g = h.g - 1
-      WHERE h.n < 18
-    ), vals AS (
-      SELECT d, sr, nf, g, c, sb, n,
-             CASE WHEN sb % 2 = 1 AND n % 2 = 1 THEN -s ELSE s END AS v
-      FROM ov
-    )
-    SELECT d AS doc_id,
-           CAST(CASE max(sr) WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS INT) AS sample_rate,
-           CAST(2 AS INT) AS channels,
-           CAST(2 * max(nf) AS INT) AS n_granules,
-           -- per-value snap at 1e-4 then EXACT integer sums: the two
-           -- engines' IMDCT matmuls drift by <=1.2e-13 (measured, from
-           -- 18-term summation order), so a 6-dp rounded float sum was
-           -- a genuine flake (caught round 12); at the 1e-4 grid a
-           -- boundary flip needs a value within 1.2e-13 of a half-step
-           -- (~1e-3 expected flips per FULL gate run) while any real
-           -- decode bug moves values orders of magnitude more
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)) / 10000.0
-             AS sample_sum,
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)
-               * (((g * 2 + c) * 32 + sb) * 18 + n + 1)) / 10000.0
-             AS weighted_sum
-    FROM vals GROUP BY d ORDER BY d
-    """
-
-
-@_register("multimodal_mp3_short_intensity_decode", _mp3_short_is_oracle())
-def multimodal_mp3_short_intensity_decode(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Layer III SHORT-BLOCK intensity stereo decode — the last fenced
-    stereo mode (§2.4.3.4.9.3 for block_type 2): the right channel's
-    zero region is detected PER WINDOW (the fixture pins three
-    different band bounds inside one granule via b_w = 5 + (d+w)%4),
-    intensity positions live in the right channel's (sfb, window)
-    scalefactor slots, is_pos 7 falls back to MS/LR, and bands below
-    each window's bound process as MS when the MS flag is set (half the
-    docs). The oracle replays both short requantizations (reorder,
-    subblock gains), the per-window decision and the 12-point
-    IMDCT/overlap tail term-for-term."""
-    docs = (
-        fan_out(_t(spark, sf_dir, "documents"))
-        .select("doc_id")
-        .filter(F.col("doc_id") < 120)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        from ..functions.mp3_l3 import decode_mp3_subbands, encode_mp3_l3
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("sample_rate", "channels", "n_granules", "sample_sum",
-                     "weighted_sum")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sr = d % 3
-
-                def granule_fn(f, gr, c, d=d, sr=sr):
-                    return _l3_short_is_granule(d, f, gr, c, sr)
-
-                payload = encode_mp3_l3(
-                    granule_fn,
-                    sr_idx=sr,
-                    br_idx=14,
-                    channels=2,
-                    n_frames=1 + (d // 2) % 2,
-                    ms_stereo=d % 2 == 0,
-                    intensity=True,
-                )
-                rate, ch, ng, grans = decode_mp3_subbands(payload)
-                # per-value 1e-4 snap + exact integer sums mirrors the
-                # oracle: accumulation order is irrelevant on BOTH
-                # engines, and the snap grid sits ~9 orders above the
-                # measured cross-engine IMDCT drift (<=1.2e-13)
-                ss = ws = 0
-                for g, chans_out in enumerate(grans):
-                    for c, sbs in enumerate(chans_out):
-                        for sb, vals in enumerate(sbs):
-                            for n, v in enumerate(vals):
-                                nv = math.floor(v * 10_000 + 0.5)
-                                ss += nv
-                                ws += nv * (
-                                    ((g * ch + c) * 32 + sb) * 18 + n + 1
-                                )
-                cols["sample_rate"].append(rate)
-                cols["channels"].append(ch)
-                cols["n_granules"].append(ng)
-                cols["sample_sum"].append(ss / 10_000)
-                cols["weighted_sum"].append(ws / 10_000)
-            out = pdf[["doc_id"]].copy()
-            for k in ("sample_rate", "channels", "n_granules"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="float64")
-            yield out
-
-    return staged_sort(
-        docs.mapInPandas(
-            run,
-            "doc_id bigint, sample_rate int, channels int,"
-            " n_granules int, sample_sum double, weighted_sum double",
-        ),
-        "doc_id",
-    )
-
-
-_WDS_ORACLE = """
-SELECT doc_id,
-  CAST(i AS INT) AS sample_idx,
-  's/' || CAST(doc_id AS VARCHAR) || CASE WHEN i = 1 THEN 'x' ELSE '' END
-    AS key,
-  CAST(CASE WHEN i = 0 THEN 3 ELSE 1 END AS INT) AS n_parts,
-  CASE WHEN i = 0 THEN 'cls,json,txt' ELSE 'seg.txt' END AS exts_csv,
-  CASE WHEN i = 0 THEN text ELSE lang END AS part_text,
-  CASE WHEN i = 0 THEN CAST(doc_id % 10 AS VARCHAR) ELSE NULL END AS label
-FROM documents, UNNEST(range(0, 2)) AS t(i)
-ORDER BY doc_id, i
-"""
-
-
-@_register("webdataset_ingest", _WDS_ORACLE)
-def webdataset_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebDataset shard ingestion end-to-end: every document becomes a
-    ustar shard holding TWO samples — (key.txt, key.json, key.cls) and
-    a second key exercising the first-dot extension split
-    (``.seg.txt``) — with gzip envelopes, ustar prefix-field name
-    spelling and mtime grids rotating by doc. The shard walks back
-    through checksum-verified member parsing and the consecutive-key
-    sample grouping of :func:`operators.webdataset.wds_samples`; the
-    oracle replays keys, part counts, extension sets and the text/label
-    payload round trip. A checksum slip, a wrong 512-block pad or a
-    broken key split shifts a concrete row."""
-    from ..operators.webdataset import wds_samples
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "text", "lang"
-    )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources.tar import encode_tar
-
-        for pdf in batches:
-            payloads = []
-            for _, r in pdf.iterrows():
-                d = int(r["doc_id"])
-                k = f"s/{d}"
-                members = [
-                    (f"{k}.txt", str(r["text"]).encode()),
-                    (f"{k}.json",
-                     b'{"doc": %d, "lang": "%s"}'
-                     % (d, str(r["lang"]).encode())),
-                    (f"{k}.cls", str(d % 10).encode()),
-                    (f"{k}x.seg.txt", str(r["lang"]).encode()),
-                ]
-                payloads.append(
-                    encode_tar(
-                        members,
-                        gzip_envelope=d % 2 == 0,
-                        mtime=d,
-                        prefix_split=d % 3 == 0,
-                    )
-                )
-            out = pdf[["doc_id"]].copy()
-            out["shard"] = payloads
-            yield out
-
-    shards = docs.mapInPandas(encode, "doc_id bigint, shard binary")
-    samples = wds_samples(shards, "shard")
-    return staged_sort(
-        samples.select(
-        "doc_id",
-        "sample_idx",
-        "key",
-        "n_parts",
-        F.concat_ws(",", "exts").alias("exts_csv"),
-        F.coalesce(
-            F.col("parts").getItem("txt"), F.col("parts").getItem("seg.txt")
-        ).cast("string").alias("part_text"),
-        F.col("parts").getItem("cls").cast("string").alias("label"),
-    ),
-        "doc_id",
-        "sample_idx",
-    )
-
-
-_WEBM_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d,
-    CASE WHEN doc_id % 2 = 0 THEN 'webm' ELSE 'matroska' END AS doctype,
-    ['V_VP8', 'V_VP9', 'V_AV1'][doc_id % 3 + 1] AS video_codec,
-    CASE WHEN doc_id % 2 = 0 THEN 'A_OPUS' ELSE 'A_VORBIS' END
-      AS audio_codec,
-    [48000, 44100, 32000][doc_id % 3 + 1] AS rate,
-    [1000000, 500000, 250000][doc_id % 3 + 1] AS ts,
-    doc_id % 9000 + 1000 AS dur_units,
-    CAST(doc_id % 4 + 1 AS INT) AS n_clusters,
-    doc_id % 3 + 1 AS bpc
-  FROM documents
-)
-SELECT doc_id, doctype, video_codec,
-  CAST(d % 1904 + 16 AS INT) AS width,
-  CAST(d % 1064 + 16 AS INT) AS height,
-  audio_codec,
-  CAST(rate AS INT) AS sample_rate,
-  CAST(d % 8 + 1 AS INT) AS channels,
-  CAST(ts AS BIGINT) AS timescale_ns,
-  CAST(dur_units * ts // 1000000 AS BIGINT) AS duration_ms,
-  CAST(2 AS INT) AS n_tracks,
-  n_clusters,
-  CAST(n_clusters * bpc AS INT) AS n_blocks
-FROM cfg ORDER BY doc_id
-"""
-
-
-@_register("multimodal_webm_probe", _WEBM_ORACLE)
-def multimodal_webm_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL EBML/WebM/Matroska probe through the multimodal seam:
-    conformant trees sweeping both doctypes, three video codecs, the
-    float4/float8 Duration spellings, NON-minimal varint size widths
-    (legal per RFC 8794 §4.1, and the classic parser trap), Void
-    padding and rotating cluster/block grids are walked back by
-    :func:`operators.multimodal.probe_webm_stream`. The oracle replays
-    dimensions, codec ids, the TimestampScale duration arithmetic and
-    cluster/SimpleBlock counts; a varint width slip or a skipped-child
-    misparse shifts a concrete row. Completes the web-video container
-    family next to the ISO-BMFF and RIFF/AVI probes."""
-    from ..operators.multimodal import probe_webm_stream
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.ebml import encode_webm
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    encode_webm(
-                        doctype="webm" if d % 2 == 0 else "matroska",
-                        width=d % 1904 + 16,
-                        height=d % 1064 + 16,
-                        video_codec=("V_VP8", "V_VP9", "V_AV1")[d % 3],
-                        audio_codec="A_OPUS" if d % 2 == 0 else "A_VORBIS",
-                        sample_rate=(48000, 44100, 32000)[d % 3],
-                        channels=d % 8 + 1,
-                        timescale=(1_000_000, 500_000, 250_000)[d % 3],
-                        duration_units=float(d % 9000 + 1000),
-                        n_clusters=d % 4 + 1,
-                        blocks_per_cluster=d % 3 + 1,
-                        float8=d % 2 == 0,
-                        wide_sizes=d % 3 == 0,
-                        with_void=d % 5 == 0,
-                        seed=d,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_webm_stream(media)
-        .select(
-            "doc_id",
-            "doctype",
-            "video_codec",
-            "width",
-            "height",
-            "audio_codec",
-            "sample_rate",
-            "channels",
-            "timescale_ns",
-            "duration_ms",
-            "n_tracks",
-            "n_clusters",
-            "n_blocks",
-        ),
-        "doc_id",
-    )
-
-
-_SUBS_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d,
-    string_split(text, ' ') AS words,
-    CAST(doc_id % 4 + 1 AS INT) AS nc
-  FROM documents
-)
-SELECT doc_id,
-  CASE WHEN d % 2 = 0 THEN 'srt' ELSE 'vtt' END AS fmt,
-  CAST(i AS INT) AS cue_idx,
-  CAST(d % 100 * 100 + i * 2000 AS BIGINT) AS start_ms,
-  CAST(d % 100 * 100 + i * 2000 + 1500 + d % 500 AS BIGINT) AS end_ms,
-  array_to_string(words[
-    (CAST(i AS INT) * 3 % greatest(len(words), 1)) + 1 :
-    (CAST(i AS INT) * 3 % greatest(len(words), 1)) + 4], ' ')
-    AS cue_text
-FROM cfg, UNNEST(range(0, nc)) AS t(i)
-ORDER BY doc_id, i
-"""
-
-
-@_register("subtitle_extract", _SUBS_ORACLE)
-def subtitle_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Caption-track extraction end-to-end: each doc's words become
-    SubRip cues (even docs — CRLF line endings, numeric indices, bold
-    markup around the first word) or WebVTT cues (odd docs — signature
-    block, NOTE comment, cue identifiers, settings after the arrow,
-    inline karaoke timestamps and ``&amp;`` entities), exploded back to
-    one row per cue by :func:`operators.multimodal.subtitle_cues`. The
-    oracle replays timings and the markup-STRIPPED text; an unstripped
-    tag, an entity slip, or a comma/dot millisecond mixup breaks a
-    concrete row."""
-    from ..operators.multimodal import subtitle_cues
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fmt_ts(ms: int, sep: str) -> str:
-            h, rem = divmod(ms, 3_600_000)
-            m, rem = divmod(rem, 60_000)
-            s, frac = divmod(rem, 1000)
-            return f"{h:02d}:{m:02d}:{s:02d}{sep}{frac:03d}"
-
-        for pdf in batches:
-            payloads = []
-            for _, r in pdf.iterrows():
-                d = int(r["doc_id"])
-                words = str(r["text"]).split(" ")
-                nc = d % 4 + 1
-                cues = []
-                for i in range(nc):
-                    j = (i * 3) % max(len(words), 1)
-                    cue_words = words[j : j + 4]
-                    start = d % 100 * 100 + i * 2000
-                    end = start + 1500 + d % 500
-                    cues.append((start, end, cue_words))
-                if d % 2 == 0:
-                    blocks = []
-                    for i, (start, end, cue_words) in enumerate(cues):
-                        marked = list(cue_words)
-                        marked[0] = f"<b>{marked[0]}</b>"
-                        blocks.append(
-                            f"{i + 1}\r\n"
-                            f"{fmt_ts(start, ',')} --> {fmt_ts(end, ',')}\r\n"
-                            + " ".join(marked)
-                        )
-                    payloads.append(("\r\n\r\n".join(blocks) + "\r\n").encode())
-                else:
-                    parts = ["WEBVTT - fixture", "NOTE generated cue grid"]
-                    for i, (start, end, cue_words) in enumerate(cues):
-                        marked = " ".join(cue_words).replace(
-                            " ", f"<{fmt_ts(start, '.')}> ", 1
-                        ) if len(cue_words) > 1 else " ".join(cue_words)
-                        parts.append(
-                            f"cue-{d}-{i}\n"
-                            f"{fmt_ts(start, '.')} --> {fmt_ts(end, '.')}"
-                            " align:start\n"
-                            f"<c.speaker>{marked}</c>"
-                        )
-                    payloads.append("\n\n".join(parts).encode())
-            out = pdf[["doc_id"]].copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        subtitle_cues(media)
-        .select("doc_id", "fmt", "cue_idx", "start_ms", "end_ms", "cue_text"),
-        "doc_id",
-        "cue_idx",
-    )
-
-
-def _l3_mixed_granule(d: int, f: int, gr: int, c: int, sr: int) -> dict:
-    """Mixed-block grid: BOTH channels mixed (two long subbands under a
-    short granule), sc=13 (3,3 slens), preflag exercising pretab on the
-    long region, per-window subblock gains on the short one."""
-    npairs = 12 + ((d + gr) * 7) % 40
-    nquads = (d + 2 * gr + c) % 6
-    tsel = list(_L3_TSETS[(d + gr + 3 * c) % 6][:2]) + [0]
-    lines = []
-    for h in range(2 * npairs):
-        vmax = _L3_VMAX[tsel[0 if h < 36 else 1]]
-        m = (d + 11 * h + 3 * gr + 5 * c + f) % (vmax + 1)
-        lines.append(-m if (d + h + gr) % 2 == 1 else m)
-    return {
-        "block_type": 2,
-        "mixed_block_flag": 1,
-        "global_gain": 200 + (d + 3 * f + 5 * gr + 7 * c) % 16,
-        "scalefac_compress": 13,
-        "preflag": (d + gr) % 2,
-        "scalefac_scale": (d + c) % 2,
-        "subblock_gain": [(d + gr + w + c) % 3 for w in range(3)],
-        "table_select": tsel,
-        "count1table_select": (d + gr) % 2,
-        "lines": lines,
-        "quads": [
-            tuple(((d + 5 * i + j + gr) % 3) - 1 for j in range(4))
-            for i in range(nquads)
-        ],
-        "sf_long": [(d + 3 * sfb + gr + 2 * c) % 8 for sfb in range(8)],
-        "sf_short": [
-            [(d + 3 * sfb + w + gr + 2 * c) % 8 for w in range(3)]
-            for sfb in range(3, 12)
-        ],
-    }
-
-
-def _mp3_mixed_oracle() -> str:
-    """Relational DuckDB replay of the MIXED-block grid: the
-    identity-below-36 reorder permutation, split requantization (long
-    sfb 0..7 with preflag/pretab below line 36, short sfb 3..11 with
-    subblock gains above), MS stereo, the SINGLE-boundary alias
-    reduction (only the butterfly inside the two long subbands), and
-    the per-subband window choice (long IMDCT matrix for subbands 0-1,
-    short for the rest) — term-for-term what decode_mp3_subbands does
-    from the genuine bitstream."""
-    from ..functions.mp3_l3 import (
-        ALIAS_CA,
-        ALIAS_CS,
-        PRETAB,
-        SFB_LONG,
-        SFB_SHORT,
-        imdct_matrix,
-        mixed_reorder_permutation,
-    )
-
-    def lit(xs):
-        return "[" + ",".join(
-            repr(x) if isinstance(x, float) else str(x) for x in xs
-        ) + "]"
-
-    def lit2(xss):
-        return "[" + ",".join(lit(xs) for xs in xss) + "]"
-
-    def sfb_of(bands, n):
-        out = []
-        for sfb in range(len(bands) - 1):
-            out += [sfb] * (bands[sfb + 1] - bands[sfb])
-        assert len(out) == n
-        return out
-
-    sfl = lit2([sfb_of(SFB_LONG[sr], 576) for sr in range(3)])
-    sfs_t = lit2([sfb_of(SFB_SHORT[sr], 192) for sr in range(3)])
-    perm = lit2([mixed_reorder_permutation(sr) for sr in range(3)])
-    m0 = lit2(imdct_matrix(0))
-    m2 = lit2(imdct_matrix(2))
-    cs, ca = lit(ALIAS_CS), lit(ALIAS_CA)
-    pre = lit(PRETAB)
-    tset_v = lit2([[_L3_VMAX.get(t, 0) for t in ts[:2]] + [0]
-                   for ts in _L3_TSETS])
-    tan = None  # unused; mixed row carries no intensity
-    del tan
-
-    return f"""
-    WITH params AS (
-      SELECT doc_id AS d,
-             CAST(doc_id % 3 AS INT) AS sr,
-             CAST(1 + (doc_id // 2) % 2 AS INT) AS nf,
-             (doc_id % 2 = 0) AS ms
-      FROM documents WHERE doc_id < 120
-    ), base AS (
-      SELECT d, sr, nf, ms, g, g // 2 AS f, g % 2 AS gr, c,
-             200 + (d + 3 * (g // 2) + 5 * (g % 2) + 7 * c) % 16 AS gg,
-             (d + g % 2) % 2 AS preflag,
-             (d + c) % 2 AS sfs_flag,
-             12 + ((d + g % 2) * 7) % 40 AS npairs,
-             (d + 2 * (g % 2) + c) % 6 AS nquads,
-             CAST((d + g % 2 + 3 * c) % 6 AS INT) AS tset
-      FROM params,
-           UNNEST(range(0, 2 * nf)) AS tg(g),
-           UNNEST(range(0, 2)) AS tc(c)
-    ), lines AS (
-      SELECT b.*, i,
-             ({perm})[sr + 1][CAST(i AS INT) + 1] AS hidx
-      FROM base b, UNNEST(range(0, 576)) AS ti(i)
-    ), symv AS (
-      SELECT *,
-        CASE
-          WHEN hidx < 2 * npairs THEN
-            (CASE WHEN (d + hidx + gr) % 2 = 1 THEN -1 ELSE 1 END)
-            * ((d + 11 * hidx + 3 * gr + 5 * c + f)
-               % (({tset_v})[tset + 1]
-                            [CASE WHEN hidx < 36 THEN 1 ELSE 2 END] + 1))
-          WHEN hidx < 2 * npairs + 4 * nquads THEN
-            ((d + 5 * ((hidx - 2 * npairs) // 4)
-              + ((hidx - 2 * npairs) % 4) + gr) % 3) - 1
-          ELSE 0 END AS isv
-      FROM lines
-    ), xr0 AS (
-      SELECT d, sr, nf, ms, g, gr, c, i,
-        CASE WHEN isv = 0 THEN 0.0 ELSE
-          (CASE WHEN isv < 0 THEN -1.0 ELSE 1.0 END)
-          * pow(abs(CAST(isv AS DOUBLE)), 4.0 / 3.0)
-          * pow(2.0,
-              CASE WHEN i < 36 THEN
-                0.25 * (gg - 210)
-                - 0.5 * (1 + sfs_flag) * (
-                    (d + 3 * ({sfl})[sr + 1][CAST(i AS INT) + 1]
-                     + gr + 2 * c) % 8
-                    + preflag * ({pre})[({sfl})[sr + 1]
-                                        [CAST(i AS INT) + 1] + 1])
-              ELSE
-                0.25 * (gg - 210)
-                - 2.0 * ((d + gr + ((i % 18) // 6) + c) % 3)
-                - 0.5 * (1 + sfs_flag) * (
-                    CASE WHEN ({sfs_t})[sr + 1]
-                              [CAST((i // 18) * 6 + (i % 6) AS INT) + 1] < 12
-                    THEN (d + 3 * ({sfs_t})[sr + 1]
-                                   [CAST((i // 18) * 6 + (i % 6) AS INT) + 1]
-                          + ((i % 18) // 6) + gr + 2 * c) % 8
-                    ELSE 0 END)
-              END)
-        END AS xr
-      FROM symv
-    ), xr1 AS (
-      SELECT a.d, a.sr, a.nf, a.g, a.i, 0 AS c,
-             (a.xr + b.xr) / sqrt(2.0) AS xr
-      FROM xr0 a JOIN xr0 b
-        ON a.d = b.d AND a.g = b.g AND a.i = b.i
-       AND a.c = 0 AND b.c = 1 AND a.ms
-      UNION ALL
-      SELECT a.d, a.sr, a.nf, a.g, a.i, 1 AS c,
-             (a.xr - b.xr) / sqrt(2.0) AS xr
-      FROM xr0 a JOIN xr0 b
-        ON a.d = b.d AND a.g = b.g AND a.i = b.i
-       AND a.c = 0 AND b.c = 1 AND a.ms
-      UNION ALL
-      SELECT d, sr, nf, g, i, c, xr FROM xr0 WHERE NOT ms
-    ), aax AS (
-      SELECT x.d, x.sr, x.nf, x.g, x.c, x.i,
-        CASE
-          WHEN (x.i % 18) >= 10 AND (x.i // 18) = 0 THEN
-            x.xr * ({cs})[18 - CAST(x.i % 18 AS INT)]
-            - hi.xr * ({ca})[18 - CAST(x.i % 18 AS INT)]
-          WHEN (x.i % 18) <= 7 AND (x.i // 18) = 1 THEN
-            x.xr * ({cs})[CAST(x.i % 18 AS INT) + 1]
-            + lo.xr * ({ca})[CAST(x.i % 18 AS INT) + 1]
-          ELSE x.xr END AS aa
-      FROM xr1 x
-      LEFT JOIN xr1 hi
-        ON hi.d = x.d AND hi.g = x.g AND hi.c = x.c
-       AND hi.i = x.i + 2 * (17 - (x.i % 18)) + 1
-      LEFT JOIN xr1 lo
-        ON lo.d = x.d AND lo.g = x.g AND lo.c = x.c
-       AND lo.i = x.i - (2 * (x.i % 18) + 1)
-    ), mmt AS (
-      SELECT part, n, k,
-             CASE WHEN part = 0
-                  THEN ({m0})[CAST(n AS INT) + 1][CAST(k AS INT) + 1]
-                  ELSE ({m2})[CAST(n AS INT) + 1][CAST(k AS INT) + 1]
-             END AS m
-      FROM UNNEST(range(0, 2)) AS tp(part),
-           UNNEST(range(0, 36)) AS tn(n),
-           UNNEST(range(0, 18)) AS tk(k)
-    ), hyb AS (
-      SELECT a.d, a.sr, a.nf, a.g, a.c, a.i // 18 AS sb, t.n,
-             sum(t.m * a.aa) AS raw
-      FROM aax a JOIN mmt t
-        ON t.k = a.i % 18
-       AND t.part = CASE WHEN a.i // 18 < 2 THEN 0 ELSE 1 END
-      GROUP BY 1, 2, 3, 4, 5, 6, 7
-    ), ov AS (
-      SELECT h.d, h.sr, h.nf, h.g, h.c, h.sb, h.n,
-             h.raw + coalesce(p.raw, 0.0) AS s
-      FROM hyb h LEFT JOIN hyb p
-        ON p.d = h.d AND p.c = h.c AND p.sb = h.sb
-       AND p.n = h.n + 18 AND p.g = h.g - 1
-      WHERE h.n < 18
-    ), vals AS (
-      SELECT d, sr, nf, g, c, sb, n,
-             CASE WHEN sb % 2 = 1 AND n % 2 = 1 THEN -s ELSE s END AS v
-      FROM ov
-    )
-    SELECT d AS doc_id,
-           CAST(CASE max(sr) WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                ELSE 32000 END AS INT) AS sample_rate,
-           CAST(2 AS INT) AS channels,
-           CAST(2 * max(nf) AS INT) AS n_granules,
-           -- per-value snap at 1e-4 then EXACT integer sums: the two
-           -- engines' IMDCT matmuls drift by <=1.2e-13 (measured, from
-           -- 18-term summation order), so a 6-dp rounded float sum was
-           -- a genuine flake (caught round 12); at the 1e-4 grid a
-           -- boundary flip needs a value within 1.2e-13 of a half-step
-           -- (~1e-3 expected flips per FULL gate run) while any real
-           -- decode bug moves values orders of magnitude more
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)) / 10000.0
-             AS sample_sum,
-           sum(CAST(floor(v * 10000 + 0.5) AS BIGINT)
-               * (((g * 2 + c) * 32 + sb) * 18 + n + 1)) / 10000.0
-             AS weighted_sum
-    FROM vals GROUP BY d ORDER BY d
-    """
-
-
-@_register("multimodal_mp3_mixed_decode", _mp3_mixed_oracle())
-def multimodal_mp3_mixed_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layer III MIXED-block decode (§2.4.2.7) — two long subbands under
-    a short granule, the last fenced block structure: the 8-long +
-    short-sfb-3..11 scalefactor layout, preflag/pretab acting on the
-    long region while subblock gains act on the short one, the
-    identity-below-36 reorder, alias reduction restricted to the one
-    boundary inside the long region, and the per-subband window choice
-    (long IMDCT for subbands 0-1, 12-point short above). Both channels
-    mixed, MS on half the docs. The oracle replays the whole chain
-    term-for-term; pytest referees additionally pin mixed long-region
-    lines to a pure-long decode and mixed short-region lines to a
-    pure-short decode (linearity cross-checks independent of the
-    oracle)."""
-    docs = (
-        fan_out(_t(spark, sf_dir, "documents"))
-        .select("doc_id")
-        .filter(F.col("doc_id") < 120)
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        from ..functions.mp3_l3 import decode_mp3_subbands, encode_mp3_l3
-
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("sample_rate", "channels", "n_granules", "sample_sum",
-                     "weighted_sum")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                sr = d % 3
-
-                def granule_fn(f, gr, c, d=d, sr=sr):
-                    return _l3_mixed_granule(d, f, gr, c, sr)
-
-                payload = encode_mp3_l3(
-                    granule_fn,
-                    sr_idx=sr,
-                    br_idx=14,
-                    channels=2,
-                    n_frames=1 + (d // 2) % 2,
-                    ms_stereo=d % 2 == 0,
-                )
-                rate, ch, ng, grans = decode_mp3_subbands(payload)
-                # per-value 1e-4 snap + exact integer sums mirrors the
-                # oracle: accumulation order is irrelevant on BOTH
-                # engines, and the snap grid sits ~9 orders above the
-                # measured cross-engine IMDCT drift (<=1.2e-13)
-                ss = ws = 0
-                for g, chans_out in enumerate(grans):
-                    for c, sbs in enumerate(chans_out):
-                        for sb, vals in enumerate(sbs):
-                            for n, v in enumerate(vals):
-                                nv = math.floor(v * 10_000 + 0.5)
-                                ss += nv
-                                ws += nv * (
-                                    ((g * ch + c) * 32 + sb) * 18 + n + 1
-                                )
-                cols["sample_rate"].append(rate)
-                cols["channels"].append(ch)
-                cols["n_granules"].append(ng)
-                cols["sample_sum"].append(ss / 10_000)
-                cols["weighted_sum"].append(ws / 10_000)
-            out = pdf[["doc_id"]].copy()
-            for k in ("sample_rate", "channels", "n_granules"):
-                out[k] = pd.array(cols[k], dtype="Int32")
-            for k in ("sample_sum", "weighted_sum"):
-                out[k] = pd.array(cols[k], dtype="float64")
-            yield out
-
-    return staged_sort(
-        docs.mapInPandas(
-            run,
-            "doc_id bigint, sample_rate int, channels int,"
-            " n_granules int, sample_sum double, weighted_sum double",
-        ),
-        "doc_id",
-    )
-
-
-_ID3_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d,
-    string_split(text, ' ') AS w
-  FROM documents
-)
-SELECT doc_id,
-  CAST([2, 3, 4][d % 3 + 1] AS INT) AS version,
-  CAST(7 AS INT) AS n_frames,
-  array_to_string(w[1:3], ' ') AS title,
-  'artist ' || CAST(d % 50 AS VARCHAR) AS artist,
-  array_to_string(w[4:5], ' ') AS album,
-  CAST(1970 + d % 55 AS VARCHAR) AS year,
-  CAST(d % 20 + 1 AS VARCHAR) || '/' || CAST(d % 20 + 5 AS VARCHAR)
-    AS track,
-  ['rock', 'jazz', 'speech', 'ambient'][d % 4 + 1] AS genre,
-  'comment ' || w[1] AS comment
-FROM cfg ORDER BY doc_id
-"""
-
-
-@_register("id3_tags", _ID3_ORACLE)
-def id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ID3v2 tag extraction end-to-end: fixture tags sweep all three
-    majors (v2.2 3-byte frames, v2.3 plain sizes, v2.4 syncsafe sizes),
-    all four text encodings (Latin-1, UTF-16 BOM, UTF-16BE, UTF-8),
-    whole-tag unsynchronization on every sixth doc, padding and a COMM
-    comment with language + description — parsed back by
-    :func:`operators.multimodal.audio_tags` in front of real audio
-    bytes. The oracle replays every field; an encoding mixup, a
-    syncsafe/plain size confusion or an unapplied de-unsync shifts a
-    string on a concrete row."""
-    from ..operators.multimodal import audio_tags
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.id3 import encode_id3v2
-
-        for pdf in batches:
-            payloads = []
-            for _, r in pdf.iterrows():
-                d = int(r["doc_id"])
-                w = str(r["text"]).split(" ")
-                fields = {
-                    "title": " ".join(w[0:3]),
-                    "artist": f"artist {d % 50}",
-                    "album": " ".join(w[3:5]),
-                    "year": str(1970 + d % 55),
-                    "track": f"{d % 20 + 1}/{d % 20 + 5}",
-                    "genre": ("rock", "jazz", "speech", "ambient")[d % 4],
-                }
-                major = (2, 3, 4)[d % 3]
-                tag = encode_id3v2(
-                    fields,
-                    major=major,
-                    enc=d % 4,
-                    comment=f"comment {w[0]}",
-                    unsync=d % 6 == 0 and major < 4,
-                    padding=d % 40,
-                )
-                payloads.append(tag + b"\xff\xfb\x90\x00" + bytes(8))
-            out = pdf[["doc_id"]].copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        audio_tags(media)
-        .select(
-            "doc_id",
-            "version",
-            "n_frames",
-            "title",
-            "artist",
-            "album",
-            "year",
-            "track",
-            "genre",
-            "comment",
-        ),
-        "doc_id",
-    )
-
-
-_ZIP_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d, text, lang FROM documents
-)
-SELECT doc_id,
-  CAST(i AS INT) AS member_idx,
-  CASE i WHEN 0 THEN 'd/' || CAST(doc_id AS VARCHAR) || '.txt'
-         WHEN 1 THEN 'd/' || CAST(doc_id AS VARCHAR) || '.json'
-         ELSE 'd/' || CAST(doc_id AS VARCHAR) || '.cls' END AS name,
-  CAST(CASE i WHEN 0 THEN length(text)
-              WHEN 1 THEN length('{"lang": "' || lang || '"}')
-              ELSE length(CAST(d % 10 AS VARCHAR)) END AS BIGINT) AS size,
-  CAST(CASE WHEN d % 2 = 0 THEN 8 ELSE 0 END AS INT) AS method,
-  CASE i WHEN 0 THEN text
-         WHEN 1 THEN '{"lang": "' || lang || '"}'
-         ELSE CAST(d % 10 AS VARCHAR) END AS member_text
-FROM cfg, UNNEST(range(0, 3)) AS t(i)
-ORDER BY doc_id, i
-"""
-
-
-@_register("zip_ingest", _ZIP_ORACLE)
-def zip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ZIP archive ingestion end-to-end: each document becomes a
-    three-member archive rotating STORED vs DEFLATE, bit-3 data
-    descriptors and trailing archive comments (the EOCD backward-scan
-    trap), walked back through the central directory with CRC
-    verification by :func:`operators.webdataset.zip_members`. The
-    oracle replays names, sizes, methods and the payload round trip; a
-    wrong EOCD locate, a raw-window deflate slip or a skipped CRC
-    check shifts a concrete row."""
-    from ..operators.webdataset import zip_members
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "text", "lang"
-    )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources.zip import encode_zip
-
-        for pdf in batches:
-            payloads = []
-            for _, r in pdf.iterrows():
-                d = int(r["doc_id"])
-                members = [
-                    (f"d/{d}.txt", str(r["text"]).encode()),
-                    (f"d/{d}.json",
-                     b'{"lang": "%s"}' % str(r["lang"]).encode()),
-                    (f"d/{d}.cls", str(d % 10).encode()),
-                ]
-                payloads.append(
-                    encode_zip(
-                        members,
-                        deflate=d % 2 == 0,
-                        comment=b"c" * (d % 30),
-                        data_descriptors=d % 3 == 0,
-                        dos_time=d,
-                    )
-                )
-            out = pdf[["doc_id"]].copy()
-            out["archive"] = payloads
-            yield out
-
-    archives = docs.mapInPandas(encode, "doc_id bigint, archive binary")
-    return staged_sort(
-        zip_members(archives, "archive")
-        .select(
-            "doc_id",
-            "member_idx",
-            "name",
-            "size",
-            "method",
-            F.col("payload").cast("string").alias("member_text"),
-        ),
-        "doc_id",
-        "member_idx",
     )
 
 
@@ -1946,95 +381,6 @@ def crawl_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "changefreq",
         )
         .orderBy("doc_id")
-    )
-
-
-_TS_ORACLE = """
-WITH cfg AS (
-  SELECT doc_id, doc_id AS d,
-    CAST(doc_id % 6 + 1 AS INT) AS nv,
-    CAST(doc_id % 4 + 1 AS INT) AS na,
-    CAST(doc_id % 4 AS INT) AS nn
-  FROM documents
-)
-SELECT doc_id,
-  CAST(4 + nv + na + nn AS INT) AS n_packets,
-  nn AS n_null,
-  CAST(d % 100 + 1 AS INT) AS program_number,
-  CAST(256 AS INT) AS pmt_pid,
-  CAST(257 AS INT) AS pcr_pid,
-  CAST(257 AS INT) AS video_pid,
-  CAST(258 AS INT) AS audio_pid,
-  ['h264', 'hevc', 'mpeg2-video', 'mpeg1-video'][d % 4 + 1] AS video_codec,
-  ['aac-adts', 'mp3', 'mp2', 'ac3', 'aac-latm'][d % 5 + 1] AS audio_codec,
-  nv AS n_video_pes,
-  na AS n_audio_pes,
-  CAST(d % 5000 + 100 AS BIGINT) AS duration_ms,
-  CAST(0 AS INT) AS cc_errors
-FROM cfg ORDER BY doc_id
-"""
-
-
-@_register("multimodal_ts_probe", _TS_ORACLE)
-def multimodal_ts_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG transport-stream probe through the multimodal seam
-    (the HLS-segment shape): conformant single-program streams —
-    CRC-correct PAT/PMT sections behind stuffing adaptation fields,
-    PCR pairs bracketing a per-doc duration (33-bit 90 kHz base +
-    27 MHz extension), rotating video/audio stream types across the
-    registry, real 00 00 01 PES starts, null stuffing and per-PID
-    continuity counters — walked back by
-    :func:`operators.multimodal.probe_ts_stream`. The oracle replays
-    packet/PES/null counts, PID wiring, codec names and the PCR
-    duration; a wrong PCR bit split, a missed pointer field or an
-    unverified section CRC shifts a concrete row."""
-    from ..operators.multimodal import probe_ts_stream
-
-    docs = fan_out(_t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.mpegts import encode_ts
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payloads.append(
-                    encode_ts(
-                        program_number=d % 100 + 1,
-                        video_type=(0x1B, 0x24, 0x02, 0x01)[d % 4],
-                        audio_type=(0x0F, 0x03, 0x04, 0x81, 0x11)[d % 5],
-                        n_video_pes=d % 6 + 1,
-                        n_audio_pes=d % 4 + 1,
-                        duration_ms=d % 5000 + 100,
-                        n_null=d % 4,
-                        seed=d,
-                    )
-                )
-            out = pdf.copy()
-            out["media"] = payloads
-            yield out
-
-    media = docs.mapInPandas(encode, "doc_id bigint, media binary")
-    return staged_sort(
-        probe_ts_stream(media)
-        .select(
-            "doc_id",
-            "n_packets",
-            "n_null",
-            "program_number",
-            "pmt_pid",
-            "pcr_pid",
-            "video_pid",
-            "audio_pid",
-            "video_codec",
-            "audio_codec",
-            "n_video_pes",
-            "n_audio_pes",
-            "duration_ms",
-            "cc_errors",
-        ),
-        "doc_id",
     )
 
 

@@ -96,9 +96,8 @@ def staged_sort(df: DataFrame, *cols) -> DataFrame:
     Staging through :func:`..session.truncate_lineage` (localCheckpoint
     single-process, reliable ``checkpoint()`` on a cluster with a
     checkpoint dir) materializes the pipeline once; the sampling pass and
-    the shuffle both read the staged blocks. Measured on
-    ``multimodal_avi_frame_sample`` @ sf0.1: 7.0 → 3.9 s median
-    (guide §2.4 — remove shuffle-adjacent recomputation; the sort itself
+    the shuffle both read the staged blocks. Measured on a Python
+    frame-decode row @ sf0.1: 7.0 → 3.9 s median (guide §2.4 — remove shuffle-adjacent recomputation; the sort itself
     is part of the query's contract and stays).
 
     The staged blocks are registered with the session's cache registry,

@@ -14,6 +14,7 @@ multi-executor cluster at ~100 TB scale:
 from __future__ import annotations
 
 import os
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -49,6 +50,10 @@ _CHECKPOINTED_JRDDS: list = []
 # plan auditor drains this so "zero BatchEvalPython/Cartesian" covers the
 # whole DAG, not just the post-seam segment (round-9 verdict, wrong #1).
 _SEAM_FRAMES: list = []
+# truncate_lineage may run on driver threads (build_contributions,
+# truncate_lineage_many) while the auditor drains: the copy-and-clear must
+# not drop a seam appended between the two steps.
+_SEAM_LOCK = threading.Lock()
 
 
 def register_cached(df):
@@ -60,8 +65,9 @@ def register_cached(df):
 def drain_seam_frames() -> list:
     """Return and clear the pre-checkpoint frames registered by
     truncate_lineage since the last drain (plan-audit hook)."""
-    out = list(_SEAM_FRAMES)
-    _SEAM_FRAMES.clear()
+    with _SEAM_LOCK:
+        out = list(_SEAM_FRAMES)
+        _SEAM_FRAMES.clear()
     return out
 
 
@@ -83,7 +89,8 @@ def release_cached(blocking: bool = False) -> int:
             n += 1
         except Exception:
             pass
-    _SEAM_FRAMES.clear()
+    with _SEAM_LOCK:
+        _SEAM_FRAMES.clear()
     return n
 
 
@@ -102,7 +109,8 @@ def truncate_lineage(df, eager: bool = False):
     does for its history tables.)
     """
     sc = df.sparkSession.sparkContext
-    _SEAM_FRAMES.append(df)
+    with _SEAM_LOCK:
+        _SEAM_FRAMES.append(df)
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     out = df.localCheckpoint(eager=eager)
@@ -127,8 +135,9 @@ def truncate_lineage_many(dfs: list, eager: bool = False) -> list:
     driver JVM; sequential calls serialize that planning. Independent
     frames plan in parallel on JVM threads — measured ~3x on the
     equivalence gate's per-wave history truncation (round-10 verdict,
-    Next #3). The registry appends (seam frames, checkpointed RDDs) are
-    GIL-atomic list ops, safe from worker threads."""
+    Next #3). The registry appends are safe from worker threads: seam
+    frames go through ``_SEAM_LOCK``, checkpointed RDDs are GIL-atomic
+    list appends."""
     if len(dfs) <= 1:
         return [truncate_lineage(d, eager) for d in dfs]
     from concurrent.futures import ThreadPoolExecutor
@@ -182,6 +191,35 @@ def ship_package(spark: SparkSession) -> None:
     _PACKAGE_SHIPPED.add(key)
 
 
+def default_driver_memory(
+    cgroup_max: str = "/sys/fs/cgroup/memory.max",
+    meminfo: str = "/proc/meminfo",
+) -> str:
+    """Driver heap default: half the memory this process may use — the
+    cgroup v2 ``memory.max`` limit when one is set, else ``MemTotal`` —
+    capped at 16g. A fixed 16g heap lets the JVM grow past what a 15 GB
+    machine can hold, and the kernel kills it. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides this."""
+    limits = []
+    try:
+        with open(cgroup_max) as f:
+            value = f.read().strip()
+        if value.isdigit():  # "max" means no limit
+            limits.append(int(value))
+    except OSError:
+        pass
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)  # kB
+    except (OSError, ValueError, IndexError):
+        pass
+    if not limits:
+        return "16g"
+    return f"{max(min(min(limits) // 2, 16 << 30) >> 20, 512)}m"
+
+
 def get_spark(
     app_name: str = "ohsome_planet_spark",
     master: str | None = None,
@@ -218,7 +256,10 @@ def get_spark(
         # threshold generous so dimension tables (changesets slice,
         # countries, polygon-feature rules) always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Catalyst constraint propagation is quadratic in the constraint
         # set over deep union/self-join trees; on this engine's staged

@@ -13,9 +13,10 @@ Writes the contributions dataset the way the reference does
 - ``latest/`` vs ``history/`` layout split on whether the row is currently
   valid (valid_to at the open-ended sentinel).
 
-The ``geo`` footer metadata is attached in a pyarrow post-pass per file; on
-a real cluster the same rewrite runs as a distributed ``mapInPandas`` over
-file paths (it only rewrites footers + re-encodes row groups it read).
+The ``geo`` footer metadata is attached by a driver-side post-pass that
+visits each written file in turn: footer surgery through the parquet JVM
+classes, or a full pyarrow rewrite when row groups are re-chunked. Files
+on a non-local filesystem are copied down, rewritten and copied back.
 """
 
 from __future__ import annotations

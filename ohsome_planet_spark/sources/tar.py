@@ -12,12 +12,7 @@ with 512-block padding, the two-zero-block terminator, optional gzip
 envelope (the ``.tar.gz`` shard shape), and first-dot key/extension
 splitting (the WebDataset convention: ``a/b.seg.txt`` → key ``a/b``,
 ext ``seg.txt``). PAX extended headers and GNU long-name entries are
-the documented fence — raised, never misparsed.
-
-At 100 TB the unit of parallelism is the shard: each row carries one
-tar archive and every kernel is a single Arrow-batched pass; member
-bytes never shuffle (grouping into samples is per-shard, in-stream —
-exactly how WebDataset defines sample boundaries)."""
+the documented fence — raised, never misparsed."""
 
 from __future__ import annotations
 

@@ -20,7 +20,7 @@ content_length, payload).
 Scale shape: one WARC member is independently decodable, so a 100 TB
 crawl shards by (file, member) ranges; here the per-file walk runs
 inside ``mapInPandas`` over binary payload columns — bytes never leave
-the executors, mirroring the multimodal seam.
+the executors.
 """
 
 from __future__ import annotations

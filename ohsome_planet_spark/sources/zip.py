@@ -1,7 +1,6 @@
 """ZIP archive reading (PKWARE APPNOTE layout): the other container
 datasets actually ship in (image packs, Kaggle dumps, scanned-document
-bundles). Companion to ``sources/tar.py``; the WebDataset-style
-operators consume either.
+bundles). Companion to ``sources/tar.py``.
 
 What is REAL here: End-of-Central-Directory discovery by backward
 signature scan through the trailing comment (the spec's prescribed

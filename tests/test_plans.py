@@ -75,7 +75,7 @@ def test_registry_wide_plan_hygiene(spark):
     drain_seam_frames()  # discard seams left over from fixtures
 
     # Catalyst planning is JVM-side and py4j releases the GIL, so building
-    # the 209 plans on a thread pool overlaps the planning + seam
+    # the registry's plans on a thread pool overlaps the planning + seam
     # materialization that dominated this test's 143 s wall. The seam
     # registry is global: each worker drains it under a lock right after
     # building its frame, so every seam plan is audited exactly once —

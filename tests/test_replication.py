@@ -183,6 +183,33 @@ class TestStateAndDiff:
         assert out[0].valid_to == ts(50)
         assert out[1].contrib_type == "GEOMETRY"
 
+    def test_rebuild_without_relations_stages_no_way_bundle(self, spark, monkeypatch):
+        """Without a relation stream the way stream is the bundle's only
+        reader, so ``build_contributions(..., rels=None)`` builds it inline
+        instead of staging it through ``truncate_lineage``."""
+        from ohsome_planet_spark import session
+
+        calls = []
+        real = session.truncate_lineage
+        monkeypatch.setattr(
+            session, "truncate_lineage",
+            lambda df, *a, **kw: calls.append(df) or real(df, *a, **kw),
+        )
+        node_hist = spark.createDataFrame(
+            [_node(1, 1, 1, lon=0.0, lat=0.0, tags={}),
+             _node(2, 1, 1, lon=1.0, lat=0.0, tags={})], NODE_SCHEMA
+        )
+        ways = spark.createDataFrame(
+            [(10, 1, ts(2), 1, 1, "u", True, {"highway": "x"}, [1, 2])], WAY_SCHEMA
+        )
+        _, way_contribs = build_contributions(
+            node_hist.limit(0), ways, None, node_hist, ways
+        )
+        # the J3 merge may stage its own internals; the bundle (the frame
+        # carrying ``_bundle``) must not be staged
+        assert not [df for df in calls if "_bundle" in df.columns]
+        assert [r.osm_id for r in way_contribs.collect()] == [10]
+
 
 def test_state_txt_roundtrip():
     text = "#Mon Jan 01 00:00:00 UTC 2024\nsequenceNumber=6824839\ntimestamp=2024-01-01T00\\:00\\:00Z\n"

@@ -14,8 +14,8 @@ arithmetic, not data), and the full pipelines run at 1× and 10×. Two assertion
   more broadcasts from input statistics), i.e. the plan shape is
   scale-invariant and only task counts change.
 
-The measured points are recorded in SCALE_SMOKE.json at the repo root so
-the curve is tracked round-over-round.
+The measured points are written to SCALE_SMOKE.json in the run's pytest
+temp dir, never to the tracked SCALE_SMOKE.json at the repo root.
 """
 
 import json
@@ -132,9 +132,17 @@ def _assert_plan_scale_invariant(spark, build, args1, args10):
     assert n10 <= n1, f"new exchange appeared at scale ({n1} -> {n10})"
 
 
+_RECORD_PATH = None
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _record_path(tmp_path_factory):
+    global _RECORD_PATH
+    _RECORD_PATH = tmp_path_factory.getbasetemp() / "SCALE_SMOKE.json"
+
+
 def _record(entry: dict):
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "SCALE_SMOKE.json")
+    path = _RECORD_PATH
     data = {}
     if os.path.exists(path):
         try:
@@ -641,75 +649,13 @@ def test_contrib_multipolygons_pbf_seam_scales(spark, tmp_path):
     assert ratio < 30.0, f"10x input cost {ratio:.1f}x wall — super-linear blowup"
 
 
-def test_multimodal_h264_probe_scales(spark, scaled_dirs):
-    # pure narrow encode->parse mapInPandas chain; no shuffle until the
-    # final orderBy
-    _smoke_query(
-        spark, "multimodal_h264_probe", scaled_dirs, check_exchanges=True
-    )
-
-
-def test_multimodal_adts_probe_scales(spark, scaled_dirs):
-    _smoke_query(
-        spark, "multimodal_adts_probe", scaled_dirs, check_exchanges=True
-    )
-
-
-def test_pdf_text_extract_scales(spark, scaled_dirs):
-    # typeset -> xref walk -> Flate -> text machine, all inside one
-    # Arrow-batched map pass; bytes never shuffle
-    _smoke_query(spark, "pdf_text_extract", scaled_dirs, check_exchanges=True)
-
-
-def test_cc_pdf_ingest_scales(spark, scaled_dirs):
-    # WARC walk + dual-branch extraction re-joined on doc_id: the join
-    # is the only exchange and its shape must not change with scale
-    _smoke_query(spark, "cc_pdf_ingest", scaled_dirs, check_exchanges=True)
-
-
 def test_robots_url_filter_scales(spark, scaled_dirs):
     # broadcast rule dim + regexp pass + map-side-combinable max(struct);
     # the only wide exchange is the groupBy on the URL key
     _smoke_query(spark, "robots_url_filter", scaled_dirs, check_exchanges=True)
 
 
-def test_multimodal_ogg_probe_scales(spark, scaled_dirs):
-    _smoke_query(
-        spark, "multimodal_ogg_probe", scaled_dirs, check_exchanges=True
-    )
-
-
-def test_multimodal_webm_probe_scales(spark, scaled_dirs):
-    _smoke_query(
-        spark, "multimodal_webm_probe", scaled_dirs, check_exchanges=True
-    )
-
-
-def test_webdataset_ingest_scales(spark, scaled_dirs):
-    # shard walk + per-shard in-stream sample grouping: zero shuffles
-    # between shard bytes and samples
-    _smoke_query(spark, "webdataset_ingest", scaled_dirs, check_exchanges=True)
-
-
-def test_subtitle_extract_scales(spark, scaled_dirs):
-    _smoke_query(spark, "subtitle_extract", scaled_dirs, check_exchanges=True)
-
-
-def test_id3_tags_scales(spark, scaled_dirs):
-    _smoke_query(spark, "id3_tags", scaled_dirs, check_exchanges=True)
-
-
-def test_zip_ingest_scales(spark, scaled_dirs):
-    _smoke_query(spark, "zip_ingest", scaled_dirs, check_exchanges=True)
-
-
 def test_crawl_frontier_scales(spark, scaled_dirs):
     # sitemap explode + broadcast robots admission: the URL-key groupBy
     # and the entry join are the only exchanges
     _smoke_query(spark, "crawl_frontier", scaled_dirs, check_exchanges=True)
-
-
-def test_multimodal_ts_probe_scales(spark, scaled_dirs):
-    _smoke_query(
-        spark, "multimodal_ts_probe", scaled_dirs, check_exchanges=True
-    )

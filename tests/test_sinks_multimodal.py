@@ -1,19 +1,12 @@
-"""GeoParquet sink + multimodal plumbing tests."""
+"""GeoParquet sink tests."""
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import functions as F
 
 from ohsome_planet_spark.operators.contributions import (
     node_contribution_events,
     synthesize_contributions,
-)
-from ohsome_planet_spark.operators.multimodal import (
-    decode_stub,
-    frame_sample_plan,
-    resize_plan,
-    with_media_meta,
 )
 from ohsome_planet_spark.schemas import NODE_SCHEMA
 from ohsome_planet_spark.sources.geoparquet import (
@@ -77,38 +70,6 @@ def test_geoparquet_roundtrip(spark, tmp_path):
     assert len(seen_bboxes) > 1  # files genuinely differ in extent
     # reread through spark still fine after footer rewrite
     assert spark.read.parquet(out).filter("status = 'latest'").count() == 2
-
-
-def test_multimodal_pipeline(spark):
-    df = spark.createDataFrame(
-        [
-            (1, b"\x89PNG\r\n" + b"x" * 100),
-            (2, b"\xff\xd8\xff\xe0" + b"y" * 50),
-            (3, b"plain"),
-        ],
-        "media_id bigint, media binary",
-    )
-    meta = with_media_meta(df)
-    kinds = {r.media_id: r.kind for r in meta.collect()}
-    assert kinds == {1: "png", 2: "jpeg", 3: "unknown"}
-
-    decoded = decode_stub(meta)
-    rows = {r.media_id: r for r in decoded.collect()}
-    assert all(1 <= rows[i].fake_width <= 1920 for i in rows)
-    # determinism
-    again = {r.media_id: r for r in decode_stub(meta).collect()}
-    assert all(again[i].fake_width == rows[i].fake_width for i in rows)
-
-    resized = resize_plan(decoded, max_side=256)
-    for r in resized.collect():
-        assert max(r.target_width, r.target_height) <= 256
-        assert r.target_width >= 1 and r.target_height >= 1
-
-    frames = frame_sample_plan(df, every_n=10, max_frames=4)
-    per_media = (
-        frames.groupBy("media_id").agg(F.count("frame_idx").alias("n")).collect()
-    )
-    assert all(1 <= r.n <= 4 for r in per_media)
 
 
 def test_bbox_covering_prunes_row_groups(spark, tmp_path):

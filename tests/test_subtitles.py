@@ -79,16 +79,3 @@ def test_error_contract():
         parse_srt("1\n00:00:05,000 --> 00:00:01,000\nx\n")
     with pytest.raises(SubtitleFormatError, match="range"):
         parse_srt("1\n00:99:00,000 --> 01:00:00,000\nx\n")
-
-
-def test_operator_seam(spark):
-    from ohsome_planet_spark.operators.multimodal import subtitle_cues
-
-    rows = [(1, bytearray(SRT.encode())), (2, bytearray(VTT.encode())),
-            (3, bytearray(b"garbage with no timings"))]
-    df = spark.createDataFrame(rows, "doc_id bigint, media binary")
-    got = subtitle_cues(df).collect()
-    assert [(r["doc_id"], r["fmt"], r["cue_idx"]) for r in got] == [
-        (1, "srt", 0), (1, "srt", 1), (2, "vtt", 0), (2, "vtt", 1)]
-    assert got[2]["start_ms"] == 1000
-    assert got[3]["cue_text"] == "Karaoke timed words"

@@ -1,6 +1,6 @@
 """ustar/WebDataset shard ingestion: hand-built header referee
 (independent of the fixture encoder), checksum variants, grouping
-contract, error fences, and the operator seams."""
+contract and error fences."""
 
 from __future__ import annotations
 
@@ -108,93 +108,6 @@ def test_error_contract():
         parse_tar(buf.getvalue())
 
 
-def test_operators_seam(spark):
-    from ohsome_planet_spark.operators.webdataset import tar_members, wds_samples
-
-    t1 = encode_tar(
-        [("s/1.txt", b"one"), ("s/1.cls", b"7"), ("s/2.txt", b"two")],
-        gzip_envelope=True,
-    )
-    rows = [(1, bytearray(t1)), (2, bytearray(b"not a tar"))]
-    df = spark.createDataFrame(rows, "shard_id bigint, shard binary")
-
-    got_m = tar_members(df, "shard").collect()
-    assert [(r["shard_id"], r["name"]) for r in got_m] == [
-        (1, "s/1.txt"), (1, "s/1.cls"), (1, "s/2.txt")]
-
-    got_s = wds_samples(df, "shard").collect()
-    assert [(r["key"], r["n_parts"]) for r in got_s] == [
-        ("s/1", 2), ("s/2", 1)]
-    assert bytes(got_s[0]["parts"]["cls"]) == b"7"
-    assert got_s[0]["exts"] == ["cls", "txt"]
-
-
-def test_write_wds_shards_roundtrip(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from ohsome_planet_spark.operators.webdataset import (
-        wds_samples,
-        write_wds_shards,
-    )
-    from ohsome_planet_spark.sources.testdata import load_table
-
-    docs = (
-        load_table(spark, "/root/testdata/sf0.001", "documents")
-        .select(
-            F.concat(F.lit("doc"), F.col("doc_id").cast("string")).alias("key"),
-            "text",
-            F.col("lang").alias("meta"),
-        )
-        .limit(50)
-        .repartition(3)
-    )
-    out = str(tmp_path / "shards")
-    report = write_wds_shards(
-        docs, out, {"txt": "text", "json": "meta"},
-        samples_per_shard=7, gzip_envelope=True,
-    ).collect()
-    assert sum(r["n_samples"] for r in report) == 50
-    assert all(r["path"].endswith(".tar.gz") for r in report)
-
-    shards = (
-        spark.read.format("binaryFile")
-        .load(out + "/*.tar.gz")
-        .select(F.col("content").alias("shard"))
-    )
-    back = wds_samples(shards, "shard")
-    assert back.count() == 50
-    joined = (
-        back.select(
-            "key", F.col("parts").getItem("txt").cast("string").alias("t")
-        )
-        .join(docs.select("key", "text"), "key")
-    )
-    assert joined.filter(F.col("t") != F.col("text")).count() == 0
-
-
-def test_wds_cli_pack_and_list(tmp_path, capsys):
-    import json as _json
-
-    from ohsome_planet_spark.cli import main
-
-    out = str(tmp_path / "shards")
-    rc = main([
-        "wds", "pack",
-        "--input", "/root/testdata/sf0.001/documents.parquet",
-        "--out", out, "--samples-per-shard", "100",
-        "--partitions", "2",
-    ])
-    assert rc == 0
-    rep = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["samples"] == 500 and rep["shards"] >= 5
-
-    inv = str(tmp_path / "inventory")
-    rc = main(["wds", "list", "--input", out, "--out", inv])
-    assert rc == 0
-    rep = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["samples"] == 500 and rep["parts"] == 1000
-
-
 # --- ZIP (sources/zip.py) ----------------------------------------------------
 
 
@@ -245,18 +158,6 @@ def test_zip_error_contract():
         parse_zip(bytes(enc))
 
 
-def test_zip_members_operator(spark):
-    from ohsome_planet_spark.operators.webdataset import zip_members
-    from ohsome_planet_spark.sources.zip import encode_zip
-
-    z = encode_zip([("s/1.txt", b"one"), ("s/2.txt", b"two")], deflate=True)
-    rows = [(1, bytearray(z)), (2, bytearray(b"PK garbage"))]
-    df = spark.createDataFrame(rows, "aid bigint, archive binary")
-    got = zip_members(df, "archive").collect()
-    assert [(r["aid"], r["name"], bytes(r["payload"])) for r in got] == [
-        (1, "s/1.txt", b"one"), (1, "s/2.txt", b"two")]
-
-
 def test_tar_type7_and_unknown_typeflag_block_walk():
     """ADVICE r12: type '7' (contiguous) carries data and is read as a
     regular file; an unrecognized typeflag's data blocks are skipped per
@@ -282,29 +183,6 @@ def test_tar_type7_and_unknown_typeflag_block_walk():
         ("b.txt", "Z", b""),
         ("c.txt", "0", b"sea"),   # the walk stayed in sync
     ]
-
-
-def test_zip_struct_error_hits_zero_rows_contract(spark):
-    """ADVICE r12 (medium): a truncated EOCD raises struct.error (not a
-    ValueError subclass) from parse_zip; zip_members must drop the
-    archive, not kill the task."""
-    import struct as _struct
-
-    from ohsome_planet_spark.operators.webdataset import zip_members
-    from ohsome_planet_spark.sources.zip import encode_zip, parse_zip
-
-    # craft bytes whose EOCD signature sits too close to the end for the
-    # fixed 18-byte EOCD body -> struct.error inside parse_zip
-    bad = b"x" * 40 + b"PK\x05\x06\x00\x00"
-    with pytest.raises(_struct.error):
-        parse_zip(bad)
-    good = encode_zip([("k.txt", b"ok")])
-    df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(bad))],
-        "aid bigint, archive binary",
-    )
-    got = zip_members(df, "archive").collect()
-    assert [(r["aid"], r["name"]) for r in got] == [(1, "k.txt")]
 
 
 def test_zip64_per_entry_sentinels_fenced():

@@ -69,6 +69,10 @@ def main() -> None:
     ap.add_argument("--child", action="store_true")
     ap.add_argument("--value", help="(child) conf value for this session")
     args = ap.parse_args()
+    if args.child and args.value is None:
+        ap.error("--child requires --value")
+    if not args.child and (args.a is None or args.b is None):
+        ap.error("--a and --b are required (the two conf values to compare)")
 
     if args.child:
         child(args)
